@@ -62,59 +62,7 @@ def register(
 # oldest newest-evidence round (alphabetical within a round).
 # Regenerate with: python scripts/rotate_priority.py
 _PRIORITY: tuple[str, ...] = (
-    # --- pinned: rewritten since newest evidence (21 keys) ---
-    "agg_count_min_sketch",
-    "agg_median_mode",
-    "basket_part_pairs",
-    "corpus_mixture_weights",
-    "dedup_incremental",
-    "dedup_semantic_kmeans",
-    "er_resolve_parts",
-    "events_anomaly_mad",
-    "events_funnel",
-    "events_retention_cohorts",
-    "graph_bfs_distance",
-    "graph_sssp_weighted",
-    "merge_tx_cdf_to_scd2",
-    "ml_classifier_eval",
-    "sample_importance_weighted",
-    "similarity_topk_ivf",
-    "stat_ks_two_sample_exact",
-    "stat_spearman_rank_exact",
-    "timeseries_gapfill",
-    "tpch_q15",
-    "udf_pandas_grouped_agg",
-    # --- newest driver evidence r11 (3 keys) ---
-    "udtf_polymorphic_split",
-    "upsert_merge_tx",
-    "window_islands_runs",
-    # --- newest driver evidence r12 (44 keys) ---
-    "agg_kmv_sketch_rollup",
-    "agg_listagg_ordered",
-    "agg_transpose_matrix",
-    "bpe_train_merges",
-    "date_tz_convert",
-    "events_attribution_touch",
-    "events_feature_store_pit",
-    "events_regex_sequence_match",
-    "join_aqe_skew",
-    "join_strategy_hints",
-    "merge_tx_ivm_aggregate",
-    "merge_tx_time_travel",
-    "ml_als_recommend",
-    "ml_kmeans_one_step_exact",
-    "scan_file_metadata",
-    "scan_nested_schema_pruning",
-    "scan_observe_metrics",
-    "set_intersect_except_all",
-    "sql_ddl_default_columns",
-    "sql_execute_immediate",
-    "sql_group_by_all",
-    "sql_interval_arithmetic",
-    "sql_lateral_column_alias",
-    "sql_scripting_block",
-    "stat_chi_square_independence",
-    "stat_corr_covar_exact",
+    # --- newest driver evidence r12 (18 keys) ---
     "stat_kendall_tau_exact",
     "stat_mann_whitney_u_exact",
     "stream_late_data_drop_true",
@@ -373,6 +321,57 @@ _PRIORITY: tuple[str, ...] = (
     "tpch_q8",
     "tpch_q9",
     "window_ignore_nulls",
+    # --- newest driver evidence r18 (50 keys) ---
+    "agg_count_min_sketch",
+    "agg_kmv_sketch_rollup",
+    "agg_listagg_ordered",
+    "agg_median_mode",
+    "agg_transpose_matrix",
+    "basket_part_pairs",
+    "bpe_train_merges",
+    "corpus_mixture_weights",
+    "date_tz_convert",
+    "dedup_incremental",
+    "dedup_semantic_kmeans",
+    "er_resolve_parts",
+    "events_anomaly_mad",
+    "events_attribution_touch",
+    "events_feature_store_pit",
+    "events_funnel",
+    "events_regex_sequence_match",
+    "events_retention_cohorts",
+    "graph_bfs_distance",
+    "graph_sssp_weighted",
+    "join_aqe_skew",
+    "join_strategy_hints",
+    "merge_tx_cdf_to_scd2",
+    "merge_tx_ivm_aggregate",
+    "merge_tx_time_travel",
+    "ml_als_recommend",
+    "ml_classifier_eval",
+    "ml_kmeans_one_step_exact",
+    "sample_importance_weighted",
+    "scan_file_metadata",
+    "scan_nested_schema_pruning",
+    "scan_observe_metrics",
+    "set_intersect_except_all",
+    "similarity_topk_ivf",
+    "sql_ddl_default_columns",
+    "sql_execute_immediate",
+    "sql_group_by_all",
+    "sql_interval_arithmetic",
+    "sql_lateral_column_alias",
+    "sql_scripting_block",
+    "stat_chi_square_independence",
+    "stat_corr_covar_exact",
+    "stat_ks_two_sample_exact",
+    "stat_spearman_rank_exact",
+    "timeseries_gapfill",
+    "tpch_q15",
+    "udf_pandas_grouped_agg",
+    "udtf_polymorphic_split",
+    "upsert_merge_tx",
+    "window_islands_runs",
 )
 
 

@@ -12,11 +12,20 @@ normalize chain runs end-to-end in tests.
 
 Decoder scope (everything the baseline process requires):
 - markers: SOI/APPn/COM/DQT/SOF0/SOF1/DHT/DRI/SOS/RSTn/EOI
-- canonical Huffman decode per the spec's MINCODE/MAXCODE/VALPTR tables
-- restart-interval handling (byte-align + DC predictor reset)
+- entropy decoding in the libjpeg-turbo manner: the entropy-coded data
+  is un-stuffed (FF00 → FF) once and split at RSTn markers, one segment
+  per restart interval (DC predictors reset per segment); a 32-bit-plus
+  bit window is refilled 4 bytes at a time with ``int.from_bytes``
+- Huffman decoding through 16-bit lookahead tables (``_lookahead``), one
+  per distinct DHT table, built on first use and cached per process
+  (about 0.6 MB each): when code length + magnitude bits ≤ 16 a single
+  lookup yields the bits consumed, the zero run and the EXTENDed value,
+  so most coefficients cost one lookup; longer symbols take a slow path
+- coefficients gathered as (flat index, value) pairs and written into
+  one coefficient buffer with a single fancy-index assignment
 - vectorized dequantize + de-zigzag + 2-D IDCT (separable 8×8 DCT basis,
-  float64, one matmul pair per component — the per-block work never
-  touches the Python interpreter)
+  float64, ``_A.T @ blocks @ _A`` per component — the per-block work
+  never touches the Python interpreter)
 - chroma upsampling by sample replication; JFIF YCbCr→BGR (BGR channel
   order to match the ``cv2.imdecode(..., IMREAD_COLOR)`` contract the
   image lane's decoder slot expects)
@@ -25,21 +34,34 @@ Out of scope (raise ValueError): progressive (SOF2), arithmetic coding,
 hierarchical, 12-bit precision. Camera/webcam output — the reference's
 input domain — is overwhelmingly baseline.
 
+Damaged input raises ValueError, never pads silently: a scan whose
+decoding consumes a bit past the end of its entropy-coded data
+(truncated upload, missing restart interval), an invalid Huffman code,
+or an AC run past coefficient 63. Peeking past the end is fine — the
+last symbols of a valid scan do.
+
 Exactness: Huffman decoding, dequantization and the DC path are exact;
 the float IDCT + rounding may differ from libjpeg's fixed-point islow
 IDCT by ±1 LSB on some AC-heavy pixels (both are conforming decoders —
 T.81 Annex K gives an accuracy band, not one canonical output). Tests
 therefore assert analytic exactness on DC-only images, near-lossless
-round-trips through the encoder, and a committed fingerprint of this
-decoder's fixture output for cross-round determinism.
+round-trips through the encoder, and committed sha256 fingerprints of
+this decoder's output on seeded frames (4:4:4, 4:2:2, 4:2:0, grayscale,
+restart intervals) so any decoder drift is caught.
 
-The encoder exists for tests only: baseline, 4:4:4 (no subsampling),
+The encoder exists for tests only: baseline, 4:4:4 by default or 4:2:2 /
+4:2:0 chroma subsampling (box-averaged), optional restart intervals,
 Annex K quantization tables scaled by an IJG-style quality factor, Annex
 K "typical" Huffman tables. It lets the suite construct real JPEG bytes
 from known pixel arrays without any external codec.
 """
 
 from __future__ import annotations
+
+import functools
+import itertools
+import re
+from array import array
 
 import numpy as np
 
@@ -139,98 +161,146 @@ AC_CHROMA_VALS = [
 
 # ----------------------------------------------------------- huffman dec
 
-
-class _HuffTable:
-    """Canonical Huffman table in the spec's MINCODE/MAXCODE/VALPTR form
-    (T.81 F.2.2.3): per code length L, codes are consecutive integers in
-    [mincode[L], maxcode[L]] and index HUFFVAL via valptr[L]."""
-
-    __slots__ = ("mincode", "maxcode", "valptr", "vals")
-
-    def __init__(self, bits: list[int], vals: list[int]):
-        self.vals = vals
-        self.mincode = [0] * 17
-        self.maxcode = [-1] * 17
-        self.valptr = [0] * 17
-        code, k = 0, 0
-        for ll in range(1, 17):
-            if bits[ll - 1]:
-                self.valptr[ll] = k
-                self.mincode[ll] = code
-                code += bits[ll - 1]
-                k += bits[ll - 1]
-                self.maxcode[ll] = code - 1
-            code <<= 1
+_UNZIGZAG = np.argsort(ZIGZAG)  # natural index j ← zigzag position
+_M64 = (1 << 64) - 1
+# the next marker that ends the entropy-coded data (not FF00, not RSTn)
+_SCAN_END = re.compile(rb"\xff(?![\x00\xd0-\xd7])")
+_RST = re.compile(rb"\xff[\xd0-\xd7]")
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded bytes with 0xFF00
-    un-stuffing and restart-marker awareness."""
+@functools.lru_cache(maxsize=32)
+def _lookahead(bits: bytes, vals: bytes, ac: bool) -> tuple[tuple, ...]:
+    """16-bit lookahead table of one DHT table (T.81 C.2 canonical codes).
 
-    __slots__ = ("data", "pos", "buf", "nbits")
+    Entry ``lut[p]`` for the next 16 bits ``p`` of the stream:
 
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.nbits = 0
+    - DC: ``(n, diff)`` — consume ``n`` = code + magnitude bits, the DC
+      difference already EXTENDed;
+    - AC: ``(n, run, value)`` — a coefficient ``value`` (never 0) after
+      ``run`` zeros; ``value == 0`` marks ZRL (``run`` 16) or EOB (``run``
+      64, which ends the block);
+    - ``n == 0`` marks the slow path, taken when code + magnitude bits
+      exceed 16: the middle field is ``(code length << 8) | symbol``, or
+      −1 when no code matches ``p`` (an invalid code).
 
-    def _fill(self) -> None:
-        d = self.data
-        b = d[self.pos]
-        if b == 0xFF:
-            nxt = d[self.pos + 1]
-            if nxt == 0x00:
-                self.pos += 2  # stuffed FF
-            elif 0xD0 <= nxt <= 0xD7 or nxt == 0xD9:
-                # marker reached mid-read: the spec says a conforming
-                # stream never needs these bits; feed zeros (padding)
-                self.buf = (self.buf << 8) & 0xFFFFFFFF
-                self.nbits += 8
-                return
+    Entries are shared tuples, so a table costs one 64k tuple of pointers.
+    Cached per process, keyed by the DHT payload."""
+    if sum(bits) > len(vals):
+        raise ValueError("invalid Huffman table")
+    invalid = (0, -1, 0) if ac else (0, -1)
+    entries = [invalid]
+    index = np.zeros(1 << 16, dtype=np.intp)
+    code, k = 0, 0
+    for ll in range(1, 17):
+        for _ in range(bits[ll - 1]):
+            if code >= 1 << ll:
+                raise ValueError("invalid Huffman table")
+            sym = vals[k]
+            run, s = (sym >> 4, sym & 15) if ac else (0, sym)
+            if s > 15:
+                raise ValueError(f"DC symbol {sym} out of range")
+            if ll + s > 16:
+                entries.append((0, ll << 8 | sym, 0) if ac else (0, ll << 8 | sym))
+                lo = code << (16 - ll)
+                index[lo : lo + (1 << (16 - ll))] = len(entries) - 1
             else:
-                raise ValueError(f"unexpected marker FF{nxt:02X} in scan")
-        else:
-            self.pos += 1
-        self.buf = ((self.buf << 8) | b) & 0xFFFFFFFF
-        self.nbits += 8
-
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.buf >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        while self.nbits < n:
-            self._fill()
-        self.nbits -= n
-        return (self.buf >> self.nbits) & ((1 << n) - 1)
-
-    def align_to_restart(self) -> None:
-        """Discard pad bits, consume the RSTn marker."""
-        self.buf = 0
-        self.nbits = 0
-        d = self.data
-        p = self.pos
-        while d[p] != 0xFF or not (0xD0 <= d[p + 1] <= 0xD7):
-            p += 1
-        self.pos = p + 2
-
-    def decode(self, tbl: _HuffTable) -> int:
-        code = self.bit()
-        ll = 1
-        while code > tbl.maxcode[ll]:
-            code = (code << 1) | self.bit()
-            ll += 1
-            if ll > 16:
-                raise ValueError("invalid Huffman code")
-        return tbl.vals[tbl.valptr[ll] + code - tbl.mincode[ll]]
+                free = 16 - ll - s
+                for m in range(1 << s):
+                    v = _extend(m, s) if s else 0
+                    if not ac:
+                        entries.append((ll + s, v))
+                    elif s:
+                        entries.append((ll + s, run, v))
+                    else:  # ZRL; any other s=0 symbol ends the block like EOB
+                        entries.append((ll, 16 if run == 15 else 64, 0))
+                    lo = ((code << s) | m) << free
+                    index[lo : lo + (1 << free)] = len(entries) - 1
+            code += 1
+            k += 1
+        code <<= 1
+    return tuple(map(entries.__getitem__, index.tolist()))
 
 
 def _extend(v: int, s: int) -> int:
     """T.81 F.2.2.1 EXTEND: map an s-bit magnitude to its signed value."""
     return v - ((1 << s) - 1) if v < (1 << (s - 1)) else v
+
+
+def _truncated() -> ValueError:
+    return ValueError("truncated scan: entropy-coded data ends mid-block")
+
+
+def _decode_segment(seg: bytes, blocks: list[tuple], ncomp: int,
+                    idx: array, val: array) -> None:
+    """Decode one restart interval (un-stuffed bytes) into (flat index,
+    value) pairs, zigzag order within each 64-slot block.
+
+    The bit window ``buf`` keeps ``nb`` valid low bits and is refilled 4
+    bytes at a time whenever fewer than 32 remain, so one symbol (≤ 16
+    code + ≤ 15 magnitude bits) never needs a second refill. The segment
+    is zero-padded for peeking; consuming a bit past its real end raises
+    (checked at every refill and once at the end)."""
+    nbits = len(seg) * 8
+    data = seg + bytes(8)
+    from_bytes = int.from_bytes
+    put_idx, put_val = idx.append, val.append
+    buf = nb = pos = 0
+    pred = [0] * ncomp
+    for base, ci, dct, act in blocks:
+        if nb < 32:
+            if pos * 8 - nb > nbits:
+                raise _truncated()
+            buf = ((buf << 32) | from_bytes(data[pos : pos + 4], "big")) & _M64
+            pos += 4
+            nb += 32
+        n, v = dct[(buf >> (nb - 16)) & 0xFFFF]
+        if n:
+            nb -= n
+        elif v < 0:
+            raise ValueError("invalid Huffman code")
+        else:
+            nb -= v >> 8
+            s = v & 0xFF
+            nb -= s
+            v = _extend((buf >> nb) & ((1 << s) - 1), s)
+        v += pred[ci]
+        pred[ci] = v
+        put_idx(base)
+        put_val(v)
+        k = 1
+        while k < 64:
+            if nb < 32:
+                if pos * 8 - nb > nbits:
+                    raise _truncated()
+                buf = ((buf << 32) | from_bytes(data[pos : pos + 4], "big")) & _M64
+                pos += 4
+                nb += 32
+            n, r, v = act[(buf >> (nb - 16)) & 0xFFFF]
+            if v:
+                nb -= n
+                k += r
+                if k > 63:
+                    raise ValueError("AC index overflow")
+                put_idx(base + k)
+                put_val(v)
+                k += 1
+            elif n:  # ZRL / EOB
+                nb -= n
+                k += r
+            elif r < 0:
+                raise ValueError("invalid Huffman code")
+            else:
+                nb -= r >> 8
+                s = r & 15
+                nb -= s
+                k += (r >> 4) & 15
+                if k > 63:
+                    raise ValueError("AC index overflow")
+                put_idx(base + k)
+                put_val(_extend((buf >> nb) & ((1 << s) - 1), s))
+                k += 1
+    if pos * 8 - nb > nbits:
+        raise _truncated()
 
 
 # --------------------------------------------------------------- decoder
@@ -242,8 +312,8 @@ def decode(data: bytes) -> np.ndarray:
     if len(data) < 4 or data[0] != 0xFF or data[1] != 0xD8:
         raise ValueError("not a JPEG (missing SOI)")
     qt: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, _HuffTable] = {}
-    huff_ac: dict[int, _HuffTable] = {}
+    huff_dc: dict[int, tuple] = {}
+    huff_ac: dict[int, tuple] = {}
     restart_interval = 0
     frame = None  # (h, w, comps) where comps = [(cid, hs, vs, tq)]
     i = 2
@@ -290,10 +360,10 @@ def decode(data: bytes) -> np.ndarray:
             p = 0
             while p < len(seg):
                 tc, th = seg[p] >> 4, seg[p] & 15
-                bits = list(seg[p + 1 : p + 17])
+                bits = bytes(seg[p + 1 : p + 17])
                 nv = sum(bits)
-                vals = list(seg[p + 17 : p + 17 + nv])
-                (huff_ac if tc else huff_dc)[th] = _HuffTable(bits, vals)
+                vals = bytes(seg[p + 17 : p + 17 + nv])
+                (huff_ac if tc else huff_dc)[th] = _lookahead(bits, vals, bool(tc))
                 p += 17 + nv
         elif m == 0xDD:  # DRI
             restart_interval = (seg[0] << 8) | seg[1]
@@ -323,59 +393,50 @@ def _decode_scan(data, pos, frame, scan, qt, restart_interval):
     vmax = max(c[2] for c in comps)
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
-    # coefficient grids, one per component, shape (blocks_y, blocks_x, 64)
-    grids = []
+    # one flat coefficient buffer: each component's (blocks_y, blocks_x,
+    # 64) zigzag-ordered grid, back to back
+    offs, total = [], 0
     for _, hs, vs, _ in comps:
-        grids.append(
-            np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int64)
-        )
-    reader = _BitReader(data, pos)
-    zz = ZIGZAG
-    pred = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and (
-                mcu_count % restart_interval == 0
-            ):
-                reader.align_to_restart()
-                pred = [0] * len(comps)
-            mcu_count += 1
-            for ci, dc_tbl, ac_tbl in scan:
-                _, hs, vs, _ = comps[ci]
-                grid = grids[ci]
-                for by in range(vs):
-                    for bx in range(hs):
-                        blk = grid[my * vs + by, mx * hs + bx]
-                        # DC
-                        s = reader.decode(dc_tbl)
-                        diff = _extend(reader.bits(s), s) if s else 0
-                        pred[ci] += diff
-                        blk[0] = pred[ci]
-                        # AC run-length
-                        k = 1
-                        while k < 64:
-                            rs = reader.decode(ac_tbl)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC index overflow")
-                            blk[zz[k]] = _extend(reader.bits(s), s)
-                            k += 1
-    # vectorized dequantize + IDCT per component
+        offs.append(total)
+        total += mcuy * vs * mcux * hs * 64
+    # every block's buffer offset, in scan order (MCU-major)
+    my, mx = np.divmod(np.arange(mcuy * mcux), mcux)
+    bases, units = [], []
+    for ci, dct, act in scan:
+        _, hs, vs, _ = comps[ci]
+        for by in range(vs):
+            for bx in range(hs):
+                bases.append(
+                    offs[ci] + ((my * vs + by) * (mcux * hs) + mx * hs + bx) * 64
+                )
+                units.append((ci, dct, act))
+    blocks = [
+        (b, *u)
+        for b, u in zip(np.stack(bases, axis=1).ravel().tolist(),
+                        itertools.cycle(units))
+    ]
+    # un-stuff once, one segment per restart interval
+    end = _SCAN_END.search(data, pos)
+    segments = [
+        s.replace(b"\xff\x00", b"\xff")
+        for s in _RST.split(data[pos : end.start() if end else len(data)])
+    ]
+    per = len(units) * (restart_interval or mcux * mcuy)
+    if len(segments) * per < len(blocks):
+        raise ValueError("truncated scan: restart intervals missing")
+    idx, val = array("q"), array("q")
+    for r in range(0, len(blocks), per):
+        _decode_segment(segments[r // per], blocks[r : r + per], len(comps),
+                        idx, val)
+    coef = np.zeros(total, dtype=np.int64)
+    coef[np.frombuffer(idx, dtype=np.int64)] = np.frombuffer(val, dtype=np.int64)
     planes = []
     for ci, (_, hs, vs, tq) in enumerate(comps):
-        coef = grids[ci] * qt[tq][zz.argsort()][np.newaxis, np.newaxis, :]
-        # ^ qt is in zigzag order; reorder to natural before multiply
-        by, bx, _ = coef.shape
-        blocks = coef.reshape(by, bx, 8, 8).astype(np.float64)
-        # IDCT: Aᵀ X A over the last two axes
-        pix = np.einsum("ki,yxkl,lj->yxij", _A, blocks, _A)
+        by, bx = mcuy * vs, mcux * hs
+        # dequantize in zigzag order (DQT is zigzag), then de-zigzag
+        grid = coef[offs[ci] : offs[ci] + by * bx * 64].reshape(by, bx, 64)
+        blocks_nat = (grid * qt[tq])[:, :, _UNZIGZAG]
+        pix = _A.T @ blocks_nat.reshape(by, bx, 8, 8).astype(np.float64) @ _A
         plane = (
             pix.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8) + 128.0
         )
@@ -398,30 +459,6 @@ def _decode_scan(data, pos, frame, scan, qt, restart_interval):
 # --------------------------------------------------------------- encoder
 
 
-class _BitWriter:
-    __slots__ = ("out", "buf", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.buf = (self.buf << length) | code
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            b = (self.buf >> self.nbits) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-
-    def flush(self) -> None:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1s per spec
-
-
 def _enc_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """symbol → (code, length) canonical assignment."""
     out: dict[int, tuple[int, int]] = {}
@@ -435,18 +472,11 @@ def _enc_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
-def _magnitude(v: int) -> tuple[int, int]:
-    """signed value → (category s, s-bit code)."""
-    if v == 0:
-        return 0, 0
-    s = int(abs(v)).bit_length()
-    return s, v if v >= 0 else v + (1 << s) - 1
-
-
 def _tab_arrays(tab: dict[int, tuple[int, int]]) -> tuple[np.ndarray, np.ndarray]:
-    """dict symbol → (code, length) as two dense lookup arrays."""
+    """dict symbol → (code, length) as two dense lookup arrays; a symbol
+    the table does not cover has length −1, which ``emit`` rejects."""
     code = np.zeros(256, dtype=np.int64)
-    length = np.zeros(256, dtype=np.int64)
+    length = np.full(256, -1, dtype=np.int64)
     for sym, (c, ll) in tab.items():
         code[sym] = c
         length[sym] = ll
@@ -454,65 +484,100 @@ def _tab_arrays(tab: dict[int, tuple[int, int]]) -> tuple[np.ndarray, np.ndarray
 
 
 def _magnitude_vec(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vector form of ``_magnitude``: signed int64 values → (category s,
-    s-bit code). frexp's exponent IS bit_length for integers (exact in
-    float64 up to 2⁵³ — far above any quantized coefficient)."""
+    """Signed int64 values → (category s, s-bit code). frexp's exponent
+    IS bit_length for integers (exact in float64 up to 2⁵³ — far above
+    any quantized coefficient)."""
     a = np.abs(v).astype(np.float64)
     s = np.frexp(a)[1].astype(np.int64)  # frexp(0) → exponent 0 → s=0 ✓
     mag = np.where(v >= 0, v, v + (np.int64(1) << s) - 1)
     return s, mag
 
 
+def _pack(code: np.ndarray, length: np.ndarray) -> bytes:
+    """Symbols → entropy-coded bytes: MSB-first per symbol, the tail
+    padded with 1s (spec), then 0x00 stuffed after every 0xFF."""
+    total = int(length.sum())
+    ends = np.cumsum(length)
+    starts = ends - length
+    sym_of_bit = np.repeat(np.arange(len(length)), length)
+    j = np.arange(total) - starts[sym_of_bit]
+    shift = length[sym_of_bit] - 1 - j
+    bits = ((code[sym_of_bit] >> shift) & 1).astype(np.uint8)
+    pad = (-total) % 8
+    if pad:
+        bits = np.concatenate([bits, np.ones(pad, np.uint8)])
+    data = np.packbits(bits)
+    ff = np.nonzero(data == 0xFF)[0]
+    if len(ff):
+        data = np.insert(data, ff + 1, 0)
+    return data.tobytes()
+
+
 def _entropy_encode_vec(
     qcoefs: list[np.ndarray],
     comp_q: list[int],
+    sampling: list[tuple[int, int]],
     dc_tabs: list[dict],
     ac_tabs: list[dict],
-) -> bytearray:
-    """Vectorized baseline entropy coder — bit-identical to the original
-    per-coefficient ``_BitWriter`` loop (r18, guide §4.2: the pure-Python
-    Huffman loop was ~0.31s/frame in _BitWriter.write alone; this path
-    builds every (code, length) symbol with numpy, orders them by the
-    interleaved MCU scan, and packs bits with one repeat/cumsum pass).
+    restart_interval: int = 0,
+) -> bytes:
+    """Vectorized baseline entropy coder: builds every (code, length)
+    symbol with numpy, orders them by the interleaved MCU scan, and packs
+    bits with one repeat/cumsum pass per restart interval.
 
-    Symbol ordering key: blocks are visited (yb, xb, component); within a
-    block, seq 0/1 are the DC huffman code and DC magnitude bits, the AC
-    coefficient at zigzag position k owns seq slots 2+8(k−1)..2+8(k−1)+5
-    (up to three ZRLs, then its huffman code, then its magnitude bits),
-    and EOB takes the tail slot — so a stable sort by (block, seq)
-    reproduces the serial emission order exactly."""
-    ncomp = len(qcoefs)
-    nb = qcoefs[0].shape[0] * qcoefs[0].shape[1]
+    ``qcoefs[pi]`` is component pi's (blocks_y, blocks_x, 64) zigzag grid
+    and ``sampling[pi]`` its (hs, vs); an MCU holds hs×vs blocks of each
+    component in turn. Symbol ordering key: blocks are numbered in scan
+    order; within a block, seq 0/1 are the DC huffman code and DC
+    magnitude bits, the AC coefficient at zigzag position k owns seq
+    slots 2+8(k−1)..2+8(k−1)+5 (up to three ZRLs, then its huffman code,
+    then its magnitude bits), and EOB takes the tail slot — so a stable
+    sort by (block, seq) reproduces the serial emission order exactly."""
+    units = sum(hs * vs for hs, vs in sampling)  # blocks per MCU
     EOB_SEQ = 2 + 8 * 63
     keys: list[np.ndarray] = []
     codes: list[np.ndarray] = []
     lens: list[np.ndarray] = []
 
-    def emit(block_rank, pi, seq, code, length, mask=None):
-        """Queue symbols (vector args); drop zero-length/masked entries."""
-        key = (block_rank * ncomp + pi) * 1024 + seq
+    def emit(block, seq, code, length, mask=None):
+        """Queue symbols (vector args); drop masked entries."""
         if mask is not None:
-            key, code, length = key[mask], code[mask], length[mask]
-        keys.append(np.asarray(key, dtype=np.int64))
+            block, seq, code, length = block[mask], seq[mask], code[mask], length[mask]
+        if (length < 0).any():
+            raise ValueError("symbol has no code in the Huffman table")
+        keys.append(np.asarray(block * 1024 + seq, dtype=np.int64))
         codes.append(np.asarray(code, dtype=np.int64))
         lens.append(np.asarray(length, dtype=np.int64))
 
-    for pi in range(ncomp):
+    unit0 = 0  # this component's first block within an MCU
+    for pi, (hs, vs) in enumerate(sampling):
         tix = 0 if comp_q[pi] == 0 else 1
         dc_code, dc_len = _tab_arrays(dc_tabs[tix])
         ac_code, ac_len = _tab_arrays(ac_tabs[tix])
-        flat = qcoefs[pi].reshape(nb, 64)
-        ranks = np.arange(nb, dtype=np.int64)
+        by, bx = qcoefs[pi].shape[:2]
+        # the component's blocks in scan order: MCU-major, then vs×hs
+        flat = (
+            qcoefs[pi].reshape(by // vs, vs, bx // hs, hs, 64)
+            .transpose(0, 2, 1, 3, 4).reshape(-1, 64)
+        )
+        nb = flat.shape[0]
+        j = np.arange(nb, dtype=np.int64)
+        per = hs * vs
+        ranks = (j // per) * units + unit0 + j % per
+        unit0 += per
 
-        # --- DC: differential against the previous block of THIS component
+        # --- DC: differential against the previous block of THIS
+        # component; the predictor resets at each restart interval
         dcs = flat[:, 0].astype(np.int64)
         diffs = np.empty_like(dcs)
         diffs[0] = dcs[0]
         diffs[1:] = dcs[1:] - dcs[:-1]
+        if restart_interval:
+            first = j % (per * restart_interval) == 0
+            diffs[first] = dcs[first]
         s, mag = _magnitude_vec(diffs)
-        emit(ranks, pi, np.zeros(nb, np.int64), dc_code[s], dc_len[s])
-        nzdc = s > 0
-        emit(ranks, pi, np.ones(nb, np.int64), mag, s, mask=nzdc)
+        emit(ranks, np.zeros(nb, np.int64), dc_code[s], dc_len[s])
+        emit(ranks, np.ones(nb, np.int64), mag, s, mask=s > 0)
 
         # --- AC: run-length over the zigzag tail, all blocks at once
         ac = flat[:, 1:]
@@ -533,56 +598,42 @@ def _entropy_encode_vec(
         if len(zi):
             rep = np.repeat(zi, nzrl[zi])
             ends = np.cumsum(nzrl[zi])
-            j = np.arange(len(rep)) - np.repeat(ends - nzrl[zi], nzrl[zi])
-            zc, zl = ac_tabs[tix][0xF0]
+            jz = np.arange(len(rep)) - np.repeat(ends - nzrl[zi], nzrl[zi])
             emit(
-                b_idx[rep].astype(np.int64),
-                pi,
-                base[rep] + j,
-                np.full(len(rep), zc, np.int64),
-                np.full(len(rep), zl, np.int64),
+                ranks[b_idx[rep]],
+                base[rep] + jz,
+                np.full(len(rep), ac_code[0xF0], np.int64),
+                np.full(len(rep), ac_len[0xF0], np.int64),
             )
         sym = (rem << 4) | s
-        emit(b_idx.astype(np.int64), pi, base + 4, ac_code[sym], ac_len[sym])
-        emit(b_idx.astype(np.int64), pi, base + 5, mag, s)
+        emit(ranks[b_idx], base + 4, ac_code[sym], ac_len[sym])
+        emit(ranks[b_idx], base + 5, mag, s)
 
         # --- EOB for blocks whose last nonzero sits before k=63
         lastk = np.zeros(nb, np.int64)
         lastk[b_idx] = k  # ascending ⇒ final write per block is max k
         eb = np.nonzero(lastk < 63)[0]
-        ec, el = ac_tabs[tix][0x00]
         emit(
-            eb,
-            pi,
+            ranks[eb],
             np.full(len(eb), EOB_SEQ, np.int64),
-            np.full(len(eb), ec, np.int64),
-            np.full(len(eb), el, np.int64),
+            np.full(len(eb), ac_code[0x00], np.int64),
+            np.full(len(eb), ac_len[0x00], np.int64),
         )
 
     key = np.concatenate(keys)
-    code = np.concatenate(codes)
-    length = np.concatenate(lens)
     order = np.argsort(key, kind="stable")
-    code, length = code[order], length[order]
-
-    # --- pack bits: MSB-first per symbol, pad the tail with 1s (spec)
-    total = int(length.sum())
-    ends = np.cumsum(length)
-    starts = ends - length
-    sym_of_bit = np.repeat(np.arange(len(length)), length)
-    j = np.arange(total) - starts[sym_of_bit]
-    shift = length[sym_of_bit] - 1 - j
-    bits = ((code[sym_of_bit] >> shift) & 1).astype(np.uint8)
-    pad = (-total) % 8
-    if pad:
-        bits = np.concatenate([bits, np.ones(pad, np.uint8)])
-    data = np.packbits(bits)
-    # byte stuffing: 0x00 after every 0xFF data byte (post-pass is
-    # equivalent to the streaming writer's inline stuffing)
-    ff = np.nonzero(data == 0xFF)[0]
-    if len(ff):
-        data = np.insert(data, ff + 1, 0)
-    return bytearray(data.tobytes())
+    code, length = np.concatenate(codes)[order], np.concatenate(lens)[order]
+    if not restart_interval:
+        return _pack(code, length)
+    # one byte-aligned chunk per interval, RST0..RST7 cycling between them
+    interval = key[order] // 1024 // units // restart_interval
+    cuts = np.flatnonzero(np.diff(interval)) + 1
+    out = bytearray()
+    for i, (c, ll) in enumerate(zip(np.split(code, cuts), np.split(length, cuts))):
+        if i:
+            out += bytes([0xFF, 0xD0 + (i - 1) % 8])
+        out += _pack(c, ll)
+    return bytes(out)
 
 
 def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
@@ -593,17 +644,27 @@ def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(q, 1, 255)
 
 
-def encode(image: np.ndarray, quality: int = 90) -> bytes:
-    """uint8 (H,W) grayscale or (H,W,3) BGR → baseline JPEG bytes
-    (4:4:4, Annex K tables scaled by ``quality``)."""
+# luma (hs, vs) per chroma subsampling; chroma is always 1×1
+SUBSAMPLING = {"4:4:4": (1, 1), "4:2:2": (2, 1), "4:2:0": (2, 2)}
+
+
+def encode(image: np.ndarray, quality: int = 90, subsampling: str = "4:4:4",
+           restart_interval: int = 0) -> bytes:
+    """uint8 (H,W) grayscale or (H,W,3) BGR → baseline JPEG bytes (Annex K
+    tables scaled by ``quality``). Color images take a ``subsampling``
+    from SUBSAMPLING (chroma is box-averaged); ``restart_interval`` > 0
+    writes DRI and an RSTn marker every that many MCUs."""
     if image.dtype != np.uint8:
         raise ValueError("encode expects uint8")
+    if subsampling not in SUBSAMPLING:
+        raise ValueError(f"subsampling must be one of {sorted(SUBSAMPLING)}")
     gray = image.ndim == 2
     h, w = image.shape[:2]
     if gray:
         planes = [image.astype(np.float64) - 128.0]
         qtabs = [_quality_scale(K1_LUMA, quality)]
         comp_q = [0]
+        sampling = [(1, 1)]
     else:
         b = image[..., 0].astype(np.float64)
         g = image[..., 1].astype(np.float64)
@@ -617,19 +678,24 @@ def encode(image: np.ndarray, quality: int = 90) -> bytes:
             _quality_scale(K2_CHROMA, quality),
         ]
         comp_q = [0, 1, 1]
+        sampling = [SUBSAMPLING[subsampling], (1, 1), (1, 1)]
+    hmax, vmax = sampling[0]
 
     dc_tabs = [_enc_table(DC_LUMA_BITS, DC_LUMA_VALS),
                _enc_table(DC_CHROMA_BITS, DC_CHROMA_VALS)]
     ac_tabs = [_enc_table(AC_LUMA_BITS, AC_LUMA_VALS),
                _enc_table(AC_CHROMA_BITS, AC_CHROMA_VALS)]
 
-    # pad to multiples of 8 by edge replication, forward DCT + quantize
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    by, bx = ph // 8, pw // 8
-    zz_nat = ZIGZAG  # natural index for zigzag position k
+    # pad to whole MCUs by edge replication, box-average the subsampled
+    # planes, forward DCT + quantize
+    ph, pw = -(-h // (8 * vmax)) * 8 * vmax, -(-w // (8 * hmax)) * 8 * hmax
     qcoefs = []  # per component: (by, bx, 64) zigzag-ordered quantized
     for pi, plane in enumerate(planes):
         padded = np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge")
+        fy, fx = vmax // sampling[pi][1], hmax // sampling[pi][0]
+        if fy > 1 or fx > 1:
+            padded = padded.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
+        by, bx = padded.shape[0] // 8, padded.shape[1] // 8
         blocks = (
             padded.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3)
         )
@@ -638,14 +704,12 @@ def encode(image: np.ndarray, quality: int = 90) -> bytes:
         qn = qtabs[comp_q[pi]].reshape(8, 8)
         quant = np.round(coef / qn).astype(np.int64)
         qcoefs.append(
-            quant.reshape(by, bx, 64)[:, :, zz_nat]
+            quant.reshape(by, bx, 64)[:, :, ZIGZAG]
         )  # natural → zigzag order
 
-    # entropy-code (interleaved 4:4:4 → one block per component per MCU)
-    # — vectorized (r18, guide §4.2): bit-identical to the former
-    # per-coefficient _BitWriter loop, which spent ~0.3s/frame in Python
-    # bit appends; see _entropy_encode_vec.
-    scan_bytes = _entropy_encode_vec(qcoefs, comp_q, dc_tabs, ac_tabs)
+    scan_bytes = _entropy_encode_vec(
+        qcoefs, comp_q, sampling, dc_tabs, ac_tabs, restart_interval
+    )
 
     # assemble marker stream
     out = bytearray(b"\xFF\xD8")  # SOI
@@ -664,7 +728,8 @@ def encode(image: np.ndarray, quality: int = 90) -> bytes:
     ncomp = len(planes)
     sof = bytearray([8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, ncomp])
     for ci in range(ncomp):
-        sof.extend([ci + 1, 0x11, comp_q[ci]])  # H=V=1 (4:4:4)
+        hs, vs = sampling[ci]
+        sof.extend([ci + 1, hs << 4 | vs, comp_q[ci]])
     seg(0xC0, bytes(sof))
     for tc, tables in ((0, (DC_LUMA_BITS, DC_LUMA_VALS,
                             DC_CHROMA_BITS, DC_CHROMA_VALS)),
@@ -673,6 +738,8 @@ def encode(image: np.ndarray, quality: int = 90) -> bytes:
         seg(0xC4, bytes([tc << 4 | 0] + tables[0] + tables[1]))
         if ncomp > 1:
             seg(0xC4, bytes([tc << 4 | 1] + tables[2] + tables[3]))
+    if restart_interval:
+        seg(0xDD, bytes([restart_interval >> 8, restart_interval & 0xFF]))
     sos = bytearray([ncomp])
     for ci in range(ncomp):
         t = 0 if comp_q[ci] == 0 else 1

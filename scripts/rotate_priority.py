@@ -43,34 +43,9 @@ import sys
 # and then rewritten in the same round SHOULD be re-sampled).
 # (r10: the three r8/r9-rewrite pins were driver-hashed green in r10 and
 # deleted per the r10 verdict #2.)
-# r18 (VERDICT r17 item 2b): the 21 query paths whose plans were
-# rewritten in optimization round r17 — none of them fell inside the
-# rotating r17 driver sample, so the driver has never value-hashed the
-# NEW plans. Pinned at rewrite_round=17 so the r18 sample hashes them
-# first; r18 evidence (>17) expires each pin.
-PINNED_REWRITTEN: tuple[tuple[str, int], ...] = (
-    ("agg_count_min_sketch", 17),
-    ("agg_median_mode", 17),
-    ("basket_part_pairs", 17),
-    ("corpus_mixture_weights", 17),
-    ("dedup_incremental", 17),
-    ("dedup_semantic_kmeans", 17),
-    ("er_resolve_parts", 17),
-    ("events_anomaly_mad", 17),
-    ("events_funnel", 17),
-    ("events_retention_cohorts", 17),
-    ("graph_bfs_distance", 17),
-    ("graph_sssp_weighted", 17),
-    ("merge_tx_cdf_to_scd2", 17),
-    ("ml_classifier_eval", 17),
-    ("sample_importance_weighted", 17),
-    ("similarity_topk_ivf", 17),
-    ("stat_ks_two_sample_exact", 17),
-    ("stat_spearman_rank_exact", 17),
-    ("timeseries_gapfill", 17),
-    ("tpch_q15", 17),
-    ("udf_pandas_grouped_agg", 17),
-)
+# (the 21 r17-rewrite pins were confirmed by CORRECTNESS_r18.json and
+# deleted.)
+PINNED_REWRITTEN: tuple[tuple[str, int], ...] = ()
 
 # The driver's per-round correctness sample budget (keys per sweep,
 # observed stable at 50 across CORRECTNESS_r02..r15). Single source of
