@@ -56,8 +56,11 @@ def main(argv: list[str] | None = None) -> int:
         from .sources import images as im
 
         spark = get_spark("cli:images")
-        glob = f"{args.path_prefix}*" if args.path_prefix else "*.jpg"
-        feats = im.preprocess_images(im.read_images(spark, args.images, glob=glob))
+        glob = f"{args.path_prefix}*.jpg"
+        feats = im.preprocess_images(
+            im.read_images(spark, args.images, glob=glob),
+            decoder=im.jpeg_decoder(),
+        )
         if args.out:
             im.write_features(feats, args.out)
         rows = feats.limit(args.show).collect()

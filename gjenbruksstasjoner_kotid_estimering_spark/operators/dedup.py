@@ -321,9 +321,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shows the shingle Generate chain 4×) and REVERTED after an isolated
     # sf0.1 A/B — caching the array-heavy bigram rows costs more in
     # serialization/GC than the recompute saves (old 2.3–3.9s vs
-    # checkpointed 5.7–17.7s at matched steal), the exact r9 finding
-    # recorded in scripts/rescan_audit.py: runtime ReusedExchange already
-    # deduplicates the identical aggregate subtrees.
+    # checkpointed 5.7–17.7s at matched steal): runtime ReusedExchange
+    # already deduplicates the identical aggregate subtrees.
     grams = d.where(F.size(tokens_col(F.col("text"))) >= 2).select(
         "doc_id", shingles_col(F.col("text"), k=2).alias("bigrams")
     )

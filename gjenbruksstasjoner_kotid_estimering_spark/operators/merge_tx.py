@@ -1197,8 +1197,13 @@ def vacuum(
             ):
                 os.unlink(path)
                 deleted.append(path)
-        if not os.listdir(subdir):
-            os.rmdir(subdir)
+                crc = os.path.join(subdir, f".{name}.crc")
+                if os.path.exists(crc):
+                    os.unlink(crc)
+        # a finished write whose data files are all gone leaves only its
+        # job-commit marker; an in-flight write has _temporary, no marker
+        if set(os.listdir(subdir)) <= {"_SUCCESS", "._SUCCESS.crc"}:
+            shutil.rmtree(subdir)
     return deleted
 
 

@@ -53,3 +53,41 @@ def test_cli_images_path_prefix(tmp_path, capsys):
     feats = get_spark().read.parquet(out_dir)
     assert feats.count() == 1
     assert feats.collect()[0].station_id == 41
+
+
+def test_cli_images_decodes_jpegs(spark, tmp_path, capsys):
+    """--images runs the real JPEG decoder (not the byte-tiling stand-in),
+    and --path-prefix keeps the .jpg filter: a non-JPEG file under the
+    prefix must not reach the decoder."""
+    import numpy as np
+
+    from gjenbruksstasjoner_kotid_estimering_spark.sources import images as im
+    from gjenbruksstasjoner_kotid_estimering_spark.sources import jpeg
+
+    d = tmp_path / "frames"
+    d.mkdir()
+    yy, xx = np.mgrid[0 : im.RAW_H, 0 : im.RAW_W]
+    frame = np.dstack([(xx // 5) % 256, (yy + xx // 9) % 256, (2 * yy) % 256])
+    (d / "station_id_41_20200506T094000.jpg").write_bytes(
+        jpeg.encode(frame.astype(np.uint8), quality=90)
+    )
+    (d / "station_id_41_notes.txt").write_bytes(b"not a jpeg")
+
+    expected = im.preprocess_images(
+        im.read_images(spark, str(d)), decoder=im.jpeg_decoder()
+    ).collect()
+    assert len(expected) == 1
+    expected = [(r.station_id, r.epoch, list(r.features)) for r in expected]
+
+    for argv, out_dir in (
+        ([], tmp_path / "all"),
+        (["--path-prefix", "station_id_41"], tmp_path / "prefixed"),
+    ):
+        rc = main(["--images", str(d), *argv, "--out", str(out_dir)])
+        assert rc == 0
+        assert "1 frames" in capsys.readouterr().out
+        got = [
+            (r.station_id, r.epoch, list(r.features))
+            for r in spark.read.parquet(str(out_dir)).collect()
+        ]
+        assert got == expected

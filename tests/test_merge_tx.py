@@ -953,3 +953,83 @@ def test_full_clause_matrix_single_call(spark, tmp_path):
     assert all(k not in rows for k in (0, 6, 8))
     assert all(rows[k] == k * 10 for k in (1, 7, 9))
     assert len(rows) == 6  # 4,5,20 + 1,7,9
+
+
+def test_streaming_merge_crash_before_manifest_commit(spark, monkeypatch, tmp_path):
+    """A stream whose merge dies after writing its data files but before
+    publishing the manifest: the restarted query replays the batch from its
+    checkpoint, the table equals a last-write-wins replay of every input
+    row, and vacuum reclaims exactly the crashed attempt's orphan files."""
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "in"
+    src.mkdir()
+    rows = []
+    for f in range(3):
+        part = [
+            (k, 100 * f + k, (7 * k + 5 * f) % 11, 100 * f + k)
+            for k in range(f, f + 8)
+        ]
+        (src / f"part{f}.json").write_text(
+            "\n".join(
+                json.dumps({"k": k, "v": v, "ts": ts, "eid": eid})
+                for k, v, ts, eid in part
+            )
+        )
+        rows += part
+    t = str(tmp_path / "table")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        stream = (
+            spark.readStream.schema("k long, v long, ts long, eid long")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        query = (
+            stream.writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(
+                mt.merge_batch_writer(
+                    t, key_cols=["k"], order_col=["ts", "eid"], conditional=True
+                )
+            )
+            .start()
+        )
+        query.awaitTermination()
+
+    real_commit = mt._try_commit
+    orphans: list[str] = []
+
+    def crash_once(table_dir, version, files, **kw):
+        if version == 2 and not orphans:
+            orphans.extend(files)
+            raise RuntimeError("crash between data-file write and commit")
+        return real_commit(table_dir, version, files, **kw)
+
+    monkeypatch.setattr(mt, "_try_commit", crash_once)
+    with pytest.raises(StreamingQueryException):
+        drain()
+    assert orphans and all(os.path.exists(f) for f in orphans)
+    assert mt.current_version(t) == 1  # the crashed batch published nothing
+
+    monkeypatch.setattr(mt, "_try_commit", real_commit)
+    drain()
+
+    latest: dict = {}
+    for k, v, ts, eid in rows:
+        if k not in latest or (ts, eid) > latest[k][1:]:
+            latest[k] = (v, ts, eid)
+    snap, version = mt.snapshot(spark, t)
+    assert {r.k: (r.v, r.ts, r.eid) for r in snap.collect()} == latest
+    assert version == 3  # one commit per batch; the crash left no gap
+
+    referenced = set()
+    for v in range(1, version + 1):
+        referenced.update(mt._read_manifest(t, v))
+    deleted = mt.vacuum(t, retain_versions=version, min_age_seconds=0)
+    assert sorted(deleted) == sorted(orphans)
+    assert not any(os.path.exists(os.path.dirname(f)) for f in orphans)
+    assert all(os.path.exists(f) for f in referenced)
+    snap, _ = mt.snapshot(spark, t)
+    assert {r.k: (r.v, r.ts, r.eid) for r in snap.collect()} == latest

@@ -1,23 +1,9 @@
-"""Registry invariants: the priority prefix must stay loud about drift."""
+"""Registry invariants: every oracle names a registered query and the
+SURVEY.md manifest matches the registry."""
 
 from __future__ import annotations
 
 from gjenbruksstasjoner_kotid_estimering_spark import registry
-
-
-def test_priority_names_all_exist():
-    specs = registry.all_specs()
-    missing = [n for n in registry._PRIORITY if n not in specs]
-    assert not missing, (
-        f"_PRIORITY names not in registry (typo or rename?): {missing} — "
-        "the driver's budget would silently land on already-verified "
-        "operators instead"
-    )
-
-
-def test_priority_prefix_orders_queries():
-    names = list(registry.all_specs())
-    assert names[: len(registry._PRIORITY)] == list(registry._PRIORITY)
 
 
 def test_every_oracle_name_is_registered():
@@ -43,174 +29,3 @@ def test_survey_manifest_matches_registry():
         f"{sorted(keys - manifest)}; stale in SURVEY: "
         f"{sorted(manifest - keys)}"
     )
-
-
-def test_evidence_parser_rejects_unknown_sidecar_shapes(tmp_path):
-    """A list-shaped or wrapped-non-dict sidecar must raise, not silently
-    record wrong keys (r8 advice on newest_evidence duck-typing)."""
-    import json
-
-    import pytest
-
-    from gjenbruksstasjoner_kotid_estimering_spark import evidence as ev
-
-    flat = tmp_path / "CORRECTNESS_r01.json"
-    flat.write_text(json.dumps({"tpch_q1": {"rows_match": True}}))
-    assert ev.sidecar_keys(str(flat)) == {"tpch_q1"}
-    assert ev.sidecar_round(str(flat)) == 1
-
-    wrapped = tmp_path / "CORRECTNESS_r02.json"
-    wrapped.write_text(json.dumps({"queries": {"tpch_q3": {}}, "sf": 0.01}))
-    assert ev.sidecar_keys(str(wrapped)) == {"tpch_q3"}
-
-    # FLAT shape with scalar metadata entries beside the query dicts
-    # (r9 advice): "sf"/"total" must not become phantom query keys.
-    flat_meta = tmp_path / "CORRECTNESS_r04.json"
-    flat_meta.write_text(
-        json.dumps({"tpch_q5": {"rows_match": True}, "sf": 0.01, "total": 1})
-    )
-    assert ev.sidecar_keys(str(flat_meta)) == {"tpch_q5"}
-
-    assert ev.newest_evidence(str(tmp_path)) == {
-        "tpch_q1": 1,
-        "tpch_q3": 2,
-        "tpch_q5": 4,
-    }
-
-    bad = tmp_path / "CORRECTNESS_r03.json"
-    bad.write_text(json.dumps([{"key": "tpch_q1"}]))
-    with pytest.raises(ValueError, match="CORRECTNESS_r03"):
-        ev.sidecar_keys(str(bad))
-    with pytest.raises(ValueError, match="CORRECTNESS_r03"):
-        ev.newest_evidence(str(tmp_path))
-    bad.unlink()
-
-    # an ALL-scalar flat sidecar is a driver format change (per-key
-    # scalar verdicts), not metadata — silently returning zero keys
-    # would starve newest_evidence and let the rotation tripwire pass
-    # vacuously, so it must raise (round-10 review finding)
-    scalars = tmp_path / "CORRECTNESS_r05.json"
-    scalars.write_text(json.dumps({"tpch_q1": True, "tpch_q2": False}))
-    with pytest.raises(ValueError, match="format"):
-        ev.sidecar_keys(str(scalars))
-
-
-def test_priority_head_is_rotated():
-    """Rotation contract (r7 verdict #2/#7): the ~50-key driver budget samples
-    the _PRIORITY head, so after each driver round the head must be rebuilt
-    stalest-first. Concretely: no key in the first 50 slots may appear in the
-    NEWEST CORRECTNESS_r*.json while keys with older (or zero) driver
-    evidence exist — otherwise the next round's entire sample budget
-    re-verifies rows the driver just confirmed.
-
-    Evidence parsing is shared with scripts/rotate_priority.py via
-    gjenbruksstasjoner_kotid_estimering_spark.evidence (r8 advice: one
-    parser, explicit shape validation), and the sidecar glob is anchored to
-    the repo root derived from __file__ so the test doesn't silently
-    early-return when pytest runs from another cwd."""
-    import os
-
-    from gjenbruksstasjoner_kotid_estimering_spark import evidence as ev
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = ev.sidecar_files(repo_root)
-    if not files:  # fresh checkout without driver artifacts
-        return
-    evidence = ev.newest_evidence(repo_root)
-    newest_round = ev.sidecar_round(files[-1])
-    newest_keys = ev.sidecar_keys(files[-1])
-    all_keys = set(registry.all_specs())
-    staler_exist = any(evidence.get(k, 0) < newest_round for k in all_keys)
-    if not staler_exist:
-        return  # everything equally fresh — no rotation needed
-    # ACTIVE PINNED_REWRITTEN keys are exempt: a key sampled in the newest
-    # round and rewritten in that same round carries evidence == its
-    # rewrite round, so the strict pin expiry (evidence > rewrite_round,
-    # r10 advice) correctly keeps it pinned at the head — the driver
-    # hashed the PRE-rewrite plan, so re-sampling it is the point, not
-    # waste (r11 review: without this exemption the tripwire and the pin
-    # contract deadlock).
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "rotate_priority",
-        os.path.join(repo_root, "scripts", "rotate_priority.py"),
-    )
-    rot = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rot)
-    active_pins = set(rot.active_pin_keys(rot.PINNED_REWRITTEN, evidence))
-    # The head width is the driver's sample budget — the shared constant,
-    # not a literal, so a budget drift can't silently let keys beyond the
-    # checked slots re-sample just-confirmed rows (r16 review).
-    head = [
-        k
-        for k in registry._PRIORITY[: rot.DRIVER_SAMPLE_N]
-        if k in evidence or k in all_keys
-    ]
-    wasted = [k for k in head if k in newest_keys and k not in active_pins]
-    assert not wasted, (
-        f"_PRIORITY head re-samples keys the driver just confirmed in "
-        f"{files[-1]}: {wasted} — rotate stalest-first before committing"
-    )
-
-
-def test_active_pin_expiry_is_strict():
-    """A pin expires only on evidence STRICTLY newer than its rewrite
-    round (r10 advice): a round-R rewrite lands after round R's sweep, so
-    round-R evidence hashed the PRE-rewrite plan. The same predicate
-    drives the tripwire's head exemption, so a key sampled in the newest
-    round and rewritten in that round stays pinned at the head without
-    deadlocking the tripwire (r11 review)."""
-    import importlib.util
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "rotate_priority",
-        os.path.join(repo_root, "scripts", "rotate_priority.py"),
-    )
-    rot = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rot)
-
-    pinned = (("sampled_then_rewritten", 11), ("hashed_post_rewrite", 9))
-    evidence = {"sampled_then_rewritten": 11, "hashed_post_rewrite": 10}
-    # evidence == rewrite round → still active (pre-rewrite hash);
-    # evidence > rewrite round → expired (driver hashed the new plan).
-    assert rot.active_pin_keys(pinned, evidence) == ["sampled_then_rewritten"]
-    # never-sampled pinned key is active too
-    assert rot.active_pin_keys((("never_sampled", 3),), {}) == ["never_sampled"]
-
-
-def test_rotate_priority_pins_precede_evidence_groups():
-    """PINNED_REWRITTEN keys (implementations changed after their newest
-    driver evidence, r9 verdict #2) must lead the generated _PRIORITY
-    block ahead of every evidence group, and must never appear twice.
-    Tests build_block directly so the guard doesn't depend on the repo's
-    current sidecar state."""
-    import importlib.util
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "rotate_priority",
-        os.path.join(repo_root, "scripts", "rotate_priority.py"),
-    )
-    rot = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rot)
-
-    evidence = {"a": 1, "b": 2, "c": 1}
-    order = ["pinned_x", "a", "c", "b"]  # stalest-first with pin up front
-    block = rot.build_block(order, evidence, pins=["pinned_x"])
-    keys = [
-        line.strip().strip('",').strip('"')
-        for line in block.splitlines()
-        if line.strip().startswith('"')
-    ]
-    assert keys == ["pinned_x", "a", "c", "b"]
-    assert keys.count("pinned_x") == 1
-    assert "# --- pinned: rewritten since newest evidence (1 keys) ---" in block
-    # group counts must exclude the pinned key even if it carried
-    # evidence: with "a" (r1) pinned, the r1 group holds only "c"
-    block2 = rot.build_block(["a", "c", "b"], evidence, pins=["a"])
-    assert "# --- newest driver evidence r1 (1 keys) ---" in block2
-    assert "# --- newest driver evidence r2 (1 keys) ---" in block2
