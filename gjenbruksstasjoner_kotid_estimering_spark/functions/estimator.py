@@ -21,10 +21,12 @@ the sentinels, so no CASE is needed for the edges). The segment table is tiny
 (7 rows) → Catalyst picks BroadcastNestedLoopJoin; at 100 TB the probe side
 streams through executors with no shuffle.
 
-``segments_values_sql`` emits the identical segment table as a SQL VALUES
-clause so the DuckDB oracle runs the *same* join with the *same* IEEE-754
-arithmetic — value-hash parity is by construction, and np.interp parity is
-property-tested in tests/test_estimator.py.
+``segments_values_sql`` emits the segment table as a SQL VALUES clause, and
+both engines read that one emitter: Spark plans it as a ``LocalRelation``
+(``segments_df``) and the DuckDB oracle inlines it, so both run the *same*
+join with the *same* IEEE-754 arithmetic — value-hash parity is by
+construction, and np.interp parity is property-tested in
+tests/test_estimator.py.
 """
 
 from __future__ import annotations
@@ -80,15 +82,22 @@ def segments(
 def segments_df(
     spark: SparkSession, points: list[tuple[float, float]] | None = None
 ) -> DataFrame:
-    """The segment table as a (broadcastable) DataFrame."""
-    return spark.createDataFrame(
-        segments(points),
-        schema="seg_x1 double, seg_y1 double, seg_x2 double, seg_y2 double",
-    )
+    """The segment table as a (broadcastable) DataFrame.
+
+    Read from the same VALUES clause the oracle joins, so it plans as a
+    JVM-side ``LocalRelation`` and its broadcast is a short JVM-only job.
+    ``createDataFrame`` over a Python list would plan as a pickled Python
+    RDD instead: every query that joins it — every streaming micro-batch
+    — would then run a Python-worker job only to re-broadcast seven rows.
+    """
+    return spark.sql("SELECT * FROM " + segments_values_sql(points=points))
 
 
-def segments_values_sql(alias: str = "seg") -> str:
-    """The identical segment table as an ANSI VALUES clause for the oracle.
+def segments_values_sql(
+    alias: str = "seg", points: list[tuple[float, float]] | None = None
+) -> str:
+    """The segment table (:func:`segments`) as an ANSI VALUES clause — the
+    one emitter both the Spark plan and the DuckDB oracle read.
 
     Every literal is CAST to DOUBLE: DuckDB types bare float literals as
     DECIMAL, and exact decimal subtraction (52.0-40.3 = 11.7) differs from
@@ -97,7 +106,7 @@ def segments_values_sql(alias: str = "seg") -> str:
     """
     rows = ", ".join(
         "(" + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in row) + ")"
-        for row in segments()
+        for row in segments(points)
     )
     return f"(VALUES {rows}) AS {alias}(seg_x1, seg_y1, seg_x2, seg_y2)"
 

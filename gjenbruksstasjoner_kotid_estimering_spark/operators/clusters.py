@@ -99,7 +99,12 @@ def connected_components(
 
 def _union_find_local(spark: SparkSession, edge_rows) -> DataFrame:
     """Driver-side union-find over a collected small edge list → the same
-    (node, component=min reachable id) frame the distributed path emits."""
+    (node, component=min reachable id) frame the distributed path emits.
+
+    The labels go back to the JVM as one Arrow table, which plans as a
+    ``LocalRelation``; ``createDataFrame`` over a Python list would plan a
+    pickled Python RDD, and every read of the labels would pay a
+    Python-worker job to unpickle them."""
     parent: dict = {}
 
     def find(x):
@@ -120,8 +125,15 @@ def _union_find_local(spark: SparkSession, edge_rows) -> DataFrame:
                 parent[rv] = ru
             else:
                 parent[ru] = rv
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, schema="node long, component long")
+    import pyarrow as pa
+
+    labels = pa.table(
+        {
+            "node": pa.array(list(parent), pa.int64()),
+            "component": pa.array([find(n) for n in parent], pa.int64()),
+        }
+    )
+    return spark.createDataFrame(labels, schema="node long, component long")
 
 
 def _connected_components_star(

@@ -41,6 +41,22 @@ MERGE strategy (what Delta calls copy-on-write at file granularity):
 
 Updates-side dedup uses the same (key, ordering DESC, row_number) shape
 as operators/upsert.py:105 — one shuffle on the merge key.
+
+A manifest (``_commits/v{N:020d}.json``) holds:
+
+- ``version``: N;
+- ``files``: every live data file of the snapshot, as plain paths;
+- ``schema``: the table's Spark schema (``StructType.jsonValue()``) — the
+  union of the files' columns, in table order (ADD-COLUMN evolution
+  appends);
+- ``stats_col`` / ``stats`` (optional): the column whose per-file
+  [min, max] the writer recorded, and those ranges by file.
+
+Readers plan from the recorded schema (``_read_files``): no parquet footer
+is opened to build a read, so a snapshot read starts no Spark job. Files
+that predate an ADD-COLUMN evolution read the new columns as NULL. A
+manifest without ``schema`` was written before schemas were recorded and
+is read by inferring it (``mergeSchema``).
 """
 
 from __future__ import annotations
@@ -53,6 +69,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..io import load_table
 from ..registry import register
@@ -94,18 +111,31 @@ def _read_manifest(table_dir: str, version: int) -> list[str]:
     return _read_commit(table_dir, version)["files"]
 
 
+def _read_files(
+    spark: SparkSession, files: list[str], schema: dict | None
+) -> DataFrame:
+    """The one reader of a manifest's data files. ``schema`` is the table
+    schema the manifest records; with it the read is planned without
+    opening a footer. ``None`` — a manifest written before schemas were
+    recorded — falls back to inferring it, one Spark job per read."""
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*files)
+
+
+def _commit_frame(spark: SparkSession, commit: dict) -> DataFrame | None:
+    """The snapshot a manifest describes, or None when it lists no file."""
+    if not commit["files"]:
+        return None
+    return _read_files(spark, commit["files"], commit.get("schema"))
+
+
 def snapshot(spark: SparkSession, table_dir: str) -> tuple[DataFrame | None, int]:
     """(DataFrame over the committed snapshot, its version). Readers never
     list ``data/`` — files reach visibility only via a manifest, so
     half-written merges are invisible."""
     v = current_version(table_dir)
-    files = _read_manifest(table_dir, v)
-    if not files:
-        return None, v
-    return (
-        spark.read.option("mergeSchema", "true").parquet(*files),
-        v,
-    )
+    return _commit_frame(spark, _read_commit(table_dir, v)), v
 
 
 def _write_data_file(
@@ -128,9 +158,8 @@ def _write_data_file(
     if stats_col is not None and files:
         from urllib.parse import unquote, urlparse
 
-        spark = df.sparkSession
         rows = (
-            spark.read.parquet(*files)
+            _read_files(df.sparkSession, files, df.schema.jsonValue())
             .groupBy(F.input_file_name().alias("_f"))
             .agg(F.min(stats_col).alias("lo"), F.max(stats_col).alias("hi"))
             .collect()
@@ -144,10 +173,12 @@ def _try_commit(
     table_dir: str,
     version: int,
     files: list[str],
+    schema: StructType | None = None,
     stats_col: str | None = None,
     stats: dict | None = None,
 ) -> None:
-    """Atomically PUBLISH a fully-written manifest.
+    """Atomically PUBLISH a fully-written manifest; ``schema`` is the
+    table's schema at this version (module docstring: manifest fields).
 
     Atomic *creation* (O_EXCL on the final path) is not atomic
     *publication*: a reader could observe the created-but-not-yet-written
@@ -158,6 +189,8 @@ def _try_commit(
     a crash before the link leaves only an ignorable temp file."""
     os.makedirs(os.path.join(table_dir, _COMMITS), exist_ok=True)
     body = {"version": version, "files": files}
+    if schema is not None:
+        body["schema"] = schema.jsonValue()
     if stats_col is not None:
         body["stats_col"] = stats_col
         body["stats"] = stats or {}
@@ -235,7 +268,7 @@ def merge(
     ``order_col``, so a STALE update can neither regress existing
     columns nor inject its evolved-column value over a newer target row.
     Survivor (unaffected) files keep their narrow schema — snapshot()
-    reads with mergeSchema.
+    reads them through the recorded, widened table schema.
 
     ``delete_condition`` is the ``WHEN MATCHED AND <cond> THEN DELETE``
     clause (a pyspark Column over the UPDATE row's columns): a matched
@@ -276,12 +309,19 @@ def merge(
         .drop("_rn")
     )
     # updates are re-read per retry attempt; localCheckpoint so the
-    # (possibly expensive) upstream plan runs once. Lazy (r18, §2.5):
-    # the first consumer (the affected-files semi-join, or the type
-    # coercion projection's broadcast) materializes it — same
-    # single-execution guarantee without a dedicated driver job per
-    # MERGE call.
+    # (possibly expensive) upstream plan runs once. Lazy: the key collect
+    # below materializes it, so no MERGE call pays a dedicated job for it.
     dedup = dedup.localCheckpoint(eager=False)
+    # The batch's keys, collected once. An empty batch returns here without
+    # committing (a scoped sync-delete still has work: every scope row is
+    # unmatched by source). The affected-files semi-join and the survivor
+    # anti-join broadcast the collected keys as a LocalRelation, so no
+    # attempt re-reads the checkpoint to build its broadcast.
+    key_frame = dedup.select(*key_cols)
+    key_table = key_frame.toArrow()
+    if key_table.num_rows == 0 and sync_delete_scope is None:
+        return current_version(table_dir)
+    keys = spark.createDataFrame(key_table, schema=key_frame.schema)
     has_del = delete_condition is not None
     if has_del:
         # evaluated once, on the update row's own columns; carried as a
@@ -291,6 +331,7 @@ def merge(
     for _ in range(max_retries):
         target, base_version = snapshot(spark, table_dir)
         base_commit = _read_commit(table_dir, base_version)
+        base_schema = base_commit.get("schema")
         stats_col = base_commit.get("stats_col")
         new_stats: dict = {}
         if target is None:
@@ -301,28 +342,33 @@ def merge(
                 boot, table_dir, stats_col
             )
             keep_files: list[str] = []
+            schema = boot.schema
         else:
             # Type stability: evolution is ADD-COLUMN only. Update values
             # for EXISTING table columns are coerced to the table's
             # declared types — otherwise a type-drifting batch (e.g. long
             # updates on an int column) would commit a manifest mixing
             # parquet files with conflicting types for one column, and
-            # every later mergeSchema read of that version throws
-            # CANNOT_MERGE_SCHEMAS (version corruption).
+            # every later read of that version would mix two physical
+            # types under one declared column (version corruption).
             _tt = {f.name: f.dataType for f in target.schema.fields}
-            dedup = dedup.select(
-                *[
-                    F.col(c).cast(_tt[c]).alias(c) if c in _tt else F.col(c)
-                    for c in dedup.columns
-                ]
-            )
-            keys = dedup.select(*key_cols)
+            drift = {
+                f.name: _tt[f.name]
+                for f in dedup.schema.fields
+                if f.name in _tt and f.dataType != _tt[f.name]
+            }
+            if drift:
+                dedup = dedup.withColumns(
+                    {c: F.col(c).cast(t) for c, t in drift.items()}
+                )
             tagged = target.withColumn("_file", F.input_file_name())
+            # one row per matched target row — at most one per batch key in
+            # a last-write-wins table, so no distinct (and its shuffle) is
+            # needed before the collect
             affected = {
                 _plain_path(r["_file"])
                 for r in tagged.join(F.broadcast(keys), key_cols, "left_semi")
                 .select("_file")
-                .distinct()
                 .collect()
             }
             if sync_delete_scope is not None:
@@ -353,8 +399,7 @@ def merge(
                 # expression. _src breaks order ties toward the update
                 # (replay idempotency).
                 existing = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*sorted(affected))
+                    _read_files(spark, sorted(affected), base_schema)
                     .withColumn("_src", F.lit(0))
                     if affected
                     else None
@@ -406,6 +451,7 @@ def merge(
                         table_dir,
                         base_version + 1,
                         keep_files + new_files,
+                        schema=winners.schema,
                         stats_col=stats_col,
                         stats={
                             **_keep_stats(base_commit, keep_files),
@@ -417,15 +463,15 @@ def merge(
                     _discard_files(new_files)
                     continue
             if affected:
-                # mergeSchema, same as snapshot()/_rewrite_where: after an
-                # evolve_schema commit an affected set can mix pre- and
-                # post-evolution files, and a plain read would take the
-                # FIRST file's (possibly narrower) schema — silently
-                # rewriting evolved-column values as NULL in wide
-                # survivors (tests/test_merge_tx.py::
+                # the table schema, same as snapshot()/_rewrite_where:
+                # after an evolve_schema commit an affected set can mix
+                # pre- and post-evolution files, and a footer-inferred
+                # read would take the FIRST file's (possibly narrower)
+                # schema — silently rewriting evolved-column values as
+                # NULL in wide survivors (tests/test_merge_tx.py::
                 # test_merge_after_evolution_preserves_wide_survivors)
-                survivors = spark.read.option("mergeSchema", "true").parquet(
-                    *sorted(affected)
+                survivors = _read_files(
+                    spark, sorted(affected), base_schema
                 ).join(F.broadcast(keys), key_cols, "left_anti")
                 if sync_delete_scope is not None:
                     # unmatched-by-source rows inside the scope are the
@@ -447,7 +493,8 @@ def merge(
                 # ADD-COLUMN evolution: new update columns become table
                 # columns; survivor files keep their narrower schema and
                 # read back with the new columns as NULL (snapshot reads
-                # with mergeSchema). Column order follows target ++ new.
+                # with the recorded table schema). Column order follows
+                # target ++ new.
                 new_cols = [
                     c
                     for c in dedup.columns
@@ -463,11 +510,13 @@ def merge(
             fs, st = _write_data_file(projected, table_dir, stats_col)
             new_files += fs
             new_stats.update(st)
+            schema = projected.schema
         try:
             _try_commit(
                 table_dir,
                 base_version + 1,
                 keep_files + new_files,
+                schema=schema,
                 stats_col=stats_col,
                 stats={**_keep_stats(base_commit, keep_files), **new_stats},
             )
@@ -527,6 +576,7 @@ def _write_seed(
         table_dir,
         current_version(table_dir) + 1,
         files,
+        schema=df.schema,
         stats_col=stats_col,
         stats=stats,
     )
@@ -551,11 +601,10 @@ def merge_batch_writer(
     at-least-once *delivery* without per-batch bookkeeping, which is
     precisely why production streaming sinks are MERGEs and not appends
     (tests/test_merge_tx.py::test_streaming_merge_replay_idempotent).
+    An empty micro-batch commits no version (``merge`` returns early).
     """
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         merge(
             batch_df.sparkSession,
             table_dir,
@@ -672,10 +721,7 @@ def snapshot_at(
     ``VERSION AS OF`` semantics without any extra bookkeeping."""
     if version < 0 or version > current_version(table_dir):
         return None
-    files = _read_manifest(table_dir, version)
-    if not files:
-        return None
-    return spark.read.option("mergeSchema", "true").parquet(*files)
+    return _commit_frame(spark, _read_commit(table_dir, version))
 
 
 def history(table_dir: str) -> list[dict]:
@@ -1036,13 +1082,13 @@ def snapshot_pruned(
         return st[0] <= hi and st[1] >= lo
 
     chosen = [f for f in files if may_match(f)]
-    reader = spark.read.option("mergeSchema", "true")  # evolved tables
+    schema = commit.get("schema")
     if not chosen:
         # fully pruned: an EMPTY frame with the table schema, not None —
         # callers compose .select()/.count() on the result either way
-        empty = reader.parquet(*files).where(F.lit(False))
+        empty = _read_files(spark, files, schema).where(F.lit(False))
         return empty, len(files), 0
-    df = reader.parquet(*chosen).where(
+    df = _read_files(spark, chosen, schema).where(
         (F.col(col) >= lo) & (F.col(col) <= hi)
     )
     return df, len(files), len(chosen)
@@ -1145,6 +1191,7 @@ def compact(
                 table_dir,
                 base_version + 1,
                 files,
+                schema=target.schema,
                 stats_col=stats_col,
                 stats=stats,
             )
@@ -1278,9 +1325,9 @@ def merge_tx_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ADD-COLUMN schema evolution under MERGE: the update batch "
     "carries a column the table never had (n_orders); with "
     "evolve_schema=True it becomes a table column, survivor files keep "
-    "their narrower physical schema, and the snapshot read "
-    "(mergeSchema) returns NULL n_orders for never-merged rows — "
-    "exactly the LEFT-JOIN-shaped oracle. No rewrite of old files, no "
+    "their narrower physical schema, and the snapshot read (through the "
+    "schema the manifest records) returns NULL n_orders for never-merged "
+    "rows — exactly the LEFT-JOIN-shaped oracle. No rewrite of old files, no "
     "table-wide migration: evolution costs one commit, the Delta/"
     "Iceberg add-column contract.",
     tags=("sink", "merge", "schema", "evolution"),
@@ -1640,7 +1687,7 @@ def merge_tx_when_matched_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "loses to the ts=2 target row, so it neither regresses the balance "
     "nor injects n_orders — hence the oracle's n_orders is NULL "
     "whenever upd5 matched. Survivor files keep their narrow schema "
-    "(mergeSchema read).",
+    "(read through the manifest's widened schema).",
     tags=("sink", "merge", "transaction", "schema", "evolution"),
 )
 def merge_tx_evolve_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1713,7 +1760,8 @@ def update_where(
     """UPDATE table SET col=expr WHERE predicate, copy-on-write at file
     granularity: affected files rewrite with the assignment applied to
     matching rows (non-matching rows in the same file copy through
-    unchanged); untouched files carry over by reference."""
+    unchanged); untouched files carry over by reference. Assigned columns
+    must exist and keep their type (values are cast to it)."""
     return _rewrite_where(spark, table_dir, predicate, set_exprs=set_exprs)
 
 
@@ -1728,6 +1776,13 @@ def _rewrite_where(
         target, base_version = snapshot(spark, table_dir)
         if target is None:
             return base_version
+        # assignments keep the column's declared type, as merge() coerces
+        # updates: the files of one version must agree with the one
+        # recorded schema
+        types = {f.name: f.dataType for f in target.schema.fields}
+        unknown = sorted(set(set_exprs or {}) - set(types))
+        if unknown:
+            raise ValueError(f"no such column(s): {unknown!r}")
         base_commit = _read_commit(table_dir, base_version)
         stats_col = base_commit.get("stats_col")
         tagged = target.withColumn("_file", F.input_file_name())
@@ -1743,8 +1798,8 @@ def _rewrite_where(
         new_files: list[str] = []
         new_stats: dict = {}
         if affected:
-            rows = spark.read.option("mergeSchema", "true").parquet(
-                *sorted(affected)
+            rows = _read_files(
+                spark, sorted(affected), base_commit.get("schema")
             )
             if set_exprs is None:
                 # SQL DELETE semantics: remove rows where the predicate
@@ -1758,7 +1813,9 @@ def _rewrite_where(
             else:
                 rewritten = rows.withColumns(
                     {
-                        c: F.when(predicate, e).otherwise(F.col(c))
+                        c: F.when(predicate, e)
+                        .otherwise(F.col(c))
+                        .cast(types[c])
                         for c, e in set_exprs.items()
                     }
                 )
@@ -1770,6 +1827,7 @@ def _rewrite_where(
                 table_dir,
                 base_version + 1,
                 keep_files + new_files,
+                schema=target.schema,
                 stats_col=stats_col,
                 stats={**_keep_stats(base_commit, keep_files), **new_stats},
             )
@@ -1945,6 +2003,10 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> int:
     Returns the new version number. Retries on VersionConflict so a
     concurrent writer cannot starve the restore."""
     body = _read_commit(table_dir, version)
+    # a manifest written before schemas were recorded: infer it once, so
+    # the restored version records one
+    frame = _commit_frame(spark, body)
+    schema = None if frame is None else frame.schema
     while True:
         new_v = current_version(table_dir) + 1
         try:
@@ -1952,6 +2014,7 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> int:
                 table_dir,
                 new_v,
                 body["files"],
+                schema=schema,
                 stats_col=body.get("stats_col"),
                 stats=body.get("stats"),
             )

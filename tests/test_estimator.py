@@ -235,3 +235,30 @@ def test_interp_nan_preserves_row_and_propagates(spark):
     assert set(out) == {0, 1}  # row count preserved by construction
     assert math.isnan(out[0].meters_interp)
     assert not math.isnan(out[1].meters_interp)
+
+
+def test_segment_table_plans_as_local_relation(spark):
+    """The segment table reaches the broadcast as a JVM-side LocalTableScan,
+    never as a Python RDD: a pickled Python RDD would cost every query that
+    joins it — every streaming micro-batch — a Python-worker job."""
+    df = spark.sql(
+        "SELECT * FROM VALUES (500.0D, 0.0D, 0.0D), (100.0D, 1.0D, 0.2D) "
+        "AS t(queue_end_pos, queue_lanes, queue_full)"
+    )
+    out = est.with_queue_estimate(df, spark)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    starts = [i for i, line in enumerate(plan) if "BroadcastExchange" in line]
+    assert starts, "the segment table is no longer broadcast"
+    for i in starts:
+        depth = plan[i].index("BroadcastExchange")
+        subtree = [plan[i]]
+        for line in plan[i + 1:]:
+            if len(line) - len(line.lstrip(" :|+-")) <= depth:
+                break
+            subtree.append(line)
+        assert any("LocalTableScan" in line for line in subtree), subtree
+        assert not any("ExistingRDD" in line for line in subtree), subtree
+    lineage = est.segments_df(spark)._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert "applySchemaToPythonRDD" not in lineage

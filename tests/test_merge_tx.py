@@ -10,6 +10,7 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gjenbruksstasjoner_kotid_estimering_spark.operators import merge_tx as mt
 
@@ -1033,3 +1034,193 @@ def test_streaming_merge_crash_before_manifest_commit(spark, monkeypatch, tmp_pa
     assert all(os.path.exists(f) for f in referenced)
     snap, _ = mt.snapshot(spark, t)
     assert {r.k: (r.v, r.ts, r.eid) for r in snap.collect()} == latest
+
+
+# --- table schema recorded in each manifest ----------------------------
+
+
+def _jobs_started(spark, group, fn):
+    """Spark jobs ``fn()`` starts, counted under a private job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred(spark, t, version):
+    """A version's files read by footer inference (mergeSchema)."""
+    files = mt._read_manifest(t, version)
+    return spark.read.option("mergeSchema", "true").parquet(*files)
+
+
+def test_snapshot_starts_no_spark_job(spark, tmp_path):
+    """A dashboard read plans from the manifest's recorded schema: building
+    the snapshot frame opens no footer and starts no Spark job."""
+    t = str(tmp_path / "nojob")
+    _seed(spark, t, n=20)
+    mt.merge(spark, t, _updates(spark, [(3, 33, 1)]), ["k"], "_ord")
+    got = {}
+
+    def read():
+        snap, _ = mt.snapshot(spark, t)
+        got["columns"] = snap.columns
+
+    assert _jobs_started(spark, "merge_tx_snapshot_probe", read) == 0
+    assert got["columns"] == ["k", "v"]
+
+
+def test_recorded_schema_matches_inferred_after_evolution(spark, tmp_path):
+    """After a conditional and a plain ADD-COLUMN evolution, snapshot()
+    returns the column names, order and rows a mergeSchema read of the same
+    files returns — the recorded schema is the inferred one, without the
+    inference job."""
+    t = str(tmp_path / "evo_recorded")
+    b1 = spark.createDataFrame(
+        [(1, 100, 10), (2, 200, 10), (4, 400, 10)], schema="k long, v long, o long"
+    )
+    mt.merge(spark, t, b1, ["k"], "o", conditional=True)
+    b2 = spark.createDataFrame(
+        [(1, 111, 5, 9), (2, 222, 20, 8), (3, 333, 7, 7)],
+        schema="k long, v long, o long, extra long",
+    )
+    mt.merge(spark, t, b2, ["k"], "o", conditional=True, evolve_schema=True)
+    b3 = spark.createDataFrame(
+        [(2, 223, 30, None, "x", 1), (5, 555, 30, 5, "y", 1)],
+        schema="k long, v long, o long, extra long, tag string, _ord long",
+    )
+    mt.merge(spark, t, b3, ["k"], "_ord", evolve_schema=True)
+    for version in (2, 3):
+        recorded = mt.snapshot_at(spark, t, version)
+        inferred = _inferred(spark, t, version)
+        assert recorded.columns == inferred.columns
+        assert recorded.schema == inferred.schema
+        assert sorted(recorded.collect()) == sorted(
+            inferred.select(*recorded.columns).collect()
+        )
+    snap, _ = mt.snapshot(spark, t)
+    assert snap.columns == ["k", "v", "o", "extra", "tag"]
+
+
+def test_manifest_without_schema_still_reads(spark, tmp_path):
+    """A manifest written before schemas were recorded (no ``schema`` key)
+    reads by inference, and the next commit on top of it records one."""
+    t = str(tmp_path / "legacy")
+    narrow = spark.createDataFrame([(1, 10), (2, 20)], schema="k long, v long")
+    wide = spark.createDataFrame(
+        [(3, 30, 3)], schema="k long, v long, extra long"
+    )
+    files = mt._write_data_file(narrow, t, None)[0]
+    files += mt._write_data_file(wide, t, None)[0]
+    os.makedirs(os.path.join(t, "_commits"))
+    with open(mt._commit_path(t, 1), "w") as f:
+        json.dump({"version": 1, "files": files}, f, indent=0)
+    snap, v = mt.snapshot(spark, t)
+    assert v == 1
+    assert snap.columns == ["k", "v", "extra"]
+    assert sorted(snap.collect()) == [(1, 10, None), (2, 20, None), (3, 30, 3)]
+    upd = _updates(spark, [(1, 11, 1)]).withColumn(
+        "extra", F.lit(None).cast("long")
+    )
+    mt.merge(spark, t, upd, ["k"], "_ord")
+    with open(mt._commit_path(t, 2)) as f:
+        assert "schema" in json.load(f)
+    snap, _ = mt.snapshot(spark, t)
+    assert {r.k: (r.v, r.extra) for r in snap.collect()} == {
+        1: (11, None),
+        2: (20, None),
+        3: (30, 3),
+    }
+
+
+def test_every_committer_records_schema(spark, tmp_path):
+    """Bootstrap, _write_seed, both merge branches, compact, delete_where,
+    update_where and restore_version each write the table schema into
+    their manifest."""
+
+    def recorded(t):
+        with open(mt._commit_path(t, mt.current_version(t))) as f:
+            body = json.load(f)
+        assert "schema" in body, body
+        return StructType.fromJson(body["schema"]).fieldNames()
+
+    boot = str(tmp_path / "boot")
+    mt.merge(spark, boot, _updates(spark, [(1, 10, 1)]), ["k"], "_ord")
+    assert recorded(boot) == ["k", "v", "_ord"]
+    mt.merge(
+        spark, boot, _updates(spark, [(1, 11, 2)]), ["k"], "_ord", conditional=True
+    )
+    assert recorded(boot) == ["k", "v", "_ord"]
+
+    t = str(tmp_path / "committers")
+    _seed(spark, t, n=12)
+    assert recorded(t) == ["k", "v"]
+    mt.merge(spark, t, _updates(spark, [(3, 33, 1)]), ["k"], "_ord")
+    assert recorded(t) == ["k", "v"]
+    mt.compact(spark, t)
+    assert recorded(t) == ["k", "v"]
+    mt.delete_where(spark, t, F.col("k") == 4)
+    assert recorded(t) == ["k", "v"]
+    mt.update_where(spark, t, F.col("k") == 5, {"v": F.lit(-5)})
+    assert recorded(t) == ["k", "v"]
+    assert dict(mt.snapshot(spark, t)[0].dtypes)["v"] == "bigint"
+    before = mt.current_version(t)
+    with pytest.raises(ValueError, match="nope"):
+        mt.update_where(spark, t, F.col("k") == 5, {"nope": F.lit(1)})
+    assert mt.current_version(t) == before
+    mt.restore_version(spark, t, 1)
+    assert recorded(t) == ["k", "v"]
+
+
+def test_empty_microbatch_commits_nothing(spark, tmp_path):
+    """An empty parquet tick in the watched dir runs a micro-batch with no
+    rows: the conditional MERGE sink commits no version, and the next
+    non-empty tick still commits last-write-wins state."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    watch, staging = tmp_path / "watch", tmp_path / "staging"
+    watch.mkdir()
+    staging.mkdir()
+    t = str(tmp_path / "table")
+    schema = pa.schema([(c, pa.int64()) for c in ("k", "v", "ts", "eid")])
+
+    def land(name, rows):
+        """(k, v, ts, eid) rows as one parquet file, moved in atomically."""
+        tmp = staging / f"{name}.parquet"
+        table = pa.Table.from_pylist(
+            [dict(zip(("k", "v", "ts", "eid"), r)) for r in rows], schema=schema
+        )
+        pq.write_table(table, tmp)
+        os.rename(tmp, watch / f"{name}.parquet")
+
+    query = (
+        spark.readStream.schema("k long, v long, ts long, eid long")
+        .parquet(str(watch))
+        .writeStream.foreachBatch(
+            mt.merge_batch_writer(
+                t, key_cols=["k"], order_col=["ts", "eid"], conditional=True
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        land("t0", [(1, 10, 1, 1), (2, 20, 1, 2)])
+        query.processAllAvailable()
+        assert mt.current_version(t) == 1
+        land("t1", [])
+        query.processAllAvailable()
+        assert query.lastProgress["batchId"] == 1
+        assert query.lastProgress["numInputRows"] == 0
+        assert mt.current_version(t) == 1
+        land("t2", [(2, 21, 2, 3), (3, 30, 2, 4)])
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert mt.current_version(t) == 2
+    snap, _ = mt.snapshot(spark, t)
+    assert {r.k: r.v for r in snap.collect()} == {1: 10, 2: 21, 3: 30}
