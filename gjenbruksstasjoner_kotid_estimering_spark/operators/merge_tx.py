@@ -2,12 +2,9 @@
 
 The reference's sink is a per-item DynamoDB ``update_item``
 (reference estimate_queue.py:166-178) — transactional per key, opaque to
-analytics. ``operators/upsert.py`` re-expresses it as partition-scoped
-parquet overwrite: correct and O(batch), but NOT atomic under concurrent
-writers (the round-3 review's one named production gap). This module is
-the production form: MERGE INTO with snapshot isolation and optimistic
-concurrency, built from two primitives every distributed filesystem
-offers —
+analytics. This module is its set-oriented form: MERGE INTO with snapshot
+isolation and optimistic concurrency, built from two primitives every
+distributed filesystem offers —
 
 - **immutable data files**: writers only ever ADD parquet files under
   ``<table>/data/``; nothing is modified in place, so readers of an old
@@ -27,20 +24,28 @@ MERGE strategy (what Delta calls copy-on-write at file granularity):
 
 1. snapshot-read the target, tag each row with its source file
    (``input_file_name()``);
-2. find AFFECTED files — those containing at least one matched key —
-   via a broadcast semi-join of file rows against update keys (at 100 TB
-   with many files, parquet footer min/max on the key would prune before
-   this scan; the semi-join is the exact fallback);
-3. rewrite ONLY affected files: their rows anti-joined against update
-   keys (unmatched survivors) are written to new files, while unaffected
-   files are carried into the new manifest by reference — zero data
-   movement for the untouched bulk of the table;
-4. append the deduplicated updates (last-write-wins within the batch by
-   a caller-named ordering column) as new files;
-5. commit the manifest; on version conflict go back to 1.
+2. find AFFECTED files — those containing at least one matched key (with
+   a sync-delete scope, also those holding a scope row) — via a
+   broadcast semi-join of file rows against update keys (at 100 TB with
+   many files, parquet footer min/max on the key would prune before this
+   scan; the semi-join is the exact fallback);
+3. rewrite ONLY affected files, in one expression: their rows (``_src=0``)
+   union the deduplicated update rows (``_src=1``), and one
+   ``row_number`` window per key keeps the winner — ranked by the
+   ordering column(s) and then ``_src`` for a conditional merge, by
+   ``_src`` alone otherwise (the update always wins). A target row with
+   no match and an update with no target row are alone in their window,
+   so survivors and inserts fall out of the same expression; the delete
+   clauses drop winning rows. Unaffected files are carried into the new
+   manifest by reference — zero data movement for the untouched bulk of
+   the table;
+4. commit through ``_commit_loop``, the one optimistic-commit loop every
+   table writer shares: write the rewrite's files, publish the manifest
+   at base+1, and on a version conflict discard those files and go back
+   to 1.
 
-Updates-side dedup uses the same (key, ordering DESC, row_number) shape
-as operators/upsert.py:105 — one shuffle on the merge key.
+Updates-side dedup is ``operators/upsert.latest_per_key`` (key, ordering
+DESC, row_number) — one shuffle on the merge key.
 
 A manifest (``_commits/v{N:020d}.json``) holds:
 
@@ -66,6 +71,7 @@ import os
 import shutil
 import threading
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -74,6 +80,7 @@ from pyspark.sql.types import StructType
 from ..io import load_table
 from ..registry import register
 from ..scratch import detach_result, new_scratch_dir, process_cache_dir
+from .upsert import latest_per_key
 
 _COMMITS = "_commits"
 _DATA = "data"
@@ -87,17 +94,24 @@ def _commit_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, _COMMITS, f"v{version:020d}.json")
 
 
+def _latest_version(log_dir: str, prefix: str) -> int:
+    """Highest N among the ``{prefix}N.json`` entries of a commit log, or 0
+    when there are none (temp files end in ``.tmp.<hex>`` and are skipped)."""
+    if not os.path.isdir(log_dir):
+        return 0
+    return max(
+        (
+            int(n[len(prefix) : -5])
+            for n in os.listdir(log_dir)
+            if n.startswith(prefix) and n.endswith(".json")
+        ),
+        default=0,
+    )
+
+
 def current_version(table_dir: str) -> int:
     """Highest committed version, or 0 for an empty/new table."""
-    cdir = os.path.join(table_dir, _COMMITS)
-    if not os.path.isdir(cdir):
-        return 0
-    versions = [
-        int(n[1:-5])
-        for n in os.listdir(cdir)
-        if n.startswith("v") and n.endswith(".json")
-    ]
-    return max(versions, default=0)
+    return _latest_version(os.path.join(table_dir, _COMMITS), "v")
 
 
 def _read_commit(table_dir: str, version: int) -> dict:
@@ -156,8 +170,6 @@ def _write_data_file(
     )
     stats: dict = {}
     if stats_col is not None and files:
-        from urllib.parse import unquote, urlparse
-
         rows = (
             _read_files(df.sparkSession, files, df.schema.jsonValue())
             .groupBy(F.input_file_name().alias("_f"))
@@ -165,8 +177,35 @@ def _write_data_file(
             .collect()
         )
         for r in rows:
-            stats[unquote(urlparse(r["_f"]).path)] = [r["lo"], r["hi"]]
+            stats[_plain_path(r["_f"])] = [r["lo"], r["hi"]]
     return files, stats
+
+
+def _publish(final: str, body: dict) -> None:
+    """Atomically PUBLISH ``body`` as the JSON document ``final``; raise
+    VersionConflict when ``final`` already exists.
+
+    Atomic *creation* (O_EXCL on the final path) is not atomic
+    *publication*: a reader could observe the created-but-not-yet-written
+    file, and a writer crash between create and write would brick the
+    table with a permanently-empty manifest. So the payload is written
+    and fsynced to a private temp name first, then published with
+    ``os.link`` — link-to-existing-target fails (the conflict signal) and
+    a crash before the link leaves only an ignorable temp file."""
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    tmp = f"{final}.tmp.{uuid.uuid4().hex}"
+    with open(tmp, "wb") as f:
+        f.write(json.dumps(body, indent=0).encode())
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, final)
+    except FileExistsError as exc:
+        raise VersionConflict(
+            f"{os.path.basename(final)} already committed"
+        ) from exc
+    finally:
+        os.unlink(tmp)
 
 
 def _try_commit(
@@ -177,36 +216,15 @@ def _try_commit(
     stats_col: str | None = None,
     stats: dict | None = None,
 ) -> None:
-    """Atomically PUBLISH a fully-written manifest; ``schema`` is the
-    table's schema at this version (module docstring: manifest fields).
-
-    Atomic *creation* (O_EXCL on the final path) is not atomic
-    *publication*: a reader could observe the created-but-not-yet-written
-    file, and a writer crash between create and write would brick the
-    table with a permanently-empty manifest. So the payload is written
-    and fsynced to a private temp name first, then published with
-    ``os.link`` — link-to-existing-target fails (the conflict signal) and
-    a crash before the link leaves only an ignorable temp file."""
-    os.makedirs(os.path.join(table_dir, _COMMITS), exist_ok=True)
+    """Publish the manifest of ``version``; ``schema`` is the table's
+    schema at this version (module docstring: manifest fields)."""
     body = {"version": version, "files": files}
     if schema is not None:
         body["schema"] = schema.jsonValue()
     if stats_col is not None:
         body["stats_col"] = stats_col
         body["stats"] = stats or {}
-    payload = json.dumps(body, indent=0).encode()
-    final = _commit_path(table_dir, version)
-    tmp = f"{final}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "wb") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError as exc:
-        raise VersionConflict(f"version {version} already committed") from exc
-    finally:
-        os.unlink(tmp)
+    _publish(_commit_path(table_dir, version), body)
 
 
 def _plain_path(uri: str) -> str:
@@ -225,10 +243,63 @@ def _keep_stats(base_commit: dict, keep_files: list[str]) -> dict:
 
 def _discard_files(files: list[str]) -> None:
     """Remove a failed attempt's data-file dirs (no vacuum debt)."""
-    import shutil
-
     for d in {os.path.dirname(f) for f in files}:
         shutil.rmtree(d, ignore_errors=True)
+
+
+_MAX_RETRIES = 10
+
+
+_Plan = Callable[[DataFrame | None, dict], tuple[list[str], DataFrame | None] | None]
+
+
+def _commit_loop(
+    spark: SparkSession,
+    table_dir: str,
+    plan: _Plan,
+    max_retries: int = _MAX_RETRIES,
+    stats_col: str | None = None,
+) -> int:
+    """The one optimistic-commit loop every table writer shares; returns
+    the committed version.
+
+    Each attempt snapshots the table and calls ``plan(target,
+    base_commit)`` (``target`` is None for an empty table). The plan
+    returns ``(files kept by reference, frame to write | None)``, or None
+    for a no-op that commits nothing and returns the base version. The
+    loop writes the frame's files — with per-file stats on the table's
+    ``stats_col``, or on ``stats_col`` when given (a seed names it) —
+    carries the kept files' stats over, records the frame's schema (the
+    snapshot's when nothing is written) and publishes the manifest at
+    base+1. On VersionConflict it discards the attempt's files and
+    re-plans on the newer snapshot, so a retry never commits a plan built
+    on a stale one (a lost update)."""
+    for _ in range(max_retries):
+        target, base_version = snapshot(spark, table_dir)
+        base_commit = _read_commit(table_dir, base_version)
+        planned = plan(target, base_commit)
+        if planned is None:
+            return base_version
+        keep_files, frame = planned
+        col = stats_col or base_commit.get("stats_col")
+        new_files: list[str] = []
+        stats = _keep_stats(base_commit, keep_files)
+        if frame is not None:
+            new_files, new_stats = _write_data_file(frame, table_dir, col)
+            stats.update(new_stats)
+        try:
+            _try_commit(
+                table_dir,
+                base_version + 1,
+                keep_files + new_files,
+                schema=(target if frame is None else frame).schema,
+                stats_col=col,
+                stats=stats,
+            )
+            return base_version + 1
+        except VersionConflict:
+            _discard_files(new_files)
+    raise VersionConflict(f"gave up after {max_retries} retries")
 
 
 def merge(
@@ -300,231 +371,125 @@ def merge(
             "sync_delete_scope is not supported with conditional=True"
         )
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    w = Window.partitionBy(*key_cols).orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
-    dedup = (
-        updates.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
     # updates are re-read per retry attempt; localCheckpoint so the
     # (possibly expensive) upstream plan runs once. Lazy: the key collect
     # below materializes it, so no MERGE call pays a dedicated job for it.
-    dedup = dedup.localCheckpoint(eager=False)
+    dedup = latest_per_key(updates, key_cols, order_cols).localCheckpoint(
+        eager=False
+    )
     # The batch's keys, collected once. An empty batch returns here without
     # committing (a scoped sync-delete still has work: every scope row is
-    # unmatched by source). The affected-files semi-join and the survivor
-    # anti-join broadcast the collected keys as a LocalRelation, so no
-    # attempt re-reads the checkpoint to build its broadcast.
+    # unmatched by source). The affected-files semi-join broadcasts the
+    # collected keys as a LocalRelation, so no attempt re-reads the
+    # checkpoint to build its broadcast.
     key_frame = dedup.select(*key_cols)
     key_table = key_frame.toArrow()
     if key_table.num_rows == 0 and sync_delete_scope is None:
         return current_version(table_dir)
     keys = spark.createDataFrame(key_table, schema=key_frame.schema)
-    has_del = delete_condition is not None
-    if has_del:
-        # evaluated once, on the update row's own columns; carried as a
-        # plain flag so the winner window can see it
-        dedup = dedup.withColumn("_del", delete_condition)
+    # the delete clause, evaluated once on the update row's own columns and
+    # carried as a plain flag so the winner window can see it
+    dedup = dedup.withColumn(
+        "_del", F.lit(False) if delete_condition is None else delete_condition
+    )
+    # _src breaks order ties toward the update (replay idempotency); without
+    # ``conditional`` it is the whole ranking — the update always wins
+    rank = [F.col(c).desc() for c in order_cols] if conditional else []
+    winner = Window.partitionBy(*key_cols).orderBy(*rank, F.col("_src").desc())
+    # a WINNING delete row removes its key: that key's target row lost the
+    # window to it, and an unmatched delete row is not inserted. A stale
+    # delete row (conditional) already lost the window to the newer target
+    # row.
+    dropped = F.col("_del")
+    if sync_delete_scope is not None:
+        # a target row that wins its window had no batch row: inside the
+        # scope it is the sync-delete set. NULL scope predicate = not in
+        # scope (row survives), the SQL WHEN-clause convention.
+        dropped = dropped | (
+            (F.col("_src") == 0) & F.coalesce(sync_delete_scope, F.lit(False))
+        )
 
-    for _ in range(max_retries):
-        target, base_version = snapshot(spark, table_dir)
-        base_commit = _read_commit(table_dir, base_version)
-        base_schema = base_commit.get("schema")
-        stats_col = base_commit.get("stats_col")
-        new_stats: dict = {}
+    def plan(target: DataFrame | None, base_commit: dict):
         if target is None:
-            # bootstrap: no row can be "matched", so delete-clause rows
-            # are no-ops and never insert
-            boot = dedup.where(~F.col("_del")).drop("_del") if has_del else dedup
-            new_files, new_stats = _write_data_file(
-                boot, table_dir, stats_col
-            )
-            keep_files: list[str] = []
-            schema = boot.schema
-        else:
-            # Type stability: evolution is ADD-COLUMN only. Update values
-            # for EXISTING table columns are coerced to the table's
-            # declared types — otherwise a type-drifting batch (e.g. long
-            # updates on an int column) would commit a manifest mixing
-            # parquet files with conflicting types for one column, and
-            # every later read of that version would mix two physical
-            # types under one declared column (version corruption).
-            _tt = {f.name: f.dataType for f in target.schema.fields}
-            drift = {
-                f.name: _tt[f.name]
-                for f in dedup.schema.fields
-                if f.name in _tt and f.dataType != _tt[f.name]
-            }
-            if drift:
-                dedup = dedup.withColumns(
-                    {c: F.col(c).cast(t) for c, t in drift.items()}
+            # bootstrap: the table takes the batch's full schema
+            return [], dedup.where(~F.col("_del")).drop("_del")
+        if conditional:
+            missing = [c for c in order_cols if c not in target.columns]
+            if missing:
+                raise ValueError(
+                    "conditional merge needs the ordering column(s) in "
+                    f"the table schema; missing: {missing!r}"
                 )
-            tagged = target.withColumn("_file", F.input_file_name())
-            # one row per matched target row — at most one per batch key in
-            # a last-write-wins table, so no distinct (and its shuffle) is
-            # needed before the collect
-            affected = {
+        # Type stability: evolution is ADD-COLUMN only. Update values for
+        # EXISTING table columns are coerced to the table's declared types
+        # — otherwise a type-drifting batch (e.g. long updates on an int
+        # column) would commit a manifest mixing parquet files with
+        # conflicting types for one column, and every later read of that
+        # version would mix two physical types under one declared column
+        # (version corruption).
+        types = {f.name: f.dataType for f in target.schema.fields}
+        batch = dedup.withColumns(
+            {
+                f.name: F.col(f.name).cast(types[f.name])
+                for f in dedup.schema.fields
+                if f.name in types and f.dataType != types[f.name]
+            }
+        )
+        tagged = target.withColumn("_file", F.input_file_name())
+        # one row per matched target row — at most one per batch key in a
+        # last-write-wins table, so no distinct (and its shuffle) is needed
+        # before the collect
+        affected = {
+            _plain_path(r["_file"])
+            for r in tagged.join(F.broadcast(keys), key_cols, "left_semi")
+            .select("_file")
+            .collect()
+        }
+        if sync_delete_scope is not None:
+            # every file holding a scope row may contain keys absent from
+            # the batch → those files must rewrite too
+            affected |= {
                 _plain_path(r["_file"])
-                for r in tagged.join(F.broadcast(keys), key_cols, "left_semi")
+                for r in tagged.where(sync_delete_scope)
                 .select("_file")
+                .distinct()
                 .collect()
             }
-            if sync_delete_scope is not None:
-                # every file holding a scope row may contain keys absent
-                # from the batch → those files must rewrite too
-                affected |= {
-                    _plain_path(r["_file"])
-                    for r in tagged.where(sync_delete_scope)
-                    .select("_file")
-                    .distinct()
-                    .collect()
-                }
-            base_files = _read_manifest(table_dir, base_version)
-            keep_files = [f for f in base_files if f not in affected]
-            new_files = []
-            if conditional:
-                missing = [c for c in order_cols if c not in target.columns]
-                if missing:
-                    raise ValueError(
-                        "conditional merge needs the ordering column(s) in "
-                        f"the table schema; missing: {missing!r}"
-                    )
-                # WHEN MATCHED AND update wins by order_col: union the
-                # affected files' rows with the update rows and keep ONE
-                # winner per key — target rows with no match and updates
-                # with no target row are alone in their window, so
-                # survivor carry-through and inserts fall out of the same
-                # expression. _src breaks order ties toward the update
-                # (replay idempotency).
-                existing = (
-                    _read_files(spark, sorted(affected), base_schema)
-                    .withColumn("_src", F.lit(0))
-                    if affected
-                    else None
-                )
-                if has_del and existing is not None:
-                    existing = existing.withColumn("_del", F.lit(False))
-                del_cols = ["_del"] if has_del else []
-                if evolve_schema:
-                    # conditional + evolution: update batches may carry
-                    # new payload columns; pre-evolution target rows get
-                    # them as NULL via allowMissingColumns.
-                    new_cols = [
-                        c
-                        for c in dedup.columns
-                        if c not in target.columns and c != "_del"
-                    ]
-                    upd_rows = dedup.select(
-                        *target.columns, *new_cols, *del_cols
-                    ).withColumn("_src", F.lit(1))
-                else:
-                    upd_rows = dedup.select(
-                        *target.columns, *del_cols
-                    ).withColumn("_src", F.lit(1))
-                combined = (
-                    upd_rows
-                    if existing is None
-                    else existing.unionByName(
-                        upd_rows, allowMissingColumns=evolve_schema
-                    )
-                )
-                w_win = Window.partitionBy(*key_cols).orderBy(
-                    *[F.col(c).desc() for c in order_cols],
-                    F.col("_src").desc(),
-                )
-                winners = (
-                    combined.withColumn("_rn", F.row_number().over(w_win))
-                    .where(F.col("_rn") == 1)
-                    .drop("_rn", "_src")
-                )
-                if has_del:
-                    # a WINNING delete row removes its key; a stale one
-                    # already lost the window to the newer target row
-                    winners = winners.where(~F.col("_del")).drop("_del")
-                fs, st = _write_data_file(winners, table_dir, stats_col)
-                new_files += fs
-                new_stats.update(st)
-                try:
-                    _try_commit(
-                        table_dir,
-                        base_version + 1,
-                        keep_files + new_files,
-                        schema=winners.schema,
-                        stats_col=stats_col,
-                        stats={
-                            **_keep_stats(base_commit, keep_files),
-                            **new_stats,
-                        },
-                    )
-                    return base_version + 1
-                except VersionConflict:
-                    _discard_files(new_files)
-                    continue
-            if affected:
-                # the table schema, same as snapshot()/_rewrite_where:
-                # after an evolve_schema commit an affected set can mix
-                # pre- and post-evolution files, and a footer-inferred
-                # read would take the FIRST file's (possibly narrower)
-                # schema — silently rewriting evolved-column values as
-                # NULL in wide survivors (tests/test_merge_tx.py::
-                # test_merge_after_evolution_preserves_wide_survivors)
-                survivors = _read_files(
-                    spark, sorted(affected), base_schema
-                ).join(F.broadcast(keys), key_cols, "left_anti")
-                if sync_delete_scope is not None:
-                    # unmatched-by-source rows inside the scope are the
-                    # sync-delete set — everything else carries through.
-                    # NULL scope predicate = not in scope (row survives),
-                    # the SQL WHEN-clause convention.
-                    survivors = survivors.where(
-                        ~F.coalesce(sync_delete_scope, F.lit(False))
-                    )
-                fs, st = _write_data_file(survivors, table_dir, stats_col)
-                new_files += fs
-                new_stats.update(st)
-            # matched-delete (and suppressed unmatched-insert): the keys
-            # frame above still contains delete rows' keys, so their
-            # target rows leave via the anti-join — simply never writing
-            # the update row implements both clause arms
-            upd_src = dedup.where(~F.col("_del")) if has_del else dedup
-            if evolve_schema:
-                # ADD-COLUMN evolution: new update columns become table
-                # columns; survivor files keep their narrower schema and
-                # read back with the new columns as NULL (snapshot reads
-                # with the recorded table schema). Column order follows
-                # target ++ new.
-                new_cols = [
-                    c
-                    for c in dedup.columns
-                    if c not in target.columns
-                    and c not in order_cols
-                    and c != "_del"
-                ]
-                projected = upd_src.select(*target.columns, *new_cols)
-            else:
-                # fixed-schema contract: extra update columns (e.g.
-                # synthetic ordering helpers) are dropped
-                projected = upd_src.select(*target.columns)
-            fs, st = _write_data_file(projected, table_dir, stats_col)
-            new_files += fs
-            new_stats.update(st)
-            schema = projected.schema
-        try:
-            _try_commit(
-                table_dir,
-                base_version + 1,
-                keep_files + new_files,
-                schema=schema,
-                stats_col=stats_col,
-                stats={**_keep_stats(base_commit, keep_files), **new_stats},
-            )
-            return base_version + 1
-        except VersionConflict:
-            _discard_files(new_files)
-            continue  # re-read the newer snapshot and re-merge on top
-    raise VersionConflict(f"gave up after {max_retries} retries")
+        # ADD-COLUMN evolution: new update columns (not ordering helpers)
+        # become table columns, after the target's; files that predate them
+        # read them as NULL. Without it the fixed-schema contract drops
+        # extra update columns (e.g. synthetic ordering helpers).
+        new_cols = [
+            c
+            for c in batch.columns
+            if evolve_schema
+            and c not in target.columns
+            and c not in order_cols
+            and c != "_del"
+        ]
+        rows = batch.select(*target.columns, *new_cols, "_del").withColumn(
+            "_src", F.lit(1)
+        )
+        if affected:
+            # read through the table schema: after an evolve_schema commit
+            # an affected set can mix pre- and post-evolution files (and a
+            # manifest without a recorded schema has target's inferred
+            # union), while a footer-inferred read of the affected files
+            # alone would take a narrower schema — rewriting evolved-column
+            # values as NULL (tests/test_merge_tx.py::
+            # test_merge_after_evolution_preserves_wide_survivors)
+            existing = _read_files(
+                spark, sorted(affected), target.schema.jsonValue()
+            ).withColumns({"_del": F.lit(False), "_src": F.lit(0)})
+            rows = existing.unionByName(rows, allowMissingColumns=True)
+        winners = (
+            rows.withColumn("_rn", F.row_number().over(winner))
+            .where((F.col("_rn") == 1) & ~dropped)
+            .drop("_rn", "_src", "_del")
+        )
+        return [f for f in base_commit["files"] if f not in affected], winners
+
+    return _commit_loop(spark, table_dir, plan, max_retries)
 
 
 @register(
@@ -551,7 +516,7 @@ def merge(
     "(matched → update, else insert, LWW within batch); the committed "
     "snapshot is read back. Exercises the full protocol under the "
     "oracle gate: affected-file pruning via broadcast semi-join, "
-    "survivor anti-join rewrite, manifest swap. Balances in integer "
+    "winner-window rewrite, manifest swap. Balances in integer "
     "cents for exact cross-engine hashing.",
     tags=("sink", "merge", "transaction", "upsert"),
 )
@@ -569,18 +534,11 @@ def _write_seed(
     df: DataFrame,
     stats_col: str | None = None,
 ) -> int:
-    """Initialize a table: version-1 manifest over the seed files (with
-    per-file key stats when ``stats_col`` is given)."""
-    files, stats = _write_data_file(df, table_dir, stats_col)
-    _try_commit(
-        table_dir,
-        current_version(table_dir) + 1,
-        files,
-        schema=df.schema,
-        stats_col=stats_col,
-        stats=stats,
+    """Initialize a table: a manifest over the seed files alone (with
+    per-file key stats when ``stats_col`` is given); returns its version."""
+    return _commit_loop(
+        spark, table_dir, lambda target, base_commit: ([], df), stats_col=stats_col
     )
-    return current_version(table_dir)
 
 
 def merge_batch_writer(
@@ -627,8 +585,8 @@ def run_streaming_merge(
     """One-shot streaming drain of the events source into a MERGE-managed
     table keyed by (user_id, event_type): the latest event per key wins
     across all batches — the streaming upsert lane
-    (streaming/file_stream.run_available_now contract) upgraded from
-    partition-overwrite to transactional copy-on-write."""
+    (streaming/file_stream.run_available_now contract) as transactional
+    copy-on-write."""
     from ..streaming.file_stream import read_events_stream, run_available_now
 
     def transform(events: DataFrame) -> DataFrame:
@@ -1106,7 +1064,7 @@ def snapshot_pruned(
     "range-clustered (repartitionByRange on the key) with per-file "
     "[min, max] key stats in the manifest — the Delta/Iceberg file-"
     "statistics convention — and a MERGE commit carries stats through "
-    "survivor rewrites; the range read then opens ONLY files whose "
+    "its rewrite; the range read then opens ONLY files whose "
     "recorded range intersects the predicate "
     "(tests assert files_read < files_total). Oracle = the recomputed "
     "post-merge state filtered relationally, so the hash gate proves "
@@ -1167,39 +1125,20 @@ def compact(
     [min, max] stats become selective on EVERY named column at once —
     multi-dimensional data skipping, the Delta OPTIMIZE ZORDER BY
     semantics."""
-    for _ in range(10):
-        # (re)build the rewrite plan INSIDE the loop: after a conflict the
-        # clustered frame must derive from the NEW tip, or the retry would
-        # commit the stale pre-conflict snapshot and silently drop the
-        # concurrent writer's rows (a lost update)
-        target, base_version = snapshot(spark, table_dir)
+
+    def plan(target: DataFrame | None, base_commit: dict):
         if target is None:
-            return base_version
-        base_commit = _read_commit(table_dir, base_version)
+            return None
         stats_col = base_commit.get("stats_col")
         if zorder_cols:
-            df = target.repartitionByRange(
-                max_files, zorder_value(*zorder_cols)
-            )
+            df = target.repartitionByRange(max_files, zorder_value(*zorder_cols))
         elif stats_col is not None:
             df = target.repartitionByRange(max_files, stats_col)
         else:
             df = target.coalesce(max_files)
-        files, stats = _write_data_file(df, table_dir, stats_col)
-        try:
-            _try_commit(
-                table_dir,
-                base_version + 1,
-                files,
-                schema=target.schema,
-                stats_col=stats_col,
-                stats=stats,
-            )
-            return base_version + 1
-        except VersionConflict:
-            _discard_files(files)
-            continue  # recompact on top of the new tip
-    raise VersionConflict("compaction gave up after 10 retries")
+        return [], df
+
+    return _commit_loop(spark, table_dir, plan)
 
 
 def vacuum(
@@ -1282,12 +1221,12 @@ def zorder_value(col_a: str, col_b: str):
         SELECT c_custkey, cents AS acctbal_cents, merged FROM v2
     """,
     doc="OPTIMIZE (compaction) over the MERGE table: seed + one MERGE "
-    "leave a fragmented file set (seed files, survivor rewrites, update "
-    "appends); compact() rewrites the snapshot into 2 range-clustered "
-    "files as a new commit and the read-back must be bit-identical to "
-    "the pre-compaction state — which the oracle hash proves, since it "
-    "recomputes the post-merge state relationally and never sees the "
-    "layout. Copy-on-write keeps pre-compaction versions time-"
+    "leave a fragmented file set (seed files plus the merge's rewrite "
+    "of the affected ones); compact() rewrites the snapshot into 2 "
+    "range-clustered files as a new commit and the read-back must be "
+    "bit-identical to the pre-compaction state — which the oracle hash "
+    "proves, since it recomputes the post-merge state relationally and "
+    "never sees the layout. Copy-on-write keeps pre-compaction versions time-"
     "travelable until vacuum() reclaims them "
     "(tests/test_merge_tx.py::test_compact_and_vacuum).",
     tags=("sink", "merge", "compaction", "maintenance"),
@@ -1597,7 +1536,7 @@ def merge_tx_full_clause_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders-derived batch both updates (balance <= $2.5M in cents) and "
     "deletes (balance above it) against the seeded customer table in a "
     "single MERGE commit. Matched deletes leave via the same "
-    "affected-file anti-join that powers updates (no extra pass); "
+    "winner window that applies updates (no extra pass); "
     "unmatched delete rows are no-ops, never inserted. The oracle is "
     "the LEFT JOIN with the delete arm as a WHERE exclusion — row "
     "count AND values prove both clause arms.",
@@ -1770,12 +1709,11 @@ def _rewrite_where(
     table_dir: str,
     predicate,
     set_exprs: dict | None,
-    max_retries: int = 10,
+    max_retries: int = _MAX_RETRIES,
 ) -> int:
-    for _ in range(max_retries):
-        target, base_version = snapshot(spark, table_dir)
+    def plan(target: DataFrame | None, base_commit: dict):
         if target is None:
-            return base_version
+            return None
         # assignments keep the column's declared type, as merge() coerces
         # updates: the files of one version must agree with the one
         # recorded schema
@@ -1783,8 +1721,6 @@ def _rewrite_where(
         unknown = sorted(set(set_exprs or {}) - set(types))
         if unknown:
             raise ValueError(f"no such column(s): {unknown!r}")
-        base_commit = _read_commit(table_dir, base_version)
-        stats_col = base_commit.get("stats_col")
         tagged = target.withColumn("_file", F.input_file_name())
         affected = {
             _plain_path(r["_file"])
@@ -1793,49 +1729,25 @@ def _rewrite_where(
             .distinct()
             .collect()
         }
-        base_files = _read_manifest(table_dir, base_version)
-        keep_files = [f for f in base_files if f not in affected]
-        new_files: list[str] = []
-        new_stats: dict = {}
-        if affected:
-            rows = _read_files(
-                spark, sorted(affected), base_commit.get("schema")
-            )
-            if set_exprs is None:
-                # SQL DELETE semantics: remove rows where the predicate
-                # IS TRUE; rows where it evaluates NULL must survive
-                # (where(~pred) would drop them — NULL is not true, and
-                # unaffected files keep their NULL rows, so the outcome
-                # would depend on file co-location)
-                rewritten = rows.where(
-                    ~F.coalesce(predicate, F.lit(False))
-                )
-            else:
-                rewritten = rows.withColumns(
-                    {
-                        c: F.when(predicate, e)
-                        .otherwise(F.col(c))
-                        .cast(types[c])
-                        for c, e in set_exprs.items()
-                    }
-                )
-            fs, st = _write_data_file(rewritten, table_dir, stats_col)
-            new_files += fs
-            new_stats.update(st)
-        try:
-            _try_commit(
-                table_dir,
-                base_version + 1,
-                keep_files + new_files,
-                schema=target.schema,
-                stats_col=stats_col,
-                stats={**_keep_stats(base_commit, keep_files), **new_stats},
-            )
-            return base_version + 1
-        except VersionConflict:
-            _discard_files(new_files)
-            continue
-    raise VersionConflict("gave up after retries")
+        keep_files = [f for f in base_commit["files"] if f not in affected]
+        if not affected:
+            return keep_files, None
+        rows = _read_files(spark, sorted(affected), target.schema.jsonValue())
+        if set_exprs is None:
+            # SQL DELETE semantics: remove rows where the predicate IS
+            # TRUE; rows where it evaluates NULL must survive (where(~pred)
+            # would drop them — NULL is not true, and unaffected files keep
+            # their NULL rows, so the outcome would depend on file
+            # co-location)
+            return keep_files, rows.where(~F.coalesce(predicate, F.lit(False)))
+        return keep_files, rows.withColumns(
+            {
+                c: F.when(predicate, e).otherwise(F.col(c)).cast(types[c])
+                for c, e in set_exprs.items()
+            }
+        )
+
+    return _commit_loop(spark, table_dir, plan, max_retries)
 
 
 @register(
@@ -2000,14 +1912,15 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> int:
     semantics). Copy-on-write makes this O(1): the new commit merely
     re-references the old immutable data files — which also re-protects
     them from vacuum(), since liveness is manifest-reachability.
-    Returns the new version number. Retries on VersionConflict so a
-    concurrent writer cannot starve the restore."""
+    Returns the new version number. Retries on VersionConflict, with
+    ``_commit_loop``'s bound and error: it carries ``version``'s own files,
+    stats and schema rather than planning on the current snapshot."""
     body = _read_commit(table_dir, version)
     # a manifest written before schemas were recorded: infer it once, so
     # the restored version records one
     frame = _commit_frame(spark, body)
     schema = None if frame is None else frame.schema
-    while True:
+    for _ in range(_MAX_RETRIES):
         new_v = current_version(table_dir) + 1
         try:
             _try_commit(
@@ -2021,6 +1934,7 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> int:
             return new_v
         except VersionConflict:
             continue
+    raise VersionConflict(f"gave up after {_MAX_RETRIES} retries")
 
 
 @register(

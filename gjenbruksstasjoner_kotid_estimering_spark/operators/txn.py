@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +41,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..registry import register
 from ..scratch import detach_result, new_scratch_dir
-from .merge_tx import VersionConflict
+from .merge_tx import _latest_version, _publish, _write_data_file
 
 _TXN = "_txn"
 
@@ -52,15 +51,7 @@ def _txn_path(root: str, version: int) -> str:
 
 
 def txn_current_version(root: str) -> int:
-    tdir = os.path.join(root, _TXN)
-    if not os.path.isdir(tdir):
-        return 0
-    versions = [
-        int(n[1:-5])
-        for n in os.listdir(tdir)
-        if n.startswith("t") and n.endswith(".json")
-    ]
-    return max(versions, default=0)
+    return _latest_version(os.path.join(root, _TXN), "t")
 
 
 def txn_read_commit(root: str, version: int) -> dict[str, list[str]]:
@@ -85,11 +76,7 @@ def txn_stage(df: DataFrame, root: str, table: str) -> list[str]:
     later :func:`txn_commit`. Until that commit, no reader can see
     these files — which is the whole crash-atomicity story: a writer
     dying after staging leaves the table group bit-identical."""
-    sub = os.path.join(root, table, "data", uuid.uuid4().hex)
-    df.write.mode("error").parquet(sub)
-    return sorted(
-        os.path.join(sub, n) for n in os.listdir(sub) if n.endswith(".parquet")
-    )
+    return _write_data_file(df, os.path.join(root, table))[0]
 
 
 def txn_commit(
@@ -101,26 +88,11 @@ def txn_commit(
     """Atomically publish ``tables`` (EVERY member table's complete
     file list) as transaction ``version``. Raises VersionConflict if a
     concurrent writer already committed that version — optimistic
-    concurrency, same contract as merge_tx._try_commit."""
-    os.makedirs(os.path.join(root, _TXN), exist_ok=True)
+    concurrency, published as merge_tx publishes a manifest."""
     body = {"version": version, "tables": tables}
     if meta is not None:
         body["meta"] = meta
-    payload = json.dumps(body, indent=0).encode()
-    final = _txn_path(root, version)
-    tmp = f"{final}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "wb") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError as exc:
-        raise VersionConflict(
-            f"transaction {version} already committed"
-        ) from exc
-    finally:
-        os.unlink(tmp)
+    _publish(_txn_path(root, version), body)
 
 
 def txn_snapshot(

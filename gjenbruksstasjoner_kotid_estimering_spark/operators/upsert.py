@@ -3,13 +3,14 @@
 The reference upserts one prediction row at a time into DynamoDB keyed
 ``(station_id, timestamp)`` via ``update_item`` — last write wins per key.
 Set-oriented restatement: a ranking window over the change stream picks the
-newest record per key; ``apply_upserts`` is the batch MERGE primitive
-(``foreachBatch``-compatible: union target + changes, keep winner), and the
-registered query checks the window-dedup semantics against SQL.
+newest record per key; ``apply_upserts`` is the in-memory batch form (union
+target + changes, keep winner), and the registered query checks the
+window-dedup semantics against SQL.
 
 Scale: the window partitions by the upsert key — one shuffle on the key,
-no global ordering. With a transactional table format this becomes
-``MERGE INTO``; the plan shape (shuffle on key, per-key top-1) is the same.
+no global ordering. The transactional table sink is ``operators/merge_tx``
+(``MERGE INTO``, streamed through ``merge_batch_writer``); its rewrite has
+the same plan shape (shuffle on key, per-key top-1).
 """
 
 from __future__ import annotations
@@ -42,70 +43,6 @@ def apply_upserts(
     return latest_per_key(
         target.unionByName(changes), key_cols=key_cols, order_cols=order_cols
     )
-
-
-def foreach_batch_upserter(
-    target_dir: str,
-    key_cols: list[str],
-    order_cols: list[str],
-    partition_col: str | None = None,
-):
-    """``writeStream.foreachBatch`` sink: merge each micro-batch into a
-    parquet target with last-write-wins semantics — the streaming form of
-    the reference's DynamoDB update_item sink (estimate_queue.py:166-178).
-
-    Partition-scoped MERGE: the target is partitioned by ``partition_col``
-    (default: the first key column) and each micro-batch
-
-    1. collects the distinct partition values present in the batch
-       (bounded by batch size, never by target size),
-    2. reads ONLY those partitions of the target (partition pruning),
-    3. merges last-write-wins per key,
-    4. writes back under ``partitionOverwriteMode=dynamic``, which
-       replaces exactly the partitions present in the merged frame.
-
-    Untouched partitions' files are never read or rewritten — the
-    update_item semantics is per-key, not table-replace, so a micro-batch
-    must cost O(batch), not O(target). With a transactional table format
-    this body becomes MERGE INTO; the plan shape (prune → key shuffle →
-    per-key top-1 → partition-scoped commit) is the same.
-    """
-    pcol = partition_col or key_cols[0]
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch.sparkSession
-        touched = [r[0] for r in batch.select(pcol).distinct().collect()]
-        if not touched:
-            return
-        if os.path.exists(target_dir):
-            # Partition values round-trip through directory names; cast the
-            # inferred partition column back to the batch's dtype so the
-            # union/window see one type.
-            target = (
-                spark.read.parquet(target_dir)
-                .withColumn(pcol, F.col(pcol).cast(batch.schema[pcol].dataType))
-                .where(F.col(pcol).isin(touched))
-            )
-            merged = apply_upserts(
-                target, batch, key_cols=key_cols, order_cols=order_cols
-            )
-        else:  # first batch: no target yet
-            merged = latest_per_key(batch, key_cols, order_cols)
-        # Break lineage before writing over the partitions just read.
-        # Writer-level option, NOT spark.conf.set: mutating the shared
-        # session conf inside foreachBatch would leak dynamic-overwrite
-        # semantics to every later write on the session.
-        merged = merged.localCheckpoint(eager=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(pcol)
-            .parquet(target_dir)
-        )
-
-    return apply
 
 
 @register(

@@ -1,6 +1,6 @@
 """Transactional MERGE sink (operators/merge_tx.py): snapshot isolation,
-copy-on-write file pruning, optimistic-concurrency retry, and the
-concurrent-batch path the partition-overwrite upserter can't provide."""
+copy-on-write file pruning, optimistic-concurrency retry, and concurrent
+writers."""
 
 from __future__ import annotations
 
@@ -1107,17 +1107,24 @@ def test_recorded_schema_matches_inferred_after_evolution(spark, tmp_path):
 
 def test_manifest_without_schema_still_reads(spark, tmp_path):
     """A manifest written before schemas were recorded (no ``schema`` key)
-    reads by inference, and the next commit on top of it records one."""
+    reads by inference, and the next commit on top of it records one —
+    also a conditional merge whose affected file predates a column."""
+
+    def legacy(t):
+        narrow = spark.createDataFrame(
+            [(1, 10), (2, 20)], schema="k long, v long"
+        )
+        wide = spark.createDataFrame(
+            [(3, 30, 3)], schema="k long, v long, extra long"
+        )
+        files = mt._write_data_file(narrow, t, None)[0]
+        files += mt._write_data_file(wide, t, None)[0]
+        os.makedirs(os.path.join(t, "_commits"))
+        with open(mt._commit_path(t, 1), "w") as f:
+            json.dump({"version": 1, "files": files}, f, indent=0)
+
     t = str(tmp_path / "legacy")
-    narrow = spark.createDataFrame([(1, 10), (2, 20)], schema="k long, v long")
-    wide = spark.createDataFrame(
-        [(3, 30, 3)], schema="k long, v long, extra long"
-    )
-    files = mt._write_data_file(narrow, t, None)[0]
-    files += mt._write_data_file(wide, t, None)[0]
-    os.makedirs(os.path.join(t, "_commits"))
-    with open(mt._commit_path(t, 1), "w") as f:
-        json.dump({"version": 1, "files": files}, f, indent=0)
+    legacy(t)
     snap, v = mt.snapshot(spark, t)
     assert v == 1
     assert snap.columns == ["k", "v", "extra"]
@@ -1125,15 +1132,139 @@ def test_manifest_without_schema_still_reads(spark, tmp_path):
     upd = _updates(spark, [(1, 11, 1)]).withColumn(
         "extra", F.lit(None).cast("long")
     )
+    expected = {1: (11, None), 2: (20, None), 3: (30, 3)}
     mt.merge(spark, t, upd, ["k"], "_ord")
     with open(mt._commit_path(t, 2)) as f:
         assert "schema" in json.load(f)
     snap, _ = mt.snapshot(spark, t)
-    assert {r.k: (r.v, r.extra) for r in snap.collect()} == {
-        1: (11, None),
-        2: (20, None),
-        3: (30, 3),
+    assert {r.k: (r.v, r.extra) for r in snap.collect()} == expected
+
+    # conditional: k=1 lives in the narrow file; v doubles as the ordering
+    # column (the table has no other), and 11 > 10 wins
+    t = str(tmp_path / "legacy_conditional")
+    legacy(t)
+    mt.merge(spark, t, upd, ["k"], "v", conditional=True)
+    with open(mt._commit_path(t, 2)) as f:
+        assert "schema" in json.load(f)
+    snap, _ = mt.snapshot(spark, t)
+    assert {r.k: (r.v, r.extra) for r in snap.collect()} == expected
+
+
+@pytest.mark.parametrize("conditional", [True, False])
+def test_merge_job_count_guard(spark, tmp_path, conditional):
+    """A 5-row MERGE into a 2-file table — the benchmark's commit path —
+    starts at most 6 Spark jobs, conditional or not."""
+    t = str(tmp_path / "jobs")
+    seed = spark.range(40).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("v"),
+        F.lit(0).cast("long").alias("_ord"),
+    )
+    mt._write_seed(spark, t, seed.repartitionByRange(2, "k"))
+    assert len(mt._read_manifest(t, 1)) == 2
+    upd = _updates(
+        spark, [(1, 100, 1), (3, 300, 1), (5, 500, 1), (41, 410, 1), (42, 420, 1)]
+    )
+    jobs = _jobs_started(
+        spark,
+        f"merge_tx_job_guard_{conditional}",
+        lambda: mt.merge(spark, t, upd, ["k"], "_ord", conditional=conditional),
+    )
+    assert jobs <= 6
+    snap, _ = mt.snapshot(spark, t)
+    assert snap.count() == 42
+
+
+def _committer_cases(spark, t):
+    """(write, expected {k: v} after it) per table writer, for a table
+    seeded with ``_seed(n=12)`` (``write_seed``: an empty table;
+    ``restore_version``: the seed, then k=1 merged to -1)."""
+    seed = {k: 10 * k for k in range(12)}
+    return {
+        "plain_merge": (
+            lambda: mt.merge(
+                spark, t, _updates(spark, [(3, 33, 1), (42, 420, 1)]), ["k"], "_ord"
+            ),
+            {**seed, 3: 33, 42: 420},
+        ),
+        # ordered by v: 33 beats 30, 1 loses to 40
+        "conditional_merge": (
+            lambda: mt.merge(
+                spark,
+                t,
+                _updates(spark, [(3, 33, 1), (4, 1, 1), (42, 420, 1)]),
+                ["k"],
+                "v",
+                conditional=True,
+            ),
+            {**seed, 3: 33, 42: 420},
+        ),
+        "compact": (lambda: mt.compact(spark, t), seed),
+        "delete_where": (
+            lambda: mt.delete_where(spark, t, F.col("k") == 4),
+            {k: v for k, v in seed.items() if k != 4},
+        ),
+        "update_where": (
+            lambda: mt.update_where(spark, t, F.col("k") == 5, {"v": F.lit(-5)}),
+            {**seed, 5: -5},
+        ),
+        "write_seed": (
+            lambda: mt._write_seed(
+                spark, t, spark.range(12).select("id", F.col("id") * 10).toDF("k", "v")
+            ),
+            seed,
+        ),
+        "restore_version": (lambda: mt.restore_version(spark, t, 1), seed),
     }
+
+
+@pytest.mark.parametrize(
+    "committer",
+    [
+        "plain_merge",
+        "conditional_merge",
+        "compact",
+        "delete_where",
+        "update_where",
+        "write_seed",
+        "restore_version",
+    ],
+)
+def test_every_committer_survives_a_version_conflict(
+    spark, tmp_path, monkeypatch, committer
+):
+    """Each table writer's first commit attempt hits a VersionConflict: the
+    write lands at the next version with the right rows, and the failed
+    attempt leaves no data directory behind."""
+    t = str(tmp_path / committer)
+    if committer != "write_seed":
+        _seed(spark, t, n=12)
+    if committer == "restore_version":
+        mt.merge(spark, t, _updates(spark, [(1, -1, 1)]), ["k"], "_ord")
+    write, expected = _committer_cases(spark, t)[committer]
+    base = mt.current_version(t)
+    real_commit = mt._try_commit
+    attempts = []
+
+    def conflict_once(table_dir, version, files, **kw):
+        attempts.append(version)
+        if len(attempts) == 1:
+            raise mt.VersionConflict("injected")
+        return real_commit(table_dir, version, files, **kw)
+
+    monkeypatch.setattr(mt, "_try_commit", conflict_once)
+    assert write() == base + 1
+    assert attempts == [base + 1, base + 1]
+    snap, version = mt.snapshot(spark, t)
+    assert version == base + 1
+    assert {r.k: r.v for r in snap.collect()} == expected
+    referenced = {
+        os.path.dirname(f)
+        for v in range(1, version + 1)
+        for f in mt._read_manifest(t, v)
+    }
+    data = os.path.join(t, "data")
+    assert {os.path.join(data, d) for d in os.listdir(data)} == referenced
 
 
 def test_every_committer_records_schema(spark, tmp_path):

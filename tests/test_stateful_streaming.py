@@ -1,13 +1,10 @@
-"""Custom stateful streaming (applyInPandasWithState) + foreachBatch upsert
-sink — the two streaming escape hatches the driver contract names."""
+"""Custom stateful streaming: applyInPandasWithState and its
+transformWithStateInPandas twin."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gjenbruksstasjoner_kotid_estimering_spark.operators.upsert import (
-    foreach_batch_upserter,
-)
 from gjenbruksstasjoner_kotid_estimering_spark.streaming import file_stream as fs
 from gjenbruksstasjoner_kotid_estimering_spark.streaming.stateful import (
     stateful_station_tracker,
@@ -46,39 +43,6 @@ def test_stateful_tracker_matches_batch(spark, tmp_path):
     for uid, t in truth.items():
         assert got[uid].n_events == t.n_events
         assert got[uid].max_value == t.mx
-
-
-def test_foreach_batch_upsert_sink(spark, tmp_path):
-    target = str(tmp_path / "upsert_target")
-    stream = fs.read_events_stream(spark, SF).select(
-        "user_id", "event_type", "ts", "event_id", "value"
-    )
-    q = (
-        stream.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(
-            foreach_batch_upserter(
-                target,
-                key_cols=["user_id", "event_type"],
-                order_cols=["ts", "event_id"],
-            )
-        )
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.event_type): r.value
-        for r in spark.read.parquet(target).collect()
-    }
-    from gjenbruksstasjoner_kotid_estimering_spark import registry
-
-    truth = {
-        (r.user_id, r.event_type): r.last_value
-        for r in registry.all_specs()["upsert_last_write_wins"]
-        .builder(spark, SF)
-        .collect()
-    }
-    assert got == truth
 
 
 def test_transform_with_state_tracker_matches_batch(spark, tmp_path):
