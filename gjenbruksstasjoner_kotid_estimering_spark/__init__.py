@@ -1,15 +1,17 @@
 """PySpark-native analytics engine with the query/data-processing
 capabilities of the reference (oslokommune/gjenbruksstasjoner-kotid-estimering),
 re-expressed Spark-first: DataFrame/SQL logical plans optimized by Catalyst,
-pandas UDFs only on the genuinely non-relational (image/model) path.
+Python batches (pandas / Arrow) only for per-row work that is not relational:
+the image/model path and the corpus lane's LSH keys.
 
 Package layout:
 
 - ``session``   : SparkSession construction + runtime tuning knobs
 - ``io``        : parquet table loaders for the driver testdata layout
 - ``registry``  : QuerySpec registry binding each operator to (Spark builder,
-                  DuckDB oracle SQL) — the contract surface for
-                  ``__spark_entry__.py``
+                  DuckDB oracle SQL) — the oracle-checked query inventory
+                  that ``__spark_entry__.py`` and tests/test_correctness.py
+                  run
 - ``plans/``    : relational operator inventory (scan/filter/agg/join/window/
                   setops) — SURVEY.md §2 Part B
 - ``operators/``: composed operators the reference motivates (as-of interp

@@ -4,8 +4,9 @@ Exact dedup grounds in the reference's idempotency (Luigi skips work whose
 output exists, tasks.py:19-29 — i.e. the pipeline never produces two rows
 for the same (station, ts) input). The near-dup family (MinHash/SimHash)
 is the scale path for ~100 TB corpora where O(n²) comparison is impossible:
-shingle → hash → band → bucket-join, all with built-in functions
-(xxhash64, transform, aggregate) — no Python in the hot path.
+shingle → hash → band → bucket-join. ``dedup_ngram_jaccard`` derives each
+document's bigrams and band keys in one Arrow pass (``mapInArrow``) straight
+off the scan; the candidate join and the exact scoring stay in the JVM.
 
 - ``dedup_exact``      : representative row per duplicate key (oracle-checked)
 - ``dedup_fingerprint``: exact-text dedup via 64-bit rolling fingerprint —
@@ -18,6 +19,10 @@ shingle → hash → band → bucket-join, all with built-in functions
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -199,36 +204,86 @@ MH_BAND_SIZE = 3
 JACCARD_DUP_THRESHOLD = 0.5
 
 
-def md5_minhash_sigs(grams: DataFrame, n_hashes: int = MH_SEEDS) -> DataFrame:
-    """(doc_id, bigrams) → (doc_id, h0..h{n-1}): engine-portable MinHash.
+# Java's \s, which Spark's split(text, '\s+') splits on: ASCII whitespace
+# only (Python's \s would also match Unicode spaces).
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_MH_I = np.arange(MH_SEEDS, dtype=np.int64)
+_BYTE_SHIFTS = 8 * np.arange(6, -1, -1, dtype=np.int64)
 
-    ONE md5 per shingle; the hex digest splits into two 56-bit ints
-    (hex chars 1-14 and 17-30) and the per-seed hash family is
-    h_i = h1 + i·h2 (Kirsch-Mitzenmacher double hashing — the standard
-    derivation of k hash functions from one). 56-bit halves keep
-    h1 + 14·h2 < 2^60, so the arithmetic cannot overflow in either
-    engine (Spark ANSI mode and DuckDB both raise on BIGINT overflow).
 
-    Shape: explode shingles → project (md5 once per shingle) → hash-
-    aggregate of n ``min`` columns with map-side partial mins, so the
-    per-shingle work parallelizes across cores/executors. (A per-row HOF
-    fold measured 4-8× slower — higher-order lambdas don't codegen and
-    multi-reference projections re-duplicate the fold under
-    CollapseProject; hashing per (shingle, seed) was another ~5× of
-    avoidable md5 work.)
+def bigrams(text: str | None) -> list[str]:
+    """``shingles_col(text, k=2)`` for one document.
+
+    Tokens split as Spark's ``split(text, '\\s+')`` does (a leading or
+    trailing separator gives an empty token; '' and NULL give none), and
+    each distinct bigram is kept at its first occurrence, as
+    ``array_distinct`` does.
     """
-    exploded = grams.select("doc_id", F.explode("bigrams").alias("s"))
-    digest = F.md5(F.col("s"))
-    hashed = exploded.select(
-        "doc_id",
-        F.conv(F.substring(digest, 1, 14), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(digest, 17, 14), 16, 10).cast("long").alias("h2"),
-    )
-    return hashed.groupBy("doc_id").agg(
-        *[
-            F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"h{i}")
-            for i in range(n_hashes)
+    if not text:
+        return []
+    toks = _JAVA_WS.split(text)
+    return list(dict.fromkeys(map(" ".join, zip(toks, toks[1:]))))
+
+
+def band_keys(grams: list[list[str]]) -> list[list[str]]:
+    """Per document, the MH_BANDS md5 band keys of its engine-portable
+    MinHash signature (the ``sigs``/``bands`` CTEs of JACCARD_ORACLE_CTES).
+
+    ONE md5 per bigram; the hex digest splits into two 56-bit ints (hex
+    chars 1-14 and 17-30) and the per-seed hash family is h_i = h1 + i·h2
+    (Kirsch-Mitzenmacher double hashing — the standard derivation of k
+    hash functions from one). 56-bit halves keep h1 + 14·h2 < 2^60, so
+    int64 cannot overflow. Band b's key is md5 of its MH_BAND_SIZE
+    minima joined by ','. Every document needs at least one bigram.
+    """
+    if not grams:
+        return []
+    flat = [g for doc in grams for g in doc]
+    digests = b"".join(hashlib.md5(g.encode()).digest() for g in flat)
+    d = np.frombuffer(digests, np.uint8).reshape(-1, 16).astype(np.int64)
+    h1 = (d[:, 0:7] << _BYTE_SHIFTS).sum(axis=1)
+    h2 = (d[:, 8:15] << _BYTE_SHIFTS).sum(axis=1)
+    starts = np.cumsum([0] + [len(doc) for doc in grams[:-1]])
+    sigs = np.minimum.reduceat(h1[:, None] + _MH_I * h2[:, None], starts, axis=0)
+    return [
+        [
+            hashlib.md5(
+                ",".join(map(str, sig[b * MH_BAND_SIZE : (b + 1) * MH_BAND_SIZE])).encode()
+            ).hexdigest()
+            for b in range(MH_BANDS)
         ]
+        for sig in sigs.tolist()
+    ]
+
+
+def _doc_key_batches(batches):
+    """mapInArrow body: (doc_id, text) → (doc_id, bigrams, keys) for every
+    document with at least one bigram."""
+    import pyarrow as pa
+
+    strings = pa.list_(pa.string())
+    for batch in batches:
+        grams = [bigrams(t) for t in batch.column("text").to_pylist()]
+        keep = [i for i, g in enumerate(grams) if g]
+        grams = [grams[i] for i in keep]
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id").take(pa.array(keep, pa.int64())).cast(pa.int64()),
+                pa.array(grams, strings),
+                pa.array(band_keys(grams), strings),
+            ],
+            names=["doc_id", "bigrams", "keys"],
+        )
+
+
+def doc_keys(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, bigrams, keys): one Arrow pass.
+
+    No ``fan_out`` in front: the pass runs on the scan's own splits, so
+    one Python worker serves a one-split corpus and many splits give the
+    parallelism at scale."""
+    return docs.select("doc_id", "text").mapInArrow(
+        _doc_key_batches, "doc_id long, bigrams array<string>, keys array<string>"
     )
 
 
@@ -298,59 +353,22 @@ JACCARD_ORACLE_CTES = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t F
         SELECT doc_a, doc_b, jaccard FROM scored
         WHERE jaccard >= {JACCARD_DUP_THRESHOLD}
     """,
-    doc="Candidate-driven exact n-gram Jaccard dedup: md5-MinHash LSH "
-    "banding (engine-portable, so DuckDB derives the identical candidate "
-    "set) proposes pairs; exact bigram-set Jaccard is computed ONLY for "
+    doc="Candidate-driven exact n-gram Jaccard dedup: one Arrow pass "
+    "(mapInArrow) straight off the documents scan derives each document's "
+    "bigrams and md5-MinHash band keys (engine-portable, so DuckDB derives "
+    "the identical candidate set), materialized once; the band self-join "
+    "proposes pairs and exact bigram-set Jaccard is computed ONLY for "
     "candidates and thresholded at 0.5. No quadratic self-join anywhere — "
-    "the scale shape is signature shuffle + bucket-local join + candidate-"
-    "sized scoring joins.",
+    "the scale shape is a per-split Arrow pass + bucket-local join + "
+    "candidate-sized scoring joins.",
     tags=("dedup", "jaccard", "minhash", "lsh"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out BEFORE shingling: on a one-split scan every downstream
-    # higher-order-function projection (shingle build, per-shingle md5)
-    # would run in a single task (no-op at scale — see io.fan_out).
-    d = fan_out(load_table(spark, sf_dir, "documents"), keys=["doc_id"])
-    # Filter on token count, NOT on size(bigrams): a size(bigrams)>0 filter
-    # gets predicate-pushed below the repartition and drags the whole
-    # shingle expression into the single pre-shuffle task. A k=2 shingle
-    # array is empty iff the doc has < 2 tokens — same predicate as the
-    # oracle's len(bigrams) > 0, but only a cheap split() moves below the
-    # exchange.
-    # NOTE (r17): a localCheckpoint of this relation was tried (static plan
-    # shows the shingle Generate chain 4×) and REVERTED after an isolated
-    # sf0.1 A/B — caching the array-heavy bigram rows costs more in
-    # serialization/GC than the recompute saves (old 2.3–3.9s vs
-    # checkpointed 5.7–17.7s at matched steal): runtime ReusedExchange
-    # already deduplicates the identical aggregate subtrees.
-    grams = d.where(F.size(tokens_col(F.col("text"))) >= 2).select(
-        "doc_id", shingles_col(F.col("text"), k=2).alias("bigrams")
-    )
-    sigs = md5_minhash_sigs(grams)
-    # Band hashes reference the h* aggregate columns directly (cheap
-    # attribute refs — no expression re-duplication under CollapseProject).
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"h{b * MH_BAND_SIZE + j}")
-                                    for j in range(MH_BAND_SIZE)
-                                ],
-                            )
-                        ).alias("band_val"),
-                    )
-                    for b in range(MH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_val")
+    # One Arrow pass derives every document's bigrams and band keys; the
+    # candidate self-join and both scoring joins read that one
+    # materialized frame instead of re-deriving it per join side.
+    grams = doc_keys(load_table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
+    bands = grams.select("doc_id", F.posexplode("keys").alias("band_id", "band_val"))
     lb, rb = bands.alias("lb"), bands.alias("rb")
     cand = (
         lb.join(

@@ -20,6 +20,7 @@ variant (k-means coarse quantizer via MLlib) is the planned round-2 addition.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -210,62 +211,91 @@ PIVOT_BANDS_ORACLE_CTES = f"""base AS (
         )"""
 
 
-def _pivot_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+def pivot_bits(emb, pivots: list) -> np.ndarray:
+    """(rows, pivots) sign bits of ``_fold_dot(v, p) >= 0``, for a pyarrow
+    list array of vectors and a list of pivot vectors (float64 arrays, or
+    None for a NULL pivot).
+
+    The dot is the same left fold as ``_fold_dot``, starting from 0.0 and
+    adding one product at a time, vectorized across rows and pivots, so
+    every bit matches the Spark fold's IEEE result. As in Spark, a NULL
+    vector, a NULL element or a length mismatch makes the dot NULL (bit
+    0), and NaN counts as >= 0 because Spark orders NaN above every number.
+    """
+    offs = emb.offsets.to_numpy()
+    lens = np.diff(offs)
+    vals = emb.values
+    flat = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+    nulls = np.concatenate([[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
+    ok = emb.is_valid().to_numpy(zero_copy_only=False) & (nulls[offs[1:]] == nulls[offs[:-1]])
+    bits = np.zeros((len(emb), len(pivots)), dtype=bool)
+    for n in np.unique(lens[ok]):
+        cols = [j for j, p in enumerate(pivots) if p is not None and len(p) == n]
+        if not cols:
+            continue
+        rows = np.flatnonzero(ok & (lens == n))
+        v = flat[offs[rows][:, None] + np.arange(n)]
+        p = np.stack([pivots[j] for j in cols]).reshape(len(cols), n)
+        acc = np.zeros((len(rows), len(cols)))
+        for j in range(n):
+            acc = acc + v[:, j, None] * p[None, :, j]
+        bits[np.ix_(rows, cols)] = (acc >= 0) | np.isnan(acc)
+    return bits
 
 
-def _pivot_bands(base: DataFrame) -> DataFrame:
-    """(vec_id, band_id, band_val) pivot-sign LSH bands (Spark twin of
-    PIVOT_BANDS_ORACLE_CTES's ``bands``)."""
-    pivots = (
-        base.where(F.col("vec_id") < N_PIVOTS)
-        .groupBy()
-        .agg(
-            F.sort_array(F.collect_list(F.struct("vec_id", "v"))).alias("pv")
-        )
-        .select(F.transform("pv", lambda s: s["v"]).alias("pivots"))
-    )
-    bits = F.array_join(
-        F.transform(
-            "pivots",
-            lambda p: F.when(_fold_dot(F.col("v"), p) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            ),
-        ),
-        "",
-    )
-    bucketed = base.crossJoin(F.broadcast(pivots)).select(
-        "vec_id", bits.alias("bits")
-    )
-    # NOTE (r17): a localCheckpoint on the returned frame was tried and
-    # REVERTED — the candidate self-join's two sides are IDENTICAL
-    # subtrees, so runtime exchange reuse already evaluates the pivot
-    # fold once; a 5×-interleaved warm A/B at sf0.1 read no-cp ≤ cp on
-    # every repeat for both consumers (dedup_embedding_cosine 1.69 vs
-    # 1.83s min, similarity_knn_join 1.37 vs 1.54s min).
-    return bucketed.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.substring(
-                            "bits", b * PV_BAND_BITS + 1, PV_BAND_BITS
-                        ).alias("band_val"),
-                    )
-                    for b in range(PV_BANDS)
-                ]
+def _pivot_band_batches(pivots: list):
+    """mapInArrow body: (vec_id, embedding) → one (vec_id, band_id,
+    band_val) row per band, band_val being that band's slice of the
+    vector's pivot-sign bit string."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            bits = pivot_bits(batch.column("embedding"), pivots)
+            rows = pa.array(np.repeat(np.arange(len(bits)), PV_BANDS))
+            chars = np.where(bits, "1", "0")
+            vals = [
+                "".join(chars[i, b * PV_BAND_BITS : (b + 1) * PV_BAND_BITS])
+                for i in range(len(bits))
+                for b in range(PV_BANDS)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("vec_id").take(rows).cast(pa.int64()),
+                    pa.array(np.tile(np.arange(PV_BANDS, dtype=np.int32), len(bits))),
+                    pa.array(vals, pa.string()),
+                ],
+                names=["vec_id", "band_id", "band_val"],
             )
-        ).alias("band"),
-    ).select("vec_id", "band.band_id", "band.band_val")
+
+    return run
 
 
-def _pivot_normed(base: DataFrame) -> DataFrame:
-    return base.select(
-        "vec_id", "v", F.sqrt(_fold_dot(F.col("v"), F.col("v"))).alias("norm")
-    )  # no checkpoint: identical-subtree consumers, reuse covers it (r17 A/B)
+def _pivot_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, band_id, band_val) pivot-sign LSH bands (Spark twin of
+    PIVOT_BANDS_ORACLE_CTES's ``bands``), materialized once.
+
+    The N_PIVOTS pivots are collected once, in (vec_id, vector) order as
+    the oracle's ``list(v ORDER BY vec_id)``; one Arrow pass over the
+    embeddings scan computes every vector's bits against them."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    pivots = [
+        None if r.embedding is None or None in r.embedding
+        else np.array(r.embedding, dtype=np.float64)
+        for r in e.where(F.col("vec_id") < N_PIVOTS).orderBy("vec_id", "embedding").collect()
+    ]
+    bands = e.mapInArrow(
+        _pivot_band_batches(pivots), "vec_id long, band_id int, band_val string"
+    )
+    return bands.localCheckpoint(eager=False)
+
+
+def _pivot_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, norm): each vector in double with its ordered-fold norm."""
+    e = load_table(spark, sf_dir, "embeddings")
+    v = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+    return v.select("vec_id", "v", F.sqrt(_fold_dot(F.col("v"), F.col("v"))).alias("norm"))
 
 
 @register(
@@ -291,7 +321,9 @@ def _pivot_normed(base: DataFrame) -> DataFrame:
     """,
     doc="Candidate-driven embedding-cosine dedup: pivot-sign LSH (bucket "
     "bits = sign of dot with the 40 lowest-vec_id vectors, 5 bands × 8 "
-    "bits) proposes pairs; exact ordered-fold cosine is computed ONLY for "
+    "bits; the pivots are collected once and one Arrow pass computes "
+    "every vector's bits, materialized once for both join sides) "
+    "proposes pairs; exact ordered-fold cosine is computed ONLY for "
     "bucket-mates and thresholded. The pivots are data-derived and both "
     "engines fold the dot identically, so the candidate set itself is part "
     "of the oracle contract. No block-quadratic self-join — candidates "
@@ -299,8 +331,7 @@ def _pivot_normed(base: DataFrame) -> DataFrame:
     tags=("dedup", "similarity", "cosine", "lsh"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _pivot_base(spark, sf_dir)
-    bands = _pivot_bands(base)
+    bands = _pivot_bands(spark, sf_dir)
     lb, rb = bands.alias("lb"), bands.alias("rb")
     cand = (
         lb.join(
@@ -312,7 +343,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("lb.vec_id").alias("vec_a"), F.col("rb.vec_id").alias("vec_b"))
         .distinct()
     )
-    normed = _pivot_normed(base)
+    normed = _pivot_normed(spark, sf_dir)
     na, nb = normed.alias("na"), normed.alias("nb")
     scored = (
         cand.join(na, F.col("vec_a") == F.col("na.vec_id"))
@@ -369,7 +400,9 @@ KNN_K = 5
     f"vector (vec_id % {KNN_QUERY_MOD} == 0) at once — the many-query "
     "retrieval shape (RAG index eval, dedup-against-seed-set), vs "
     "similarity_topk's single probe. Pivot-sign LSH proposes bucket-mate "
-    "candidates (the same engine-portable contract as "
+    "candidates (one Arrow pass against the 40 collected pivots, "
+    "materialized once and read by both the broadcast query side and the "
+    "corpus side; the same engine-portable contract as "
     "dedup_embedding_cosine, so the candidate set itself is oracle-"
     "checked); exact ordered-fold cosine scores only candidates; per-query "
     "row_number (cosine desc, id tiebreak) keeps k. Scale shape: no "
@@ -380,8 +413,7 @@ KNN_K = 5
 def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    base = _pivot_base(spark, sf_dir)
-    bands = _pivot_bands(base)
+    bands = _pivot_bands(spark, sf_dir)
     is_query = F.col("vec_id") % KNN_QUERY_MOD == 0
     qb = bands.where(is_query).select(
         F.col("vec_id").alias("qid"), "band_id", "band_val"
@@ -396,7 +428,7 @@ def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", F.col("vec_id").alias("nid"))
         .distinct()
     )
-    normed = _pivot_normed(base)
+    normed = _pivot_normed(spark, sf_dir)
     na, nb = normed.alias("na"), normed.alias("nb")
     scored = (
         cand.join(na, F.col("qid") == F.col("na.vec_id"))

@@ -1,4 +1,4 @@
-"""Query registry: the contract surface behind ``__spark_entry__.py``.
+"""Query registry: the oracle-checked query inventory behind ``__spark_entry__.py``.
 
 Each implemented operator from SURVEY.md §2 registers a :class:`QuerySpec`
 binding a name to

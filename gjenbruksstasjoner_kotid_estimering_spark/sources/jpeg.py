@@ -1,9 +1,11 @@
 """Vendored pure-numpy baseline JPEG codec (decoder + minimal encoder).
 
 Why this exists: the reference's image lane decodes camera JPEGs with
-``cv2.imdecode`` (reference preprocess_image.py:52), but no JPEG codec is
-installed in this container, so the golden-fixture parity test for the
-decode path could never execute. This module implements the baseline
+``cv2.imdecode`` (reference preprocess_image.py:52), but neither OpenCV nor
+any other Python JPEG binding is a dependency of this package. A system
+libjpeg-turbo shared library (``libjpeg.so.62``) is commonly present, yet
+nothing here binds to it, so without this module the decode path could
+not run at all. This module implements the baseline
 sequential DCT process (ITU-T T.81 / ISO 10918-1) from the public spec —
 enough to decode the reference fixture
 (test/data/station_id_41_20200506T094000.jpg: SOF0, 8-bit, YCbCr 4:2:0)

@@ -23,7 +23,7 @@ JOIN_KINDS = [
     "BroadcastNestedLoopJoin",
     "CartesianProduct",
 ]
-PY_KINDS = ["ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas", "BatchEvalPython", "PythonUDTF"]
+PY_KINDS = ["ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas", "MapInArrow", "BatchEvalPython", "PythonUDTF"]
 
 
 def summarize(plan: str) -> dict:

@@ -1,12 +1,19 @@
 """Dedup-operator invariants: fingerprint exactness, MinHash-LSH candidate
-quality (identical docs always pair; dissimilar docs rarely do)."""
+quality (identical docs always pair; dissimilar docs rarely do), and the
+Arrow pass of dedup_ngram_jaccard against the Spark expressions it
+replaced."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gjenbruksstasjoner_kotid_estimering_spark.functions.text import fingerprint_col
+from gjenbruksstasjoner_kotid_estimering_spark.functions.text import fingerprint_col, tokens_col
 from gjenbruksstasjoner_kotid_estimering_spark.operators.dedup import (
+    MH_BAND_SIZE,
+    MH_BANDS,
+    MH_SEEDS,
+    bigrams,
+    doc_keys,
     minhash_signature_col,
     shingles_col,
 )
@@ -99,3 +106,79 @@ def test_simhash_invariants(spark):
     assert sigs[1] == sigs[2]
     assert hamming(sigs[1], sigs[3]) <= 12   # near-dup: small distance
     assert hamming(sigs[1], sigs[4]) >= 16   # unrelated: large distance
+
+
+# --- the Arrow pass of dedup_ngram_jaccard vs the Spark expressions -------
+
+# Java's \s set in every position: tabs, \x0b, \f, CR/LF; leading, trailing
+# and repeated separators; repeated bigrams; 1-token, empty and NULL text.
+# NBSP, EM SPACE and \x1c match Python's \s but not Java's, so they stay
+# inside a token.
+EDGE_TEXTS = [
+    "a\tb c",
+    "a\x0bb\fc",
+    "a\r\nb\rc\nd",
+    "  leading space",
+    "trailing space  ",
+    " \t both \r\n sides \x0b",
+    "rep  rep   rep\t\trep",
+    "x y x y x y z",
+    "the quick brown fox jumps over the lazy dog the quick brown fox",
+    "a b c d",
+    "nbsp\u00a0inside em\u2003space file\x1cseparator",
+    "one",
+    "",
+    " ",
+    "\t\n",
+    None,
+]
+
+
+def _edge_docs(spark):
+    return spark.createDataFrame(
+        list(enumerate(EDGE_TEXTS)), schema="doc_id long, text string"
+    )
+
+
+def test_bigrams_match_shingles_col(spark):
+    want = {
+        r.doc_id: r.g
+        for r in _edge_docs(spark)
+        .select("doc_id", shingles_col(F.col("text"), k=2).alias("g"))
+        .collect()
+    }
+    got = {i: bigrams(t) for i, t in enumerate(EDGE_TEXTS)}
+    assert got == want
+
+
+def test_band_keys_match_md5_column_expressions(spark):
+    """The Arrow pass's rows equal the md5 column expressions it replaced:
+    explode → md5 halves → min(h1 + i·h2) per seed → md5 per band."""
+    grams = (
+        _edge_docs(spark)
+        .where(F.size(tokens_col(F.col("text"))) >= 2)
+        .select("doc_id", shingles_col(F.col("text"), k=2).alias("bigrams"))
+    )
+    digest = F.md5(F.col("s"))
+    hashed = grams.select("doc_id", F.explode("bigrams").alias("s")).select(
+        "doc_id",
+        F.conv(F.substring(digest, 1, 14), 16, 10).cast("long").alias("h1"),
+        F.conv(F.substring(digest, 17, 14), 16, 10).cast("long").alias("h2"),
+    )
+    sigs = hashed.groupBy("doc_id").agg(
+        *[F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"h{i}") for i in range(MH_SEEDS)]
+    )
+    keys = sigs.select(
+        "doc_id",
+        F.array(
+            *[
+                F.md5(F.concat_ws(",", *[F.col(f"h{b * MH_BAND_SIZE + j}") for j in range(MH_BAND_SIZE)]))
+                for b in range(MH_BANDS)
+            ]
+        ).alias("keys"),
+    )
+    want = {r.doc_id: (r.bigrams, r.keys) for r in grams.join(keys, "doc_id").collect()}
+    got = {r.doc_id: (r.bigrams, r.keys) for r in doc_keys(_edge_docs(spark)).collect()}
+    assert got == want
+    # whitespace-only text splits into two empty tokens: one bigram " "
+    assert sorted(got) == [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 13, 14]

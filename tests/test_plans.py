@@ -7,6 +7,8 @@ these tests pin the plan shapes SURVEY.md §4 calls for.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from gjenbruksstasjoner_kotid_estimering_spark import registry
@@ -15,7 +17,10 @@ SF = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name: str) -> str:
-    df = registry.all_specs()[name].builder(spark, SF)
+    return _plan_of(spark, registry.all_specs()[name].builder(spark, SF))
+
+
+def _plan_of(spark, df) -> str:
     jqe = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -187,6 +192,40 @@ def test_knn_join_broadcasts_query_bands(spark):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "WindowGroupLimit" in plan  # rank<=k prunes per-partition
+
+
+PY_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _checkpoint_reads(plan: str) -> list[str]:
+    return re.findall(r"MapPartitionsRDD\[\d+\] at localCheckpoint", plan)
+
+
+def test_ngram_jaccard_one_arrow_pass_then_equi_join(spark):
+    from gjenbruksstasjoner_kotid_estimering_spark.io import load_table
+    from gjenbruksstasjoner_kotid_estimering_spark.operators.dedup import doc_keys
+
+    # the one Python boundary: a MapInArrow straight on the scan, with no
+    # round-robin (or any other) exchange in front of it
+    keys_plan = _plan_of(spark, doc_keys(load_table(spark, SF, "documents")))
+    assert keys_plan.count("MapInArrow (") == 1, keys_plan
+    assert "Exchange" not in keys_plan, keys_plan
+    # the operator reads that pass once materialized: no Python node is
+    # left to re-run it per join side, and candidates come from an equi-join
+    plan = _plan(spark, "dedup_ngram_jaccard")
+    assert not [n for n in PY_NODES if n in plan], plan
+    reads = _checkpoint_reads(plan)
+    assert len(reads) >= 2 and len(set(reads)) == 1, plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_knn_join_runs_the_pivot_pass_once(spark):
+    plan = _plan(spark, "similarity_knn_join")
+    assert not [n for n in PY_NODES if n in plan], plan
+    # the query (broadcast) and corpus sides read one materialized band frame
+    reads = _checkpoint_reads(plan)
+    assert len(reads) == 2 and len(set(reads)) == 1, plan
 
 
 def test_chunker_has_no_shuffle(spark):
