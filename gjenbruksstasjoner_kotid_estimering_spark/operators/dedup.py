@@ -303,7 +303,12 @@ _MH_BAND_SELECTS = "\n          UNION ALL ".join(
 # body: dedup_ngram_jaccard's oracle selects from it directly, and
 # operators/clusters.py extends it with a recursive-CTE connected
 # components so the cluster assignment is oracle-checked end-to-end.
-JACCARD_ORACLE_CTES = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+# Tokens split on Java's \s set, as the operator's split(text, '\s+') does;
+# RE2's \s lacks \x0B, so the class is spelled out.
+JACCARD_ORACLE_CTES = f"""toks AS (
+          SELECT doc_id, regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+') AS t
+          FROM documents
+        ),
         grams AS (
           SELECT doc_id,
                  list_distinct(list_filter(

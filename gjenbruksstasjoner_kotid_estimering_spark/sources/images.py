@@ -14,16 +14,16 @@ conv-base featurize → flat float32 vector. Spark-first restatement:
   preprocess_image.py:195, inverted). ROI mask/crop/normalize are real
   numpy re-expressions of the reference semantics; they run on whatever the
   decoder yields.
-- **Decode/featurize are pluggable**: ``jpeg_decoder()`` is a REAL JPEG
-  decode — cv2 when installed, else the vendored pure-numpy baseline codec
-  (sources/jpeg.py) — so the reference fixture decodes end-to-end even in
-  codec-less containers. VGG16 weights are not in this container (the
-  reference's .h5 blobs are absent too, .MISSING_LARGE_BLOBS:1-3):
-  ``default_featurizer`` is a deterministic patch-mean pooler with the real
-  output contract (flat float32); ``default_decoder`` remains the cheap
-  deterministic fake for plumbing-only tests. Swap in keras callables in a
-  full container — the Spark plumbing (schema, batching, partitioning) is
-  identical.
+- **Decode/featurize are pluggable**: ``jpeg_decoder()``, the default, is
+  a REAL JPEG decode — the system libjpeg through sources/jpeg.py's C
+  shim, the ISLOW decode cv2.imdecode runs — with cv2's IMREAD_COLOR
+  contract (3 channels, BGR). A frame that fails to decode fails its
+  batch with a ValueError that names the frame's path. VGG16 weights are
+  not in this container (the reference's .h5 blobs are absent too,
+  .MISSING_LARGE_BLOBS:1-3): ``default_featurizer`` is a deterministic
+  patch-mean pooler with the real output contract (flat float32). Swap in
+  a keras callable in a full container — the Spark plumbing (schema,
+  batching, partitioning) is identical.
 - **Sink**: features persist as parquet ``array<float>`` (no pickle —
   reference preprocess_image.py:139-151), partitionable by station_id.
 
@@ -70,23 +70,6 @@ features_schema = StructType(
         StructField("features", ArrayType(FloatType())),
     ]
 )
-
-
-def default_decoder(content: bytes, h: int = RAW_H, w: int = RAW_W) -> np.ndarray:
-    """DETERMINISTIC FAKE decode (no JPEG codec in this container).
-
-    Tiles the raw bytes into an uint8 H×W×3 array — stable for identical
-    bytes, preserving the "binary → ndarray" contract of cv2.imdecode
-    (reference preprocess_image.py:52). Replace with
-    ``lambda b: cv2.imdecode(np.frombuffer(b, np.uint8), cv2.IMREAD_COLOR)``
-    in a codec-equipped container.
-    """
-    need = h * w * 3
-    buf = np.frombuffer(content, dtype=np.uint8)
-    if buf.size == 0:
-        buf = np.zeros(1, dtype=np.uint8)
-    reps = -(-need // buf.size)  # ceil-divide
-    return np.tile(buf, reps)[:need].reshape(h, w, 3)
 
 
 def _point_in_polygon(ys: np.ndarray, xs: np.ndarray, poly: np.ndarray) -> np.ndarray:
@@ -163,36 +146,20 @@ def default_featurizer(image: np.ndarray) -> np.ndarray:
     return pooled.astype(np.float32).flatten()[:FEATURE_LEN]
 
 
-def cv2_decoder() -> Callable[[bytes], np.ndarray]:
-    """cv2-backed JPEG decoder (reference preprocess_image.py:52
-    cv2.imdecode). Raises ImportError where OpenCV is absent — use
-    :func:`jpeg_decoder` for the always-available real-decode path."""
-    import cv2  # noqa: F401 — optional dependency, absent in this container
+def jpeg_decoder() -> Callable[[bytes], np.ndarray]:
+    """REAL JPEG decoder with the cv2.imdecode(IMREAD_COLOR) contract
+    (reference preprocess_image.py:52): bytes → uint8 BGR ndarray, a
+    grayscale stream as 3 identical channels; damaged bytes raise
+    ValueError. Decodes through the system libjpeg (sources/jpeg.py)."""
+    from . import jpeg
 
     def decode(content: bytes) -> np.ndarray:
-        return cv2.imdecode(np.frombuffer(content, np.uint8), cv2.IMREAD_COLOR)
+        img = jpeg.decode(content)
+        if img.ndim == 2:
+            img = np.dstack([img, img, img])
+        return img
 
     return decode
-
-
-def jpeg_decoder() -> Callable[[bytes], np.ndarray]:
-    """REAL JPEG decoder, always constructible: cv2 when installed, else
-    the vendored pure-numpy baseline codec (sources/jpeg.py — same
-    bytes → uint8 BGR ndarray contract as cv2.imdecode, reference
-    preprocess_image.py:52). This is what lets the golden-fixture decode
-    parity test execute in codec-less containers."""
-    try:
-        return cv2_decoder()
-    except ImportError:
-        from . import jpeg
-
-        def decode(content: bytes) -> np.ndarray:
-            img = jpeg.decode(content)
-            if img.ndim == 2:  # grayscale: cv2 IMREAD_COLOR yields 3ch
-                img = np.dstack([img, img, img])
-            return img
-
-        return decode
 
 
 def vgg16_featurizer() -> Callable[[np.ndarray], np.ndarray]:
@@ -215,9 +182,8 @@ def vgg16_featurizer() -> Callable[[np.ndarray], np.ndarray]:
 
 
 def real_lane_available() -> bool:
-    """True iff the optional cv2 + keras/VGG16 path can be constructed."""
+    """True iff the optional keras/VGG16 featurizer can be constructed."""
     try:
-        import cv2  # noqa: F401
         from tensorflow.keras.applications import VGG16  # noqa: F401
     except Exception:
         return False
@@ -245,22 +211,26 @@ def with_path_metadata(images: DataFrame, ext: str = "jpg") -> DataFrame:
 
 def preprocess_images(
     images: DataFrame,
-    decoder: Callable[[bytes], np.ndarray] = default_decoder,
+    decoder: Callable[[bytes], np.ndarray] | None = None,
     featurizer: Callable[[np.ndarray], np.ndarray] = default_featurizer,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """binaryFile rows → feature rows in one Arrow-batched pass.
 
-    The whole reference preprocess chain (mask → crop → normalize →
-    featurize, preprocess_image.py:198-205) runs per partition inside
-    ``mapInPandas`` — batch-at-a-time, decoder/featurizer constructed once
-    per worker.
+    The whole reference preprocess chain (decode → mask → crop →
+    normalize → featurize, preprocess_image.py:198-205) runs per
+    partition inside ``mapInPandas`` — batch-at-a-time, decoder/featurizer
+    constructed once per worker. ``decoder`` defaults to
+    :func:`jpeg_decoder`; a frame it rejects fails the batch with a
+    ValueError that starts with the frame's path.
 
     ``n_partitions``: small-file corpora pack into few input splits
     (maxPartitionBytes), starving the CPU-bound UDF; set this to fan the
     compute out (the tiny binary payloads reshuffle cheaply). Leave None
     when the source layout already yields enough splits.
     """
+    if decoder is None:
+        decoder = jpeg_decoder()
     with_meta = with_path_metadata(images).select(
         "path", "station_id", "epoch", "content"
     )
@@ -270,8 +240,11 @@ def preprocess_images(
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
-            for content in pdf["content"]:
-                img = decoder(bytes(content))
+            for path, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    img = decoder(bytes(content))
+                except ValueError as e:
+                    raise ValueError(f"{path}: {e}") from e
                 img = mask_outside_roi(img)
                 img = crop_to_roi_bbox(img)
                 img = normalize(img)
@@ -289,9 +262,10 @@ def preprocess_images(
 
 
 _PIPELINE_FRAMES = 6
-_PIPELINE_W = 128  # narrower than the camera's 1280 to keep the pure-
-# numpy codec cost at fixture scale; the ROI geometry still applies (the
-# bbox slice clips to frame width, same numpy semantics at any W ≥ 1)
+_PIPELINE_W = 128  # narrower than the camera's 1280 to keep the
+# per-frame numpy work (ROI mask, crop, featurize) at fixture scale; the
+# ROI geometry still applies (the bbox slice clips to frame width, same
+# numpy semantics at any W ≥ 1)
 
 _PIPELINE_STATS_SCHEMA = StructType(
     [
@@ -385,11 +359,11 @@ def pipeline_stats(
     oracle=None,  # decode/featurize are numpy-side → rows-only by design
     doc="The reference's core business lane END-TO-END with real codec "
     "work: deterministic synthetic frames are ENCODED to real baseline "
-    "JPEGs (sources/jpeg.py, the vendored T.81 codec), land in a "
+    "JPEGs (the test encoder in sources/jpeg.py), land in a "
     "hermetic scratch dir, are scanned via binaryFile with filename "
     "metadata parsed JVM-side (station_id/epoch, reference "
     "estimate_queue.py:31-61), then one mapInPandas pass runs REAL JPEG "
-    "decode → paint-outside-ROI white → bbox crop → normalize → "
+    "decode (the system libjpeg, as cv2.imdecode) → paint-outside-ROI white → bbox crop → normalize → "
     "featurize (reference preprocess_image.py:198-205) and emits "
     "per-image scalar stats (shapes, exact pixel checksum, feature "
     "norm). The only Python in the plan is the single declared "
@@ -584,7 +558,8 @@ def _phash_fixture_frame(i: int, variant: int) -> np.ndarray:
     "Measured margins on the fixture: edit pairs ≤2 bits, distinct "
     "frames ≥5, threshold 3 — exactly the six planted pairs come out "
     "(tests/test_images.py pins pairs and margins). Deterministic "
-    "end-to-end: hash-keyed frames, vendored codec, no RNG.",
+    "end-to-end: hash-keyed frames, test encoder + system libjpeg "
+    "decode, no RNG.",
     tags=("multimodal", "image", "dedup", "lsh", "phash"),
 )
 def multimodal_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,8 +651,9 @@ def image_tiles(
     oracle=None,  # real JPEG decode is numpy-side → rows-only by design
     doc="ViT-style patch extraction over real JPEGs: the same "
     "deterministic synthetic frames as image_pipeline_stats are "
-    "encoded with the vendored T.81 codec, scanned via binaryFile, "
-    "and ONE mapInPandas pass decodes each frame and explodes it into "
+    "encoded with the test encoder of sources/jpeg.py, scanned via "
+    "binaryFile, and ONE mapInPandas pass decodes each frame (the system "
+    "libjpeg, as cv2.imdecode) and explodes it into "
     "16x16 patches with exact integer checksums and per-channel sums "
     "— 1 row in, ceil(240/16)*ceil(128/16)=120 rows out, fan-out "
     "executor-side. tests/test_media.py pins conservation (tile "

@@ -1,55 +1,31 @@
-"""Vendored pure-numpy baseline JPEG codec (decoder + minimal encoder).
+"""JPEG codec of the image lane: decode through the system libjpeg, and
+a minimal baseline encoder for tests.
 
-Why this exists: the reference's image lane decodes camera JPEGs with
-``cv2.imdecode`` (reference preprocess_image.py:52), but neither OpenCV nor
-any other Python JPEG binding is a dependency of this package. A system
-libjpeg-turbo shared library (``libjpeg.so.62``) is commonly present, yet
-nothing here binds to it, so without this module the decode path could
-not run at all. This module implements the baseline
-sequential DCT process (ITU-T T.81 / ISO 10918-1) from the public spec —
-enough to decode the reference fixture
-(test/data/station_id_41_20200506T094000.jpg: SOF0, 8-bit, YCbCr 4:2:0)
-and any other baseline JPEG — so the REAL decode → mask → crop →
-normalize chain runs end-to-end in tests.
+The reference's image lane decodes camera JPEGs with ``cv2.imdecode``
+(reference preprocess_image.py:52), which runs libjpeg's ISLOW decoder.
+No JPEG binding is a dependency of this package, so ``decode`` calls
+libjpeg(-turbo) through a small C shim (``_jpeg_shim.c``): the stream is
+read from memory with ``jpeg_mem_src``, decoded with ``JDCT_ISLOW`` and
+libjpeg's default (triangular) chroma upsampling as cv2 does, and the
+scanlines go straight into a numpy buffer — BGR for color
+(``JCS_EXT_BGR``, the ``cv2.imdecode(..., IMREAD_COLOR)`` channel
+order), (H, W) for grayscale. Every stream libjpeg accepts decodes, progressive
+ones included.
 
-Decoder scope (everything the baseline process requires):
-- markers: SOI/APPn/COM/DQT/SOF0/SOF1/DHT/DRI/SOS/RSTn/EOI
-- entropy decoding in the libjpeg-turbo manner: the entropy-coded data
-  is un-stuffed (FF00 → FF) once and split at RSTn markers, one segment
-  per restart interval (DC predictors reset per segment); a 32-bit-plus
-  bit window is refilled 4 bytes at a time with ``int.from_bytes``
-- Huffman decoding through 16-bit lookahead tables (``_lookahead``), one
-  per distinct DHT table, built on first use and cached per process
-  (about 0.6 MB each): when code length + magnitude bits ≤ 16 a single
-  lookup yields the bits consumed, the zero run and the EXTENDed value,
-  so most coefficients cost one lookup; longer symbols take a slow path
-- coefficients gathered as (flat index, value) pairs and written into
-  one coefficient buffer with a single fancy-index assignment
-- vectorized dequantize + de-zigzag + 2-D IDCT (separable 8×8 DCT basis,
-  float64, ``_A.T @ blocks @ _A`` per component — the per-block work
-  never touches the Python interpreter)
-- chroma upsampling by sample replication; JFIF YCbCr→BGR (BGR channel
-  order to match the ``cv2.imdecode(..., IMREAD_COLOR)`` contract the
-  image lane's decoder slot expects)
+The shim is compiled on first use with ``gcc ... -ljpeg`` into a per-user
+cache dir (``$XDG_CACHE_HOME`` or ``~/.cache``), named by the sha256 of
+its source, and loaded with ctypes, which releases the GIL during the
+call. A missing gcc or missing libjpeg headers fail with an error that
+names them.
 
-Out of scope (raise ValueError): progressive (SOF2), arithmetic coding,
-hierarchical, 12-bit precision. Camera/webcam output — the reference's
-input domain — is overwhelmingly baseline.
-
-Damaged input raises ValueError, never pads silently: a scan whose
-decoding consumes a bit past the end of its entropy-coded data
-(truncated upload, missing restart interval), an invalid Huffman code,
-or an AC run past coefficient 63. Peeking past the end is fine — the
-last symbols of a valid scan do.
-
-Exactness: Huffman decoding, dequantization and the DC path are exact;
-the float IDCT + rounding may differ from libjpeg's fixed-point islow
-IDCT by ±1 LSB on some AC-heavy pixels (both are conforming decoders —
-T.81 Annex K gives an accuracy band, not one canonical output). Tests
-therefore assert analytic exactness on DC-only images, near-lossless
-round-trips through the encoder, and committed sha256 fingerprints of
-this decoder's output on seeded frames (4:4:4, 4:2:2, 4:2:0, grayscale,
-restart intervals) so any decoder drift is caught.
+Damaged input raises ValueError, never pads silently: every libjpeg
+warning is fatal. The message starts with ``truncated`` (the data ends
+before the scan does), ``not a JPEG`` (no SOI marker) or ``corrupt``
+(anything else, e.g. a bad Huffman code, a missing restart marker, or
+entropy-coded data left over after the last block), then libjpeg's own
+text. A stream cut only at its EOI marker still decodes: every scan bit
+is there. As in cv2.imdecode, an AC run past coefficient 63 lands on
+coefficient 63 instead of failing.
 
 The encoder exists for tests only: baseline, 4:4:4 by default or 4:2:2 /
 4:2:0 chroma subsampling (box-averaged), optional restart intervals,
@@ -57,13 +33,15 @@ Annex K quantization tables scaled by an IJG-style quality factor, Annex
 K "typical" Huffman tables. It lets the suite construct real JPEG bytes
 from known pixel arrays without any external codec.
 """
-
 from __future__ import annotations
 
+import ctypes
 import functools
-import itertools
-import re
-from array import array
+import hashlib
+import os
+import shutil
+import subprocess
+import tempfile
 
 import numpy as np
 
@@ -79,7 +57,7 @@ ZIGZAG = np.array(
     dtype=np.int64,
 )
 
-# 8×8 DCT-II basis: A[k, n] = c(k)/2 * cos((2n+1)kπ/16); IDCT is Aᵀ X A.
+# 8×8 DCT-II basis: A[k, n] = c(k)/2 * cos((2n+1)kπ/16); the DCT is A X Aᵀ.
 def _dct_basis() -> np.ndarray:
     k = np.arange(8).reshape(8, 1)
     n = np.arange(8).reshape(1, 8)
@@ -161,301 +139,93 @@ AC_CHROMA_VALS = [
 ]
 
 
-# ----------------------------------------------------------- huffman dec
-
-_UNZIGZAG = np.argsort(ZIGZAG)  # natural index j ← zigzag position
-_M64 = (1 << 64) - 1
-# the next marker that ends the entropy-coded data (not FF00, not RSTn)
-_SCAN_END = re.compile(rb"\xff(?![\x00\xd0-\xd7])")
-_RST = re.compile(rb"\xff[\xd0-\xd7]")
-
-
-@functools.lru_cache(maxsize=32)
-def _lookahead(bits: bytes, vals: bytes, ac: bool) -> tuple[tuple, ...]:
-    """16-bit lookahead table of one DHT table (T.81 C.2 canonical codes).
-
-    Entry ``lut[p]`` for the next 16 bits ``p`` of the stream:
-
-    - DC: ``(n, diff)`` — consume ``n`` = code + magnitude bits, the DC
-      difference already EXTENDed;
-    - AC: ``(n, run, value)`` — a coefficient ``value`` (never 0) after
-      ``run`` zeros; ``value == 0`` marks ZRL (``run`` 16) or EOB (``run``
-      64, which ends the block);
-    - ``n == 0`` marks the slow path, taken when code + magnitude bits
-      exceed 16: the middle field is ``(code length << 8) | symbol``, or
-      −1 when no code matches ``p`` (an invalid code).
-
-    Entries are shared tuples, so a table costs one 64k tuple of pointers.
-    Cached per process, keyed by the DHT payload."""
-    if sum(bits) > len(vals):
-        raise ValueError("invalid Huffman table")
-    invalid = (0, -1, 0) if ac else (0, -1)
-    entries = [invalid]
-    index = np.zeros(1 << 16, dtype=np.intp)
-    code, k = 0, 0
-    for ll in range(1, 17):
-        for _ in range(bits[ll - 1]):
-            if code >= 1 << ll:
-                raise ValueError("invalid Huffman table")
-            sym = vals[k]
-            run, s = (sym >> 4, sym & 15) if ac else (0, sym)
-            if s > 15:
-                raise ValueError(f"DC symbol {sym} out of range")
-            if ll + s > 16:
-                entries.append((0, ll << 8 | sym, 0) if ac else (0, ll << 8 | sym))
-                lo = code << (16 - ll)
-                index[lo : lo + (1 << (16 - ll))] = len(entries) - 1
-            else:
-                free = 16 - ll - s
-                for m in range(1 << s):
-                    v = _extend(m, s) if s else 0
-                    if not ac:
-                        entries.append((ll + s, v))
-                    elif s:
-                        entries.append((ll + s, run, v))
-                    else:  # ZRL; any other s=0 symbol ends the block like EOB
-                        entries.append((ll, 16 if run == 15 else 64, 0))
-                    lo = ((code << s) | m) << free
-                    index[lo : lo + (1 << free)] = len(entries) - 1
-            code += 1
-            k += 1
-        code <<= 1
-    return tuple(map(entries.__getitem__, index.tolist()))
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map an s-bit magnitude to its signed value."""
-    return v - ((1 << s) - 1) if v < (1 << (s - 1)) else v
-
-
-def _truncated() -> ValueError:
-    return ValueError("truncated scan: entropy-coded data ends mid-block")
-
-
-def _decode_segment(seg: bytes, blocks: list[tuple], ncomp: int,
-                    idx: array, val: array) -> None:
-    """Decode one restart interval (un-stuffed bytes) into (flat index,
-    value) pairs, zigzag order within each 64-slot block.
-
-    The bit window ``buf`` keeps ``nb`` valid low bits and is refilled 4
-    bytes at a time whenever fewer than 32 remain, so one symbol (≤ 16
-    code + ≤ 15 magnitude bits) never needs a second refill. The segment
-    is zero-padded for peeking; consuming a bit past its real end raises
-    (checked at every refill and once at the end)."""
-    nbits = len(seg) * 8
-    data = seg + bytes(8)
-    from_bytes = int.from_bytes
-    put_idx, put_val = idx.append, val.append
-    buf = nb = pos = 0
-    pred = [0] * ncomp
-    for base, ci, dct, act in blocks:
-        if nb < 32:
-            if pos * 8 - nb > nbits:
-                raise _truncated()
-            buf = ((buf << 32) | from_bytes(data[pos : pos + 4], "big")) & _M64
-            pos += 4
-            nb += 32
-        n, v = dct[(buf >> (nb - 16)) & 0xFFFF]
-        if n:
-            nb -= n
-        elif v < 0:
-            raise ValueError("invalid Huffman code")
-        else:
-            nb -= v >> 8
-            s = v & 0xFF
-            nb -= s
-            v = _extend((buf >> nb) & ((1 << s) - 1), s)
-        v += pred[ci]
-        pred[ci] = v
-        put_idx(base)
-        put_val(v)
-        k = 1
-        while k < 64:
-            if nb < 32:
-                if pos * 8 - nb > nbits:
-                    raise _truncated()
-                buf = ((buf << 32) | from_bytes(data[pos : pos + 4], "big")) & _M64
-                pos += 4
-                nb += 32
-            n, r, v = act[(buf >> (nb - 16)) & 0xFFFF]
-            if v:
-                nb -= n
-                k += r
-                if k > 63:
-                    raise ValueError("AC index overflow")
-                put_idx(base + k)
-                put_val(v)
-                k += 1
-            elif n:  # ZRL / EOB
-                nb -= n
-                k += r
-            elif r < 0:
-                raise ValueError("invalid Huffman code")
-            else:
-                nb -= r >> 8
-                s = r & 15
-                nb -= s
-                k += (r >> 4) & 15
-                if k > 63:
-                    raise ValueError("AC index overflow")
-                put_idx(base + k)
-                put_val(_extend((buf >> nb) & ((1 << s) - 1), s))
-                k += 1
-    if pos * 8 - nb > nbits:
-        raise _truncated()
-
-
 # --------------------------------------------------------------- decoder
+
+_SHIM_C = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_jpeg_shim.c")
+_SHIM_CLASSES = {1: "truncated", 2: "not a JPEG", 3: "corrupt"}
+_MSG_LEN = 200  # libjpeg's JMSG_LENGTH_MAX
+
+
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "gjenbruksstasjoner_kotid_estimering_spark")
+
+
+def _build_shim(cache_dir: str) -> str:
+    """Path of the compiled shim in ``cache_dir``, compiling it first when
+    absent. The file is named by the sha256 of the C source and written
+    with an atomic rename, so processes that build at once each load a
+    whole library and one file remains. The cache is per user, not under
+    the temp dir, which a run may point at a directory it deletes."""
+    with open(_SHIM_C, "rb") as f:
+        so = os.path.join(cache_dir, hashlib.sha256(f.read()).hexdigest() + ".so")
+    if os.path.exists(so):
+        return so
+    cc = shutil.which("gcc")
+    if cc is None:
+        raise RuntimeError("JPEG decoding needs gcc on PATH to build its libjpeg shim")
+    os.makedirs(cache_dir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(suffix=".so.tmp", dir=cache_dir)
+    os.close(fd)
+    try:
+        done = subprocess.run(
+            [cc, "-O2", "-shared", "-fPIC", "-o", tmp, _SHIM_C, "-ljpeg"],
+            capture_output=True, text=True,
+        )
+        if done.returncode:
+            missing = ("jpeglib.h" if "jpeglib.h" in done.stderr
+                       else "libjpeg" if "-ljpeg" in done.stderr else None)
+            need = (f"the libjpeg development files ({missing} not found)"
+                    if missing else "a working gcc")
+            raise RuntimeError(
+                f"JPEG decoding needs {need} to build its libjpeg shim:\n"
+                + done.stderr.strip()
+            )
+        os.replace(tmp, so)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    return so
+
+
+@functools.cache
+def _shim() -> ctypes.CDLL:
+    """The libjpeg shim, built on first use and loaded once per process.
+    ctypes releases the GIL for the length of each call."""
+    lib = ctypes.CDLL(_build_shim(_cache_dir()))
+    lib.jshim_decode.argtypes = [
+        ctypes.c_char_p, ctypes.c_ulong, ctypes.c_void_p, ctypes.c_ulong,
+        ctypes.POINTER(ctypes.c_int), ctypes.c_char_p,
+    ]
+    lib.jshim_decode.restype = ctypes.c_int
+    return lib
+
+
+def _run_shim(data: bytes, out: np.ndarray | None, dims) -> None:
+    """One shim call: the header alone into ``dims`` when ``out`` is None,
+    else the pixels into ``out`` (C-contiguous, exactly the image's size)."""
+    msg = ctypes.create_string_buffer(_MSG_LEN)
+    code = _shim().jshim_decode(
+        data, len(data), None if out is None else out.ctypes.data,
+        0 if out is None else out.nbytes, dims, msg,
+    )
+    if code:
+        raise ValueError(f"{_SHIM_CLASSES[code]}: {msg.value.decode(errors='replace')}")
 
 
 def decode(data: bytes) -> np.ndarray:
-    """Baseline JPEG bytes → uint8 ndarray, BGR channel order for color
-    (the cv2.imdecode contract), (H, W) for grayscale."""
-    if len(data) < 4 or data[0] != 0xFF or data[1] != 0xD8:
-        raise ValueError("not a JPEG (missing SOI)")
-    qt: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, tuple] = {}
-    huff_ac: dict[int, tuple] = {}
-    restart_interval = 0
-    frame = None  # (h, w, comps) where comps = [(cid, hs, vs, tq)]
-    i = 2
-    while i < len(data):
-        if data[i] != 0xFF:
-            raise ValueError(f"marker expected at {i}")
-        m = data[i + 1]
-        if m == 0xD8 or m == 0x01 or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        if m == 0xD9:  # EOI
-            break
-        seg_len = (data[i + 2] << 8) | data[i + 3]
-        seg = data[i + 4 : i + 2 + seg_len]
-        if m == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 15
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                qt[tq] = np.frombuffer(
-                    seg[p + 1 : p + 65], dtype=np.uint8
-                ).astype(np.int64)
-                p += 65
-        elif m in (0xC0, 0xC1):  # SOF0 / SOF1 (both baseline-huffman DCT)
-            if seg[0] != 8:
-                raise ValueError("only 8-bit precision supported")
-            h = (seg[1] << 8) | seg[2]
-            w = (seg[3] << 8) | seg[4]
-            nc = seg[5]
-            comps = []
-            for c in range(nc):
-                cid = seg[6 + c * 3]
-                hv = seg[7 + c * 3]
-                comps.append((cid, hv >> 4, hv & 15, seg[8 + c * 3]))
-            frame = (h, w, comps)
-        elif m in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
-                   0xCE, 0xCF):
-            raise ValueError(
-                f"non-baseline SOF FF{m:02X} (progressive/arithmetic) "
-                "unsupported"
-            )
-        elif m == 0xC4:  # DHT
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                bits = bytes(seg[p + 1 : p + 17])
-                nv = sum(bits)
-                vals = bytes(seg[p + 17 : p + 17 + nv])
-                (huff_ac if tc else huff_dc)[th] = _lookahead(bits, vals, bool(tc))
-                p += 17 + nv
-        elif m == 0xDD:  # DRI
-            restart_interval = (seg[0] << 8) | seg[1]
-        elif m == 0xDA:  # SOS → entropy-coded data follows
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            ns = seg[0]
-            scan = []  # (comp_index, dc_table, ac_table)
-            for s in range(ns):
-                cs = seg[1 + s * 2]
-                td, ta = seg[2 + s * 2] >> 4, seg[2 + s * 2] & 15
-                ci = next(
-                    idx for idx, c in enumerate(frame[2]) if c[0] == cs
-                )
-                scan.append((ci, huff_dc[td], huff_ac[ta]))
-            return _decode_scan(
-                data, i + 2 + seg_len, frame, scan, qt, restart_interval
-            )
-        # APPn / COM / others: skip
-        i += 2 + seg_len
-    raise ValueError("no scan data found")
-
-
-def _decode_scan(data, pos, frame, scan, qt, restart_interval):
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # one flat coefficient buffer: each component's (blocks_y, blocks_x,
-    # 64) zigzag-ordered grid, back to back
-    offs, total = [], 0
-    for _, hs, vs, _ in comps:
-        offs.append(total)
-        total += mcuy * vs * mcux * hs * 64
-    # every block's buffer offset, in scan order (MCU-major)
-    my, mx = np.divmod(np.arange(mcuy * mcux), mcux)
-    bases, units = [], []
-    for ci, dct, act in scan:
-        _, hs, vs, _ = comps[ci]
-        for by in range(vs):
-            for bx in range(hs):
-                bases.append(
-                    offs[ci] + ((my * vs + by) * (mcux * hs) + mx * hs + bx) * 64
-                )
-                units.append((ci, dct, act))
-    blocks = [
-        (b, *u)
-        for b, u in zip(np.stack(bases, axis=1).ravel().tolist(),
-                        itertools.cycle(units))
-    ]
-    # un-stuff once, one segment per restart interval
-    end = _SCAN_END.search(data, pos)
-    segments = [
-        s.replace(b"\xff\x00", b"\xff")
-        for s in _RST.split(data[pos : end.start() if end else len(data)])
-    ]
-    per = len(units) * (restart_interval or mcux * mcuy)
-    if len(segments) * per < len(blocks):
-        raise ValueError("truncated scan: restart intervals missing")
-    idx, val = array("q"), array("q")
-    for r in range(0, len(blocks), per):
-        _decode_segment(segments[r // per], blocks[r : r + per], len(comps),
-                        idx, val)
-    coef = np.zeros(total, dtype=np.int64)
-    coef[np.frombuffer(idx, dtype=np.int64)] = np.frombuffer(val, dtype=np.int64)
-    planes = []
-    for ci, (_, hs, vs, tq) in enumerate(comps):
-        by, bx = mcuy * vs, mcux * hs
-        # dequantize in zigzag order (DQT is zigzag), then de-zigzag
-        grid = coef[offs[ci] : offs[ci] + by * bx * 64].reshape(by, bx, 64)
-        blocks_nat = (grid * qt[tq])[:, :, _UNZIGZAG]
-        pix = _A.T @ blocks_nat.reshape(by, bx, 8, 8).astype(np.float64) @ _A
-        plane = (
-            pix.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8) + 128.0
-        )
-        # upsample by sample replication to full-res grid
-        if hs != hmax or vs != vmax:
-            plane = np.repeat(
-                np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1
-            )
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        return np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    bgr = np.stack([b, g, r], axis=-1)
-    return np.clip(np.round(bgr), 0, 255).astype(np.uint8)
+    """JPEG bytes → uint8 ndarray, BGR channel order for color (the
+    cv2.imdecode contract), (H, W) for grayscale. Damaged input raises
+    ValueError whose message starts with ``truncated``, ``not a JPEG`` or
+    ``corrupt``, followed by libjpeg's own message."""
+    dims = (ctypes.c_int * 3)()
+    _run_shim(data, None, dims)
+    h, w, c = dims
+    out = np.empty((h, w) if c == 1 else (h, w, c), np.uint8)
+    _run_shim(data, out, dims)
+    return out
 
 
 # --------------------------------------------------------------- encoder

@@ -56,8 +56,7 @@ def test_cli_images_path_prefix(tmp_path, capsys):
 
 
 def test_cli_images_decodes_jpegs(spark, tmp_path, capsys):
-    """--images runs the real JPEG decoder (not the byte-tiling stand-in),
-    and --path-prefix keeps the .jpg filter: a non-JPEG file under the
+    """--images runs the real JPEG decoder, and --path-prefix keeps the .jpg filter: a non-JPEG file under the
     prefix must not reach the decoder."""
     import numpy as np
 

@@ -1,18 +1,24 @@
 """Dedup-operator invariants: fingerprint exactness, MinHash-LSH candidate
-quality (identical docs always pair; dissimilar docs rarely do), and the
+quality (identical docs always pair; dissimilar docs rarely do), the
 Arrow pass of dedup_ngram_jaccard against the Spark expressions it
-replaced."""
+replaced, and the operator against its DuckDB oracle on whitespace edge
+rows."""
 
 from __future__ import annotations
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from gjenbruksstasjoner_kotid_estimering_spark.functions.text import fingerprint_col, tokens_col
 from gjenbruksstasjoner_kotid_estimering_spark.operators.dedup import (
+    JACCARD_DUP_THRESHOLD,
+    JACCARD_ORACLE_CTES,
     MH_BAND_SIZE,
     MH_BANDS,
     MH_SEEDS,
     bigrams,
+    dedup_ngram_jaccard,
     doc_keys,
     minhash_signature_col,
     shingles_col,
@@ -182,3 +188,36 @@ def test_band_keys_match_md5_column_expressions(spark):
     assert got == want
     # whitespace-only text splits into two empty tokens: one bigram " "
     assert sorted(got) == [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 13, 14]
+
+
+def test_ngram_jaccard_matches_oracle_on_whitespace_variants(spark, tmp_path):
+    """The DuckDB oracle tokenizes as the operator does: texts that differ
+    only in tabs, newlines, \\x0b, or repeated, leading or trailing
+    separators pair up with the same Jaccard in both engines."""
+    base = "the quick brown fox jumps over the lazy dog"
+    texts = [
+        base,
+        "the\tquick  brown\nfox jumps over the lazy dog",
+        " the quick brown fox jumps over the lazy dog ",
+        "the\r\nquick brown fox\x0bjumps over the\f lazy dog",
+        "rep rep rep rep",
+        "rep  rep   rep\t\trep",
+        "a b c d e f g h",
+        "a\r\nb c d e f g h\x0b",
+        *EDGE_TEXTS,
+    ]
+    sf_dir = str(tmp_path)
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        f"{sf_dir}/documents.parquet"
+    )
+    got = sorted(map(tuple, dedup_ngram_jaccard(spark, sf_dir).collect()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    want = sorted(
+        con.execute(
+            f"WITH {JACCARD_ORACLE_CTES} SELECT doc_a, doc_b, jaccard FROM scored "
+            f"WHERE jaccard >= {JACCARD_DUP_THRESHOLD}"
+        ).fetchall()
+    )
+    assert got == want
+    assert {(0, 1, 1.0), (0, 3, 1.0), (1, 3, 1.0), (4, 5, 1.0)} <= set(got)

@@ -11,7 +11,6 @@ feature vector → estimator chain → last-write-wins upsert sink → read back
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +19,7 @@ from gjenbruksstasjoner_kotid_estimering_spark.operators.upsert import (
     apply_upserts,
 )
 from gjenbruksstasjoner_kotid_estimering_spark.sources import images as im
+from gjenbruksstasjoner_kotid_estimering_spark.sources import jpeg
 
 
 def _score_heads(features_df):
@@ -42,7 +42,6 @@ def _score_heads(features_df):
 
 def test_full_reference_dag(spark, tmp_path):
     # --- stage 0: camera frames land under a prefix (reference O1) ---
-    rng = np.random.default_rng(99)
     frames = [
         (41, "20200506T094000"),
         (41, "20200506T095000"),
@@ -54,7 +53,9 @@ def test_full_reference_dag(spark, tmp_path):
     for i, (sid, t) in enumerate(frames):
         # same name for the duplicate pair → same content, same key
         (imgdir / f"station_id_{sid}_{t}.jpg").write_bytes(
-            rng.bytes(4096) if i != 2 else (imgdir / "station_id_41_20200506T095000.jpg").read_bytes()
+            jpeg.encode(im._synthetic_frame(i), quality=90)
+            if i != 2
+            else (imgdir / "station_id_41_20200506T095000.jpg").read_bytes()
         )
 
     # --- stage 1: PreprocessImage (reference preprocess_image.py:198-205) ---

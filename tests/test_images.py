@@ -37,19 +37,9 @@ def test_normalize_range():
     assert out.min() == 0.0 and out.max() == pytest.approx(1.0)
 
 
-def test_decoder_deterministic():
-    a = im.default_decoder(b"hello world" * 100)
-    b = im.default_decoder(b"hello world" * 100)
-    c = im.default_decoder(b"other bytes!" * 100)
-    assert np.array_equal(a, b)
-    assert not np.array_equal(a, c)
-    assert a.shape == (im.RAW_H, im.RAW_W, 3) and a.dtype == np.uint8
-
-
 def test_jpeg_decoder_grayscale_contract():
     """jpeg_decoder() must honor the cv2.imdecode(IMREAD_COLOR) contract
-    on GRAYSCALE streams too: 3 identical channels, not a 2-D array —
-    otherwise the two container flavors (cv2 present/absent) diverge."""
+    on GRAYSCALE streams too: 3 identical channels, not a 2-D array."""
     from gjenbruksstasjoner_kotid_estimering_spark.sources import jpeg
 
     gray = np.full((16, 24), 90, dtype=np.uint8)
@@ -59,16 +49,21 @@ def test_jpeg_decoder_grayscale_contract():
     assert np.array_equal(out[..., 1], out[..., 2])
 
 
+def _frame_jpeg(i: int) -> bytes:
+    from gjenbruksstasjoner_kotid_estimering_spark.sources import jpeg
+
+    return jpeg.encode(im._synthetic_frame(i), quality=90)
+
+
 def test_pipeline_end_to_end(spark, tmp_path):
-    rng = np.random.default_rng(7)
     names = [
         "station_id_41_20200506T094000.jpg",
         "station_id_41_20200506T095000.jpg",
         "station_id_7_20210101T120000.jpg",
         "not_a_station_frame.jpg",
     ]
-    for n in names:
-        (tmp_path / n).write_bytes(rng.bytes(4096))
+    for i, n in enumerate(names):
+        (tmp_path / n).write_bytes(_frame_jpeg(i))
     feats = im.preprocess_images(im.read_images(spark, str(tmp_path)))
     rows = {r.path.rsplit("/", 1)[-1]: r for r in feats.collect()}
     assert len(rows) == 4
@@ -85,6 +80,21 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert set(back.columns) == {"path", "station_id", "epoch", "features"}
 
 
+def test_decode_error_names_the_frame(spark, tmp_path):
+    """One truncated upload among good frames: the batch fails with the
+    decoder's ValueError, prefixed with that frame's path."""
+    from pyspark.errors import PythonException
+
+    for i in range(3):
+        (tmp_path / f"station_id_41_20200506T09{i}000.jpg").write_bytes(_frame_jpeg(i))
+    bad = "station_id_41_20200506T093000.jpg"
+    data = _frame_jpeg(3)
+    (tmp_path / bad).write_bytes(data[: len(data) // 2])
+    feats = im.preprocess_images(im.read_images(spark, str(tmp_path)))
+    with pytest.raises(PythonException, match=rf"ValueError: \S*/{bad}: truncated"):
+        feats.collect()
+
+
 FIXTURE_JPG = "/root/reference/test/data/station_id_41_20200506T094000.jpg"
 FIXTURE_BIN = "/root/reference/test/data/processed_image.bin"
 
@@ -92,9 +102,9 @@ FIXTURE_BIN = "/root/reference/test/data/processed_image.bin"
 def test_reference_camera_frame_through_lane(spark, tmp_path):
     """Run the reference's actual test fixture frame
     (test/data/station_id_41_20200506T094000.jpg, 1280x240 camera image)
-    through the Spark lane with the REAL JPEG decode (vendored baseline
-    codec; cv2 where installed): metadata parse must hit the golden epoch
-    and features must be deterministic."""
+    through the Spark lane with the REAL JPEG decode (the system
+    libjpeg): metadata parse must hit the golden epoch and features must
+    be deterministic."""
     import shutil
     import os
 
