@@ -66,7 +66,7 @@ def tune(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "gjenbruksstasjoner-kotid-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or reuse) a session for tests/bench.
 
@@ -76,8 +76,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     import tempfile
 
     builder = (

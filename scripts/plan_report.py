@@ -39,6 +39,8 @@ def summarize(plan: str) -> dict:
         "codegen": bool(re.search(r"^\s*(?:[+:]-\s*)*\* ", plan, re.M)),
         "window_limit": "WindowGroupLimit" in plan,
         "take_ordered": "TakeOrderedAndProject" in plan,
+        # a frame read back from a localCheckpoint plans as this scan
+        "materialized": len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M)),
     }
 
 
@@ -66,6 +68,8 @@ def main() -> None:
                 notes.append("TakeOrdered")
             if s["pushed"]:
                 notes.append("pushdown")
+            if s["materialized"]:
+                notes.append(f"materialized:{s['materialized']}")
             rows.append(
                 (
                     name,
@@ -84,7 +88,10 @@ def main() -> None:
         "Static Catalyst plans at sf0.001 with AQE disabled for visibility "
         "(AQE is ON at runtime and may further coalesce/convert). "
         "`shuffles` counts Exchange operators — the unit of cluster cost at "
-        "100 TB; `codegen` = whole-stage-codegen spans present.",
+        "100 TB; `codegen` = whole-stage-codegen spans present. "
+        "`materialized:N` counts scans of an already materialized frame "
+        "(`Scan ExistingRDD`, e.g. a `localCheckpoint`): the upstream plan "
+        "of such an input, including any Arrow/pandas pass, is not shown.",
         "",
         "| query | shuffles | codegen | strategies |",
         "|---|---|---|---|",

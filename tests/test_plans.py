@@ -421,3 +421,57 @@ def test_max_by_is_aggregate_not_window(spark):
     plan = _plan(spark, "agg_max_by_min_by")
     assert "max_by" in plan
     assert "Window" not in plan  # the whole point vs rank-then-filter
+
+
+# A formatted plan (AQE off) of a localCheckpoint'ed frame joined with a
+# broadcast copy of itself: both sides read the materialized RDD.
+MATERIALIZED_PLAN = """== Physical Plan ==
+* Project (6)
++- * BroadcastHashJoin Inner BuildRight (5)
+   :- * Scan ExistingRDD (1)
+   +- BroadcastExchange (4)
+      +- * Project (3)
+         +- * Scan ExistingRDD (2)
+
+
+(1) Scan ExistingRDD [codegen id : 2]
+Output [2]: [id#0L, v#1L]
+Arguments: [id#0L, v#1L], MapPartitionsRDD[3] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD, SinglePartition, [id#0L ASC NULLS FIRST]
+
+(2) Scan ExistingRDD [codegen id : 1]
+Output [2]: [id#3L, v#4L]
+Arguments: [id#3L, v#4L], MapPartitionsRDD[3] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD, SinglePartition, [id#3L ASC NULLS FIRST]
+
+(3) Project [codegen id : 1]
+Output [2]: [id#3L, v#4L AS w#2L]
+Input [2]: [id#3L, v#4L]
+
+(4) BroadcastExchange
+Input [2]: [id#3L, w#2L]
+Arguments: HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=31]
+
+(5) BroadcastHashJoin [codegen id : 2]
+Left keys [1]: [id#0L]
+Right keys [1]: [id#3L]
+Join type: Inner
+Join condition: None
+
+(6) Project [codegen id : 2]
+Output [3]: [id#0L, v#1L, w#2L]
+Input [4]: [id#0L, v#1L, id#3L, w#2L]
+"""
+
+
+def test_plan_report_counts_materialized_scans():
+    """PLANS.md must not pass a materialized input off as a plain scan:
+    each ``Scan ExistingRDD`` node counts once (formatted mode names it
+    in the tree and again in its details), and a plan without one
+    counts zero."""
+    from scripts.plan_report import summarize
+
+    s = summarize(MATERIALIZED_PLAN)
+    assert s["materialized"] == 2
+    assert s["joins"] == ["BroadcastHashJoin"]
+    assert s["py"] == []
+    plain = MATERIALIZED_PLAN.replace("Scan ExistingRDD", "Scan parquet")
+    assert summarize(plain)["materialized"] == 0
