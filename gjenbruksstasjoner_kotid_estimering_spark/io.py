@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -32,6 +32,16 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def naive_nanos_to_timestamp(col: str) -> Column:
+    """Naive epoch nanos (a TIMESTAMP(NANOS, isAdjustedToUTC=false) column
+    read under nanosAsLong) → TIMESTAMP, as casting the same value held
+    as TIMESTAMP_NTZ does: the wall clock is read in the session timezone.
+    So both on-disk layouts load to the same ``ts`` on any session zone."""
+    return F.expr(
+        f"timestampadd(MICROSECOND, {col} div 1000, TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+    ).cast("timestamp")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -42,11 +52,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # spark.sql.legacy.parquet.nanosAsLong, session.RUNTIME_CONFS); round 2+
     # writes TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 reads
     # as TIMESTAMP_NTZ. Everything downstream (unix_micros, withWatermark,
-    # window()) requires plain TIMESTAMP, so normalize both lanes here —
-    # lossless because the session timezone is pinned UTC (session.py).
+    # window()) requires plain TIMESTAMP, so normalize both lanes here,
+    # both to the TIMESTAMP that reads the file's wall clock in the session
+    # timezone.
     fixes = {}
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        fixes["ts"] = F.expr("timestamp_micros(ts div 1000)")
+        fixes["ts"] = naive_nanos_to_timestamp("ts")
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             fixes[col] = F.col(col).cast("timestamp")

@@ -9,11 +9,6 @@ models fit on deterministic synthetic targets over the ``embeddings`` table
 weights are reproducible (seeded, closed-form targets), and scoring is
 columnar (``model.transform``, JVM-side, no per-row Python).
 
-Also here: the IVF similarity path — KMeans coarse quantizer + probe-K
-bucket search, the scale companion to operators/similarity.similarity_topk
-(brute force). At 100 TB: centroids broadcast, per-vector assignment is a
-map-side argmin, candidate search touches ~K/nlist of the corpus.
-
 ``queue_estimate_ml`` chains scoring into the estimator expression chain —
 the complete reference pipeline (estimate_queue.py:181-192) with a *trained*
 model in the loop.
@@ -23,7 +18,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.ml.clustering import KMeans
 from pyspark.ml.functions import array_to_vector
 from pyspark.ml.regression import LinearRegression, LinearRegressionModel
 from pyspark.sql import DataFrame, SparkSession
@@ -151,60 +145,6 @@ def queue_estimate_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cars",
         "expected_queue_time",
     )
-
-
-def kmeans_index(
-    spark: SparkSession, sf_dir: str, k: int = 8
-) -> tuple[DataFrame, np.ndarray]:
-    """IVF coarse quantizer: KMeans over the corpus → (assigned corpus,
-    centroid matrix)."""
-    feats = _features_df(spark, sf_dir)
-    km = KMeans(k=k, seed=SEED, featuresCol="features", predictionCol="cluster")
-    model = km.fit(feats)
-    # r17 optimization (guide §2.4): callers consume ``assigned`` in
-    # several actions (query-row collect, broadcast build, candidate
-    # scan) — materialize once so the embedding→vector conversion and
-    # the k-way center-distance projection run one pass, not per action.
-    assigned = model.transform(feats).localCheckpoint(eager=False)
-    centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-    return assigned, centroids
-
-
-@register(
-    "similarity_topk_ivf",
-    oracle=None,  # kmeans partitioning is engine-specific → rows-only
-    doc="IVF similarity search: KMeans(8) coarse quantizer, probe the 2 "
-    "centroids nearest the query, exact cosine only within those buckets "
-    "— touches ~1/4 of the corpus instead of all of it. Recall vs brute "
-    "force is pytest-asserted.",
-    tags=("ml", "similarity", "ivf"),
-)
-def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import QUERY_VEC_ID, TOP_K, cosine_col
-
-    assigned, centroids = kmeans_index(spark, sf_dir)
-    qrow = (
-        assigned.where(F.col("vec_id") == QUERY_VEC_ID)
-        .select("embedding")
-        .collect()[0]
-    )
-    qvec = np.array(qrow.embedding, dtype=np.float64)
-    # probe the 2 nearest centroids (driver-side: centroids are tiny)
-    d2 = ((centroids - qvec) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d2)[:2]]
-    q = F.broadcast(
-        assigned.where(F.col("vec_id") == QUERY_VEC_ID).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    candidates = assigned.where(F.col("cluster").isin(probe))
-    scored = candidates.crossJoin(q).select(
-        "vec_id",
-        "label",
-        "cluster",
-        cosine_col(F.col("embedding"), F.col("qv")).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(TOP_K)
 
 
 # Separable binary target for the classifier lane: sign(w_cls · embedding).

@@ -1,33 +1,32 @@
-"""Near-duplicate cluster formation — distributed connected components
-over MinHash candidate edges.
+"""Near-duplicate cluster formation — connected components over the
+verified near-dup edges.
 
-The dedup endgame a training-data pipeline actually needs: candidate PAIRS
-(operators/dedup.dedup_near_minhash) must become disjoint CLUSTERS so one
+The dedup endgame a training-data pipeline actually needs: verified PAIRS
+(operators/dedup.dedup_ngram_jaccard) must become disjoint CLUSTERS so one
 representative per cluster survives. Connected components is inherently
-iterative (non-SQL-expressible per the driver contract → rows-only).
+iterative (no single SQL query; ``dedup_clusters`` is oracle-checked
+through a recursive CTE).
 
-Two implementations:
+:func:`connected_components` canonicalizes and materializes the edge set
+once, then picks the solver by edge count:
 
-- :func:`connected_components` — alternating large-star / small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC 2014). Converges in O(log n) rounds independent of graph diameter,
-  which is the property that matters at 100 TB: a min-label propagation
-  needs diameter-many shuffles (a 10⁶-long chain of near-dup docs → 10⁶
-  rounds), large/small-star needs ~20. Each round is two shuffles
-  (neighborhood min + star rewrite) with ``localCheckpoint`` lineage
-  truncation — the standard Spark iterative-algorithm hygiene.
-- :func:`connected_components_propagation` — the plain min-label
-  propagation (rounds ∝ diameter), kept as the independent reference
-  implementation the pytest equivalence check runs against.
+- at most ``LOCAL_EDGE_CUTOFF`` edges: a driver-side union-find, one
+  collect instead of 10+ shuffle rounds. Near-dup VERIFIED edges are a
+  tiny fraction of the corpus (each doc pairs with few others), so after
+  the distributed candidate generation + exact verification the component
+  solve usually fits one machine.
+- more: alternating large-star / small-star (Kiveris et al., "Connected
+  Components in MapReduce and Beyond", SoCC 2014). Converges in O(log n)
+  rounds independent of graph diameter, which is the property that matters
+  at 100 TB: a min-label propagation needs diameter-many shuffles (a
+  10⁶-long chain of near-dup docs → 10⁶ rounds), large/small-star needs
+  ~20. Each round is two shuffles (neighborhood min + star rewrite) with
+  ``localCheckpoint`` lineage truncation — the standard Spark
+  iterative-algorithm hygiene.
 
-Hybrid finish: after canonicalization the edge count is measured once; a
-small surviving edge set (≤ ``LOCAL_EDGE_CUTOFF``) is solved with a
-driver-side union-find instead of 10+ shuffle rounds. This is the shape
-large-scale CC jobs actually use — near-dup VERIFIED edges are a tiny
-fraction of the corpus (each doc pairs with few others), so after the
-distributed candidate generation + exact verification the component
-solve usually fits one machine; the distributed star iteration remains
-the path for graphs that don't.
+:func:`connected_components_propagation` is the plain min-label
+propagation (rounds ∝ diameter), kept as the independent reference
+implementation the pytest equivalence check runs against.
 """
 
 from __future__ import annotations
@@ -36,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_shuffle_partitions
 
 MAX_ITERATIONS = 20
 MAX_STAR_ROUNDS = 50
@@ -57,7 +57,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_rounds: int = MAX_STAR_ROUNDS,
     local_cutoff: int = LOCAL_EDGE_CUTOFF,
 ) -> DataFrame:
     """(src, dst) undirected edges → (node, component = min reachable id).
@@ -91,9 +90,13 @@ def connected_components(
         head = e.limit(local_cutoff + 1).collect()
         if len(head) <= local_cutoff:
             return _union_find_local(edges.sparkSession, head)
-    labels, _ = _connected_components_star(
-        e, "u", "v", max_rounds, pre_canonical=True
-    )
+    # The edge frontier is orders smaller than the corpus that produced
+    # it, and each of the ~2·log(n) rounds pays 3 shuffles + a signature
+    # collect: at the session default that cost is per-task scheduling,
+    # not data. Each round materializes via localCheckpoint, so the
+    # scope covers all execution.
+    with scoped_shuffle_partitions(edges.sparkSession, 8):
+        labels, _ = _star_rounds(e)
     return labels
 
 
@@ -136,43 +139,12 @@ def _union_find_local(spark: SparkSession, edge_rows) -> DataFrame:
     return spark.createDataFrame(labels, schema="node long, component long")
 
 
-def _connected_components_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_rounds: int,
-    pre_canonical: bool = False,
-) -> tuple[DataFrame, int]:
-    """Internal: returns (labels, rounds-to-fixpoint).
-
-    ``pre_canonical``: the caller already canonicalized AND materialized
-    the edge set — skip the redundant distinct shuffle + checkpoint pass.
-    """
-    if pre_canonical:
-        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    else:
-        e = _canonical(
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        ).localCheckpoint(eager=True)
-    from ..session import scoped_shuffle_partitions
-
+def _star_rounds(e: DataFrame) -> tuple[DataFrame, int]:
+    """The alternating-star fixpoint loop over canonical (u > v) edges →
+    (labels, rounds-to-fixpoint), at most MAX_STAR_ROUNDS rounds."""
     rounds = 0
     prev_sig: tuple | None = None
-    with scoped_shuffle_partitions(edges.sparkSession, 8):
-        return _star_rounds(e, max_rounds)
-
-
-def _star_rounds(e: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
-    """The alternating-star fixpoint loop. Runs under a reduced shuffle-
-    partition scope (_connected_components_star): the edge frontier is
-    orders smaller than the corpus that produced it, and each of the
-    ~2·log(n) rounds pays 3 shuffles + a signature collect — at the
-    session default that cost is per-task scheduling, not data. Each
-    round materializes via localCheckpoint, so the scope covers all
-    execution."""
-    rounds = 0
-    prev_sig: tuple | None = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_STAR_ROUNDS):
         # --- large-star: operate on the symmetric neighbor view ---
         sym = e.select("u", "v").unionAll(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -315,10 +287,12 @@ def _clusters_oracle() -> str:
     oracle=_clusters_oracle(),
     doc="Near-dup clusters over the VERIFIED near-dup edges "
     "(dedup_ngram_jaccard's exact-Jaccard pairs): connected components "
-    "via alternating large-star/small-star (O(log n) rounds regardless "
-    "of diameter, localCheckpoint per round) → one row per clustered doc "
-    "with its cluster id (min reachable doc_id) and the elected "
-    "representative. Oracle-checked end-to-end: DuckDB re-derives the "
+    "over the canonical edge set, materialized once — a driver-side "
+    "union-find when it holds at most 100k edges, "
+    "alternating large-star/small-star rounds (O(log n) regardless of "
+    "diameter, localCheckpoint per round) above that → one row per "
+    "clustered doc with its cluster id (min reachable doc_id) and the "
+    "elected representative. Oracle-checked end-to-end: DuckDB re-derives the "
     "identical edge set and computes the closure with a recursive CTE — "
     "the iterative-algorithm surface of the engine, with an exact "
     "cross-engine answer.",

@@ -2,19 +2,19 @@
 
 Exact dedup grounds in the reference's idempotency (Luigi skips work whose
 output exists, tasks.py:19-29 — i.e. the pipeline never produces two rows
-for the same (station, ts) input). The near-dup family (MinHash/SimHash)
-is the scale path for ~100 TB corpora where O(n²) comparison is impossible:
-shingle → hash → band → bucket-join. ``dedup_ngram_jaccard`` derives each
-document's bigrams and band keys in one Arrow pass (``mapInArrow``) straight
-off the scan; the candidate join and the exact scoring stay in the JVM.
+for the same (station, ts) input). Near-dup text search has one candidate
+family, md5 MinHash over word bigrams, the scale path for ~100 TB corpora
+where O(n²) comparison is impossible: shingle → hash → band → bucket-join.
+``dedup_ngram_jaccard`` derives each document's bigrams and band keys in
+one Arrow pass (``mapInArrow``) straight off the scan; the candidate join
+(``band_pairs``) and the exact scoring stay in the JVM.
 
-- ``dedup_exact``      : representative row per duplicate key (oracle-checked)
-- ``dedup_fingerprint``: exact-text dedup via 64-bit rolling fingerprint —
-                          the hash-first pattern that avoids shuffling full
-                          text payloads at scale (oracle-checked: fingerprint
-                          collisions on distinct texts are ~2^-64)
-- ``dedup_near_minhash``: MinHash-LSH candidate pairs (rows-only — banding
-                          is engine-specific by design)
+- ``dedup_exact``        : representative row per duplicate key (oracle-checked)
+- ``dedup_fingerprint``  : exact-text dedup via 64-bit rolling fingerprint —
+                           the hash-first pattern that avoids shuffling full
+                           text payloads at scale (rows-only: xxhash64)
+- ``dedup_ngram_jaccard``: md5-MinHash candidates → exact bigram Jaccard
+                           (oracle-checked, banding included)
 """
 
 from __future__ import annotations
@@ -27,13 +27,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_col, tokens_col
-from ..io import fan_out, load_table
+from ..io import load_table
 from ..registry import register
 
-# MinHash parameters: 16 permutations × 4 bands of 4 → candidate recall on
-# Jaccard ≳ 0.5 while keeping the signature tiny.
-N_HASHES = 16
-BAND_SIZE = 4
 SHINGLE_K = 3
 
 
@@ -62,26 +58,6 @@ def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
 # measured 2.4× SLOWER than slice+concat_ws at sf0.1 (element_at inside
 # higher-order lambdas doesn't codegen as tightly as the single-pass
 # slice/concat) — keep the string-shingle form.
-
-
-def minhash_signature_col(shingles: Column, n_hashes: int = N_HASHES) -> Column:
-    """MinHash signature: per seed i, min over shingles of xxhash64(s, i).
-
-    Single ordered fold over the shingle array that updates all ``n_hashes``
-    minima per step (zip_with against the seed vector). One pass — the naive
-    per-seed ``array_min(transform(...))`` form duplicates the whole shingle
-    computation n_hashes× after Catalyst's projection collapse (measured 16×
-    slower at sf0.1).
-    """
-    seeds = F.array(*[F.lit(i) for i in range(n_hashes)])
-    init = F.array(*[F.lit(9223372036854775807) for _ in range(n_hashes)])
-    return F.aggregate(
-        shingles,
-        init,
-        lambda acc, s: F.zip_with(
-            acc, seeds, lambda a, seed: F.least(a, F.xxhash64(s, seed))
-        ),
-    )
 
 
 @register(
@@ -125,70 +101,6 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
-    )
-
-
-@register(
-    "dedup_near_minhash",
-    oracle=None,  # LSH banding is engine-specific → rows-only
-    doc="MinHash-LSH near-dup candidates: shingle → 16 xxhash64 minima → 4 "
-    "bands → self-join on (band_id, band_hash) → distinct candidate pairs. "
-    "All built-ins; the O(n²) comparison collapses to bucket-local joins. "
-    "Candidate quality is pytest-checked (identical docs always pair; "
-    "Jaccard-dissimilar docs rarely do).",
-    tags=("dedup", "lsh", "minhash"),
-)
-def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same signature values as the original HOF-fold form (per seed i,
-    # min over shingles of xxhash64(s, i)), but computed as explode →
-    # 16-column min hash-aggregate: whole-stage codegen, map-side partial
-    # mins, and the per-shingle hashing parallelizes across cores instead
-    # of running as one interpreted fold per row (measured ~4x at sf0.1).
-    d = fan_out(load_table(spark, sf_dir, "documents"), keys=["doc_id"])
-    grams = d.select("doc_id", shingles_col(F.col("text")).alias("shingles"))
-    exploded = grams.select("doc_id", F.explode("shingles").alias("s"))
-    sigs = exploded.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"h{i}")
-            for i in range(N_HASHES)
-        ]
-    )
-    n_bands = N_HASHES // BAND_SIZE
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"h{b * BAND_SIZE + j}").cast("string")
-                                    for j in range(BAND_SIZE)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_hash")
-    left = bands.alias("l")
-    right = bands.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
     )
 
 
@@ -287,6 +199,27 @@ def doc_keys(docs: DataFrame) -> DataFrame:
     )
 
 
+def band_pairs(bands: DataFrame, id_col: str, a: str, b: str) -> DataFrame:
+    """LSH candidate pairs: (id_col, band_id, band_val) rows → distinct
+    (a, b) id pairs, a < b, that share at least one band.
+
+    An equi-join on (band_id, band_val), so the work is bucket-local and
+    no pair outside a shared bucket is ever formed. Both the text bands
+    (``doc_keys``) and the vector bands (``similarity._pivot_bands``)
+    feed it; the ``cand`` CTEs of their oracles are the same join."""
+    l, r = bands.alias("l"), bands.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band_id") == F.col("r.band_id"))
+            & (F.col("l.band_val") == F.col("r.band_val"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(F.col(f"l.{id_col}").alias(a), F.col(f"r.{id_col}").alias(b))
+        .distinct()
+    )
+
+
 _MH_MIN_EXPRS = ",\n                 ".join(
     f"min(h1 + {i} * h2) AS h{i}" for i in range(MH_SEEDS)
 )
@@ -374,17 +307,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized frame instead of re-deriving it per join side.
     grams = doc_keys(load_table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
     bands = grams.select("doc_id", F.posexplode("keys").alias("band_id", "band_val"))
-    lb, rb = bands.alias("lb"), bands.alias("rb")
-    cand = (
-        lb.join(
-            rb,
-            (F.col("lb.band_id") == F.col("rb.band_id"))
-            & (F.col("lb.band_val") == F.col("rb.band_val"))
-            & (F.col("lb.doc_id") < F.col("rb.doc_id")),
-        )
-        .select(F.col("lb.doc_id").alias("doc_a"), F.col("rb.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(bands, "doc_id", "doc_a", "doc_b")
     ga, gb = grams.alias("ga"), grams.alias("gb")
     inter = F.size(F.array_intersect(F.col("ga.bigrams"), F.col("gb.bigrams")))
     union = F.size(F.col("ga.bigrams")) + F.size(F.col("gb.bigrams")) - inter
@@ -398,101 +321,3 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return scored.where(F.col("jaccard") >= JACCARD_DUP_THRESHOLD)
-
-
-SIMHASH_BITS = 64
-SIMHASH_BAND_BITS = 16
-SIMHASH_MAX_HAMMING = 6
-
-
-def simhash_df(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, text) → (id, simhash): 64-bit SimHash via explode + bit-vote
-    aggregation.
-
-    Every token hashes once (explode → one row per token); each of the 64
-    bit positions aggregates +1/-1 votes with a map-side-combinable
-    conditional sum (bit positions are Python ints — shiftright's shift
-    amount must be a literal); the sign vector packs into one BIGINT.
-    This is also the scale shape: one shuffle on the doc id, no per-row
-    64-wide array state.
-    """
-    toks = df.select(
-        F.col(id_col),
-        F.explode(tokens_col(F.col(text_col))).alias("_tok"),
-    ).withColumn("_th", F.xxhash64("_tok"))
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("_th"), i).bitwiseAND(F.lit(1)) == 1,
-                    F.lit(1),
-                ).otherwise(F.lit(-1))
-            ).alias(f"_v{i}")
-            for i in range(SIMHASH_BITS)
-        ]
-    )
-    packed = None
-    for i in range(SIMHASH_BITS):
-        bit = F.when(
-            F.col(f"_v{i}") > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        packed = bit if packed is None else packed.bitwiseOR(bit)
-    return votes.select(F.col(id_col), packed.alias("simhash"))
-
-
-@register(
-    "dedup_simhash",
-    oracle=None,  # fingerprint bits are hash-engine-specific → rows-only
-    doc="SimHash near-dup candidates over documents: 64-bit bit-vote "
-    "fingerprint per doc (single fold, JVM-side), 4×16-bit band bucketing "
-    "(hamming ≤ 3 pairs must share a band), exact hamming filter via "
-    "bit_count(xor) ≤ 6 on bucket-local pairs. Invariants pytest-checked "
-    "(identical docs hamming 0; near-identical small; unrelated large).",
-    tags=("dedup", "simhash", "lsh"),
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # The band bucketing self-joins this frame; without a checkpoint BOTH
-    # join sides re-execute the full explode + 64-way bit-vote aggregate
-    # (self-joins on different keys get no exchange reuse). The signature
-    # frame is doc-count-sized (2 columns), so materializing it once is
-    # the cheap side of that trade at any scale.
-    sigs = simhash_df(d).localCheckpoint(eager=False)
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftright(F.col("simhash"), b * SIMHASH_BAND_BITS)
-                        .bitwiseAND(F.lit((1 << SIMHASH_BAND_BITS) - 1))
-                        .alias("band_val"),
-                    )
-                    # shift amounts must be Python literals → bands unrolled
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .distinct()
-    )

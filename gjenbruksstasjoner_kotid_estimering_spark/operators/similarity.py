@@ -5,17 +5,20 @@ activations, preprocess_image.py:195; 58368-float32 arrays) to ANN-style
 retrieval over the ``embeddings`` table (64-dim here; the operators are
 dimension-agnostic).
 
-- ``similarity_topk``      : exact brute-force cosine top-k against a query
-                             vector — the correctness baseline. Broadcast the
-                             single query row; dot/norms are ordered folds in
-                             double so Spark and DuckDB agree bit-exactly.
-- ``similarity_pairs_lsh`` : the scale path — random-hyperplane (SimHash)
-                             bucketing; only bucket-local pairs are compared.
-                             Rows-only (bucketing is engine-specific).
+- ``similarity_topk``        : exact brute-force cosine top-k against a
+                               query vector — the correctness baseline.
+                               Broadcast the single query row; dot/norms are
+                               ordered folds in double so Spark and DuckDB
+                               agree bit-exactly.
+- ``dedup_embedding_cosine`` : all-pairs cosine dedup over pivot-sign LSH
+                               candidates.
+- ``similarity_knn_join``    : top-k neighbors for many queries at once over
+                               the same pivot-sign candidates.
 
-At 100 TB brute force against one query is still a single pass (fine); the
-LSH path is for all-pairs workloads where O(n²) is impossible. An IVF
-variant (k-means coarse quantizer via MLlib) is the planned round-2 addition.
+At 100 TB brute force against one query is still a single pass (fine);
+the all-pairs and many-query workloads, where O(n²) is impossible, share
+one candidate family: pivot-sign LSH bands (``_pivot_bands``), which DuckDB
+derives identically, so the candidate sets are part of the oracle contract.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry import register
+from .dedup import band_pairs
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -38,21 +42,16 @@ def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def dot_col(a: Column, b: Column) -> Column:
-    """Ordered-fold dot product in double (bit-deterministic)."""
+def _fold_dot(a: Column, b: Column) -> Column:
+    """Ordered-fold dot product of double arrays (bit-deterministic)."""
     return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
-def norm_col(a: Column) -> Column:
-    return F.sqrt(dot_col(a, a))
-
-
 def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
+    a, b = _as_double(a), _as_double(b)
+    return _fold_dot(a, b) / (F.sqrt(_fold_dot(a, a)) * F.sqrt(_fold_dot(b, b)))
 
 
 @register(
@@ -99,61 +98,6 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(TOP_K)
 
 
-@register(
-    "similarity_pairs_lsh",
-    oracle=None,  # random-hyperplane bucketing is engine-specific → rows-only
-    doc="SimHash/random-hyperplane LSH: 12 deterministic pseudo-hyperplanes "
-    "(xxhash64-derived ±1 weights), sign pattern → bucket; candidate pairs "
-    "join bucket-locally. The all-pairs scale path (O(n²) → bucket-local).",
-    tags=("similarity", "lsh"),
-)
-def similarity_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    n_planes = 12
-    # Deterministic ±1 hyperplane weights per (plane, dim) from xxhash64.
-    sign_bit = lambda p, i: (  # noqa: E731
-        F.when(F.pmod(F.xxhash64(F.lit(p), i), F.lit(2)) == 0, F.lit(1.0)).otherwise(
-            F.lit(-1.0)
-        )
-    )
-    emb_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    bucket_bits = F.concat(
-        *[
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        emb_d,
-                        F.transform(
-                            F.sequence(F.lit(1), F.size("embedding")),
-                            lambda i: sign_bit(p, i),
-                        ),
-                        lambda x, s: x * s,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0"))
-            for p in range(n_planes)
-        ]
-    )
-    bucketed = e.select("vec_id", bucket_bits.alias("bucket"))
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.bucket").alias("bucket"),
-        )
-    )
-
-
 # Pivot-sign LSH for the oracle-checked cosine-dedup stage: the hyperplanes
 # are the N_PIVOTS lowest-vec_id embedding rows themselves (deterministic,
 # data-derived, and — unlike xxhash64-seeded planes — computable by DuckDB).
@@ -164,13 +108,6 @@ def similarity_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_PIVOTS = 40
 PV_BANDS = 5
 PV_BAND_BITS = 8
-
-
-def _fold_dot(a: Column, b: Column) -> Column:
-    """Ordered-fold dot for already-double arrays (no re-cast)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 _PV_BAND_SELECTS = "\n          UNION ALL ".join(
@@ -331,18 +268,7 @@ def _pivot_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "similarity", "cosine", "lsh"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = _pivot_bands(spark, sf_dir)
-    lb, rb = bands.alias("lb"), bands.alias("rb")
-    cand = (
-        lb.join(
-            rb,
-            (F.col("lb.band_id") == F.col("rb.band_id"))
-            & (F.col("lb.band_val") == F.col("rb.band_val"))
-            & (F.col("lb.vec_id") < F.col("rb.vec_id")),
-        )
-        .select(F.col("lb.vec_id").alias("vec_a"), F.col("rb.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cand = band_pairs(_pivot_bands(spark, sf_dir), "vec_id", "vec_a", "vec_b")
     normed = _pivot_normed(spark, sf_dir)
     na, nb = normed.alias("na"), normed.alias("nb")
     scored = (

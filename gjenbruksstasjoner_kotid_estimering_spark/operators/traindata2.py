@@ -360,7 +360,7 @@ def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # document's local fingerprints. Guarantees any shared substring of length
 # >= WINNOW_W + WINNOW_K - 1 tokens produces a shared fingerprint —
 # substring-level dup detection, vs the whole-doc fold of fingerprint_col
-# and the set-shingle MinHash of dedup_near_minhash.
+# and the bigram-set MinHash of dedup_ngram_jaccard.
 WINNOW_K = 3  # tokens per k-gram
 WINNOW_W = 4  # window of consecutive k-gram hashes
 

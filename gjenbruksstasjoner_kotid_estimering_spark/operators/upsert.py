@@ -121,10 +121,16 @@ def upsert_sink_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_df = fan_out(
         queue_estimate(spark, sf_dir).where(F.col("station_id") % 5 == 0)
     )
+    # The RANGE key is the epoch of ts's wall-clock reading, as DuckDB's
+    # epoch(ts) reads the naive column. io.load_table turns the naive ts
+    # into a TIMESTAMP in the session timezone, so unix_timestamp(ts) would
+    # shift every key by that zone's UTC offset; casting back to
+    # TIMESTAMP_NTZ recovers the wall clock, whose epoch needs no zone.
     melted = est_df.select(
         "station_id",
         F.concat(
-            F.unix_timestamp("ts").cast("string"), F.lit(".0")
+            F.unix_timestamp(F.col("ts").cast("timestamp_ntz")).cast("string"),
+            F.lit(".0"),
         ).alias("ts_key"),
         F.col("x_pos").alias("queue_end_pos"),
         F.col("lanes").alias("queue_lanes"),

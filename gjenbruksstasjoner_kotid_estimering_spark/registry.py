@@ -90,7 +90,6 @@ def _load_all() -> None:
     from .plans import analytics  # noqa: F401
     from .plans import stats  # noqa: F401
     from .sources import pyds  # noqa: F401
-    from .operators import pq  # noqa: F401
     from .sources import images  # noqa: F401
     from .plans import bucketed  # noqa: F401
     from .sources import files  # noqa: F401

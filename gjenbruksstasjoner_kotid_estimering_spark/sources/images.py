@@ -464,9 +464,8 @@ def phash_near_dup_pairs(hashes: DataFrame) -> DataFrame:
     """Banded near-dup candidate join over the 64-bit perceptual hashes:
     4×16-bit bands propose pairs (pigeonhole: a hamming-≤3 pair always
     leaves one band untouched), exact hamming via bit_count(XOR)
-    verifies JVM-side — the SimHash blocking scheme
-    (operators/dedup.dedup_simhash) applied to the image lane; never an
-    all-pairs comparison."""
+    verifies JVM-side — SimHash-style bit-band blocking applied to the
+    image lane; never an all-pairs comparison."""
     banded = hashes.select(
         "frame",
         "phash",
@@ -551,8 +550,8 @@ def _phash_fixture_frame(i: int, variant: int) -> np.ndarray:
     "mildly edited re-encode — are hashed with a 64-bit dHash "
     "(grayscale → 8×9 block means → horizontal-gradient sign bits) "
     "inside one mapInPandas, then 4×16-bit band blocking + exact "
-    "bit_count(XOR) hamming finds near-dup pairs JVM-side — the image "
-    "twin of dedup_simhash, and the multimodal dedup step of a "
+    "bit_count(XOR) hamming finds near-dup pairs JVM-side — SimHash-"
+    "style bit-band blocking, and the multimodal dedup step of a "
     "vision-language pipeline (copies survive re-encoding, so "
     "exact-byte dedup misses them; a perceptual hash does not). "
     "Measured margins on the fixture: edit pairs ≤2 bits, distinct "

@@ -1,8 +1,8 @@
-"""Dedup-operator invariants: fingerprint exactness, MinHash-LSH candidate
-quality (identical docs always pair; dissimilar docs rarely do), the
-Arrow pass of dedup_ngram_jaccard against the Spark expressions it
-replaced, and the operator against its DuckDB oracle on whitespace edge
-rows."""
+"""Dedup-operator invariants: fingerprint exactness, md5-MinHash band
+quality (identical docs share every band; unrelated docs none; a
+one-word edit keeps most), the Arrow pass of dedup_ngram_jaccard against
+the Spark expressions it replaced, and the operator against its DuckDB
+oracle on whitespace edge rows."""
 
 from __future__ import annotations
 
@@ -17,10 +17,10 @@ from gjenbruksstasjoner_kotid_estimering_spark.operators.dedup import (
     MH_BAND_SIZE,
     MH_BANDS,
     MH_SEEDS,
+    band_keys,
     bigrams,
     dedup_ngram_jaccard,
     doc_keys,
-    minhash_signature_col,
     shingles_col,
 )
 
@@ -46,72 +46,28 @@ def test_fingerprint_exact_and_order_sensitive(spark):
     assert fps[1] != fps[4]
 
 
-def test_minhash_identical_docs_share_signature(spark):
+def _shared_bands(x: list[str], y: list[str]) -> int:
+    return sum(a == b for a, b in zip(x, y))
+
+
+def test_minhash_identical_docs_share_signature():
     text = "spark window merge join batch stream column row value table " * 5
-    df = spark.createDataFrame(
-        [(1, text), (2, text), (3, "completely unrelated words apple banana "
-                                   "cherry durian elderberry fig grape")],
-        schema="doc_id long, text string",
-    )
-    sigs = {
-        r.doc_id: tuple(r.sig)
-        for r in df.select(
-            "doc_id",
-            minhash_signature_col(shingles_col(F.col("text"))).alias("sig"),
-        ).collect()
-    }
-    assert sigs[1] == sigs[2]
-    # dissimilar docs: signatures differ in (nearly) every position
-    agree = sum(a == b for a, b in zip(sigs[1], sigs[3]))
-    assert agree <= 2
+    other = "completely unrelated words apple banana cherry durian elderberry fig grape"
+    keys = band_keys([bigrams(text), bigrams(text), bigrams(other)])
+    assert keys[0] == keys[1] and len(keys[0]) == MH_BANDS
+    # disjoint bigram sets: a shared band needs an md5 collision
+    assert _shared_bands(keys[0], keys[2]) == 0
 
 
-def test_near_dup_docs_mostly_agree(spark):
-    """~90% shingle overlap → most MinHash positions agree (E[agree] ≈ J)."""
+def test_near_dup_docs_mostly_agree():
+    """One word changed (bigram Jaccard 0.91) → most bands agree: each
+    band matches with probability J**MH_BAND_SIZE ≈ 0.75."""
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lam mu nu xi omicron pi rho sigma tau upsilon " * 3).split()
     variant = list(base)
     variant[5] = "CHANGED"
-    df = spark.createDataFrame(
-        [(1, " ".join(base)), (2, " ".join(variant))],
-        schema="doc_id long, text string",
-    )
-    sigs = {
-        r.doc_id: tuple(r.sig)
-        for r in df.select(
-            "doc_id",
-            minhash_signature_col(shingles_col(F.col("text"))).alias("sig"),
-        ).collect()
-    }
-    agree = sum(a == b for a, b in zip(sigs[1], sigs[2]))
-    assert agree >= 8  # 16 hashes, high-Jaccard pair
-
-
-def test_simhash_invariants(spark):
-    from gjenbruksstasjoner_kotid_estimering_spark.operators.dedup import (
-        simhash_df,
-    )
-
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6).split()
-    variant = list(base)
-    variant[7] = "CHANGED"
-    df = spark.createDataFrame(
-        [
-            (1, " ".join(base)),
-            (2, " ".join(base)),          # identical
-            (3, " ".join(variant)),       # near-identical
-            (4, "utterly different content nothing shared at all here folks"),
-        ],
-        schema="doc_id long, text string",
-    )
-    sigs = {r.doc_id: r.simhash for r in simhash_df(df).collect()}
-
-    def hamming(x, y):
-        return bin((x ^ y) & ((1 << 64) - 1)).count("1")
-
-    assert sigs[1] == sigs[2]
-    assert hamming(sigs[1], sigs[3]) <= 12   # near-dup: small distance
-    assert hamming(sigs[1], sigs[4]) >= 16   # unrelated: large distance
+    keys = band_keys([bigrams(" ".join(base)), bigrams(" ".join(variant))])
+    assert _shared_bands(*keys) >= 3
 
 
 # --- the Arrow pass of dedup_ngram_jaccard vs the Spark expressions -------

@@ -61,3 +61,40 @@ def test_events_ts_epoch_matches_duckdb(spark):
         """
     ).fetchone()
     assert (spark_min, spark_max) == (duck_lo, duck_hi)
+
+
+def test_nanos_and_micros_layouts_load_alike_on_any_timezone(spark, tmp_path):
+    """Both naive on-disk layouts hold a wall clock: on a Europe/Oslo
+    session they load to the same ts, whose hour and wall-clock epoch
+    are the file's."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wall = dt.datetime(2024, 1, 1, 0, 9, 58, 123456)
+    for unit in ("ns", "us"):
+        (tmp_path / unit).mkdir()
+        pq.write_table(
+            pa.table({"ts": pa.array([wall], pa.timestamp(unit))}),
+            str(tmp_path / unit / "events.parquet"),
+            version="2.6",  # keeps the ns unit: TIMESTAMP(NANOS)
+        )
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "Europe/Oslo")
+    try:
+        got = {
+            unit: load_table(spark, str(tmp_path / unit), "events")
+            .select(
+                F.col("ts").cast("string").alias("s"),
+                F.hour("ts").alias("h"),
+                F.unix_timestamp(F.col("ts").cast("timestamp_ntz")).alias("epoch"),
+            )
+            .first()
+            for unit in ("ns", "us")
+        }
+    finally:
+        spark.conf.set(key, prev)
+    assert got["ns"] == got["us"], got
+    assert got["us"] == ("2024-01-01 00:09:58.123456", 0, 1704067798)

@@ -1,5 +1,6 @@
-"""MLlib lane tests: trained heads recover the true linear weights; IVF
-search recalls the brute-force top-k."""
+"""MLlib lane tests: trained heads recover the true linear weights and
+survive a save/load round trip; classifier accuracy and TF-IDF
+downweighting."""
 
 from __future__ import annotations
 
@@ -31,22 +32,6 @@ def test_queue_estimate_ml_shape(spark):
         assert 0.0 <= r.queue_full <= 1.0
         assert r.cars >= 0.0
         assert r.expected_queue_time == pytest.approx(r.cars / 74.0)
-
-
-def test_ivf_recall_vs_brute_force(spark):
-    exact = {
-        r.vec_id
-        for r in registry.all_specs()["similarity_topk"].builder(spark, SF).collect()
-    }
-    ivf = {
-        r.vec_id
-        for r in registry.all_specs()["similarity_topk_ivf"]
-        .builder(spark, SF)
-        .collect()
-    }
-    assert 0 in ivf  # the query vector always finds itself (cosine 1.0)
-    recall = len(exact & ivf) / len(exact)
-    assert recall >= 0.5, f"IVF recall too low: {recall} ({exact=} {ivf=})"
 
 
 def test_classifier_separable_target(spark):

@@ -210,14 +210,16 @@ def test_ngram_jaccard_one_arrow_pass_then_equi_join(spark):
     keys_plan = _plan_of(spark, doc_keys(load_table(spark, SF, "documents")))
     assert keys_plan.count("MapInArrow (") == 1, keys_plan
     assert "Exchange" not in keys_plan, keys_plan
-    # the operator reads that pass once materialized: no Python node is
-    # left to re-run it per join side, and candidates come from an equi-join
-    plan = _plan(spark, "dedup_ngram_jaccard")
-    assert not [n for n in PY_NODES if n in plan], plan
-    reads = _checkpoint_reads(plan)
-    assert len(reads) >= 2 and len(set(reads)) == 1, plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    # each operator reads its band pass once materialized: no Python node
+    # is left to re-run it per join side, and the shared band_pairs
+    # self-join is an equi-join
+    for name in ("dedup_ngram_jaccard", "dedup_embedding_cosine"):
+        plan = _plan(spark, name)
+        assert not [n for n in PY_NODES if n in plan], (name, plan)
+        reads = _checkpoint_reads(plan)
+        assert len(reads) >= 2 and len(set(reads)) == 1, (name, plan)
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_knn_join_runs_the_pivot_pass_once(spark):

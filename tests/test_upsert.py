@@ -84,3 +84,27 @@ def test_random_upsert_replay_matches_dict(spark):
         ).localCheckpoint(eager=True)  # fix lineage between batches
     got = {(r.station_id, r.ts): r.v for r in target.collect()}
     assert got == expected
+
+
+def test_sink_shape_key_ignores_session_timezone(spark):
+    """The RANGE key is the epoch of ts's wall-clock reading on any session
+    timezone: on Europe/Oslo the rows still equal the DuckDB oracle."""
+    import scripts.compare as cmp
+    from conftest import SF0001 as sf
+    from gjenbruksstasjoner_kotid_estimering_spark import registry
+
+    spec = registry.all_specs()["upsert_sink_shape"]
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "Europe/Oslo")
+    try:
+        got = spec.builder(spark, sf).toPandas()
+    finally:
+        spark.conf.set(key, prev)
+    con = cmp.duck_con(sf)
+    try:
+        want = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    problems = cmp.compare("upsert_sink_shape", got, want)
+    assert not problems, problems
