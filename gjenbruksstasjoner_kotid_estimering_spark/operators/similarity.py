@@ -13,12 +13,17 @@ dimension-agnostic).
 - ``dedup_embedding_cosine`` : all-pairs cosine dedup over pivot-sign LSH
                                candidates.
 - ``similarity_knn_join``    : top-k neighbors for many queries at once over
-                               the same pivot-sign candidates.
+                               the same pivot-sign candidates, scored in one
+                               Arrow pass against the collected query set.
 
 At 100 TB brute force against one query is still a single pass (fine);
 the all-pairs and many-query workloads, where O(n²) is impossible, share
-one candidate family: pivot-sign LSH bands (``_pivot_bands``), which DuckDB
-derives identically, so the candidate sets are part of the oracle contract.
+one candidate family: pivot-sign LSH band keys (``_band_keys``, behind
+both ``_pivot_bands`` and the kNN pass), which DuckDB derives identically,
+so the candidate sets are part of the oracle contract. Every cosine is the same ordered
+fold in double on every path: the Spark expression (``cosine_col``), its
+numpy twin (``cosine``) and DuckDB's ``list_aggregate``; a zero
+denominator gives a NULL cosine on all three.
 """
 
 from __future__ import annotations
@@ -51,7 +56,9 @@ def _fold_dot(a: Column, b: Column) -> Column:
 
 def cosine_col(a: Column, b: Column) -> Column:
     a, b = _as_double(a), _as_double(b)
-    return _fold_dot(a, b) / (F.sqrt(_fold_dot(a, a)) * F.sqrt(_fold_dot(b, b)))
+    # try_divide: a zero vector gives a NULL cosine, as in DuckDB, where
+    # ANSI `/` would fail the query
+    return F.try_divide(_fold_dot(a, b), F.sqrt(_fold_dot(a, a)) * F.sqrt(_fold_dot(b, b)))
 
 
 @register(
@@ -148,60 +155,139 @@ PIVOT_BANDS_ORACLE_CTES = f"""base AS (
         )"""
 
 
+def _vectors(emb):
+    """(starts, lengths, float64 values, ok) of a pyarrow list array of
+    vectors; ``ok`` marks the rows that are non-NULL and hold no NULL
+    element, the only rows whose ``_fold_dot`` can be non-NULL.
+
+    The starts index the values array, which a sliced list array does
+    not slice."""
+    offs = emb.offsets.to_numpy()
+    vals = emb.values
+    flat = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+    nulls = np.concatenate([[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
+    ok = emb.is_valid().to_numpy(zero_copy_only=False) & (nulls[offs[1:]] == nulls[offs[:-1]])
+    return offs[:-1], np.diff(offs), flat, ok
+
+
+def _fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``_fold_dot`` over the last axis of two broadcastable float64 arrays:
+    a left fold from 0.0, adding one product at a time, so every partial
+    sum rounds as the Spark fold's does."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    with np.errstate(all="ignore"):  # NaN and inf are results, as in IEEE
+        for j in range(a.shape[-1]):
+            acc = acc + a[..., j] * b[..., j]
+    return acc
+
+
 def pivot_bits(emb, pivots: list) -> np.ndarray:
     """(rows, pivots) sign bits of ``_fold_dot(v, p) >= 0``, for a pyarrow
     list array of vectors and a list of pivot vectors (float64 arrays, or
     None for a NULL pivot).
 
-    The dot is the same left fold as ``_fold_dot``, starting from 0.0 and
-    adding one product at a time, vectorized across rows and pivots, so
-    every bit matches the Spark fold's IEEE result. As in Spark, a NULL
-    vector, a NULL element or a length mismatch makes the dot NULL (bit
-    0), and NaN counts as >= 0 because Spark orders NaN above every number.
+    The dot is ``_fold``, vectorized across rows and pivots, so every bit
+    matches the Spark fold's IEEE result. As in Spark, a NULL vector, a
+    NULL element or a length mismatch makes the dot NULL (bit 0), and NaN
+    counts as >= 0 because Spark orders NaN above every number.
     """
-    offs = emb.offsets.to_numpy()
-    lens = np.diff(offs)
-    vals = emb.values
-    flat = vals.to_numpy(zero_copy_only=False).astype(np.float64)
-    nulls = np.concatenate([[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
-    ok = emb.is_valid().to_numpy(zero_copy_only=False) & (nulls[offs[1:]] == nulls[offs[:-1]])
+    starts, lens, flat, ok = _vectors(emb)
     bits = np.zeros((len(emb), len(pivots)), dtype=bool)
     for n in np.unique(lens[ok]):
         cols = [j for j, p in enumerate(pivots) if p is not None and len(p) == n]
         if not cols:
             continue
         rows = np.flatnonzero(ok & (lens == n))
-        v = flat[offs[rows][:, None] + np.arange(n)]
+        v = flat[starts[rows][:, None] + np.arange(n)]
         p = np.stack([pivots[j] for j in cols]).reshape(len(cols), n)
-        acc = np.zeros((len(rows), len(cols)))
-        for j in range(n):
-            acc = acc + v[:, j, None] * p[None, :, j]
+        acc = _fold(v[:, None, :], p[None, :, :])
         bits[np.ix_(rows, cols)] = (acc >= 0) | np.isnan(acc)
     return bits
 
 
+def cosine(a, b):
+    """Row-wise ``cosine_col(a, b)`` of two equal-length pyarrow list
+    arrays, as a pyarrow double array.
+
+    The dot and both norms are ``_fold``s and the divide is IEEE, so every
+    double is bit-identical to Spark's; the cosine is NULL where Spark's
+    is: a NULL vector or element, a length mismatch, or a zero
+    denominator."""
+    import pyarrow as pa
+
+    sa, la, fa, ok_a = _vectors(a)
+    sb, lb, fb, ok_b = _vectors(b)
+    ok = ok_a & ok_b & (la == lb)
+    dot, den = np.zeros(len(a)), np.zeros(len(a))
+    with np.errstate(all="ignore"):
+        for n in np.unique(la[ok]):
+            rows = np.flatnonzero(ok & (la == n))
+            va = fa[sa[rows][:, None] + np.arange(n)]
+            vb = fb[sb[rows][:, None] + np.arange(n)]
+            dot[rows] = _fold(va, vb)
+            den[rows] = np.sqrt(_fold(va, va)) * np.sqrt(_fold(vb, vb))
+        ok &= den != 0
+        cos = np.divide(dot, den, out=np.zeros(len(a)), where=ok)
+    return pa.array(cos, mask=~ok)
+
+
+def _order_key(row):
+    """Spark's ascending ``orderBy("vec_id", "embedding")`` as a sort key:
+    on a vec_id tie a NULL vector first, then element by element (a NULL
+    element first, NaN after every number, -0.0 equal to 0.0), a vector
+    before its extensions."""
+
+    def elem(x):
+        return (0, 0.0) if x is None else (2, 0.0) if x != x else (1, x)
+
+    emb = row.embedding
+    return row.vec_id, (emb is not None, [elem(x) for x in emb or ()])
+
+
+def _pivots(rows) -> list:
+    """The pivot vectors among collected (vec_id, embedding) rows: those
+    with vec_id < N_PIVOTS, in the oracle's ``list(v ORDER BY vec_id)``
+    order (ties as Spark orders them), each a float64 array, or None for a
+    NULL vector or one with a NULL element."""
+    return [
+        None if r.embedding is None or None in r.embedding
+        else np.array(r.embedding, dtype=np.float64)
+        for r in sorted((r for r in rows if r.vec_id < N_PIVOTS), key=_order_key)
+    ]
+
+
+def _band_keys(bits: np.ndarray) -> np.ndarray:
+    """(rows, PV_BANDS) band keys of (rows, pivots) sign bits: band b's
+    bits read as a binary number, plus b << PV_BAND_BITS, so two rows
+    share a key exactly when the oracle's ``bands`` gives them one
+    (band_id, band_val). Bits past the last pivot read as 0, which keeps
+    the keys one-to-one with band_val's shorter substrings when there
+    are fewer than PV_BANDS × PV_BAND_BITS pivots."""
+    width = PV_BANDS * PV_BAND_BITS
+    padded = np.zeros((len(bits), width), dtype=np.int64)
+    k = min(width, bits.shape[1])
+    padded[:, :k] = bits[:, :k]
+    weights = 1 << np.arange(PV_BAND_BITS - 1, -1, -1)
+    codes = padded.reshape(len(bits), PV_BANDS, PV_BAND_BITS) @ weights
+    return codes + (np.arange(PV_BANDS) << PV_BAND_BITS)
+
+
 def _pivot_band_batches(pivots: list):
     """mapInArrow body: (vec_id, embedding) → one (vec_id, band_id,
-    band_val) row per band, band_val being that band's slice of the
-    vector's pivot-sign bit string."""
+    band_val) row per band, band_val being that band's ``_band_keys``
+    key."""
 
     def run(batches):
         import pyarrow as pa
 
         for batch in batches:
-            bits = pivot_bits(batch.column("embedding"), pivots)
-            rows = pa.array(np.repeat(np.arange(len(bits)), PV_BANDS))
-            chars = np.where(bits, "1", "0")
-            vals = [
-                "".join(chars[i, b * PV_BAND_BITS : (b + 1) * PV_BAND_BITS])
-                for i in range(len(bits))
-                for b in range(PV_BANDS)
-            ]
+            keys = _band_keys(pivot_bits(batch.column("embedding"), pivots))
+            rows = pa.array(np.repeat(np.arange(len(keys)), PV_BANDS))
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id").take(rows).cast(pa.int64()),
-                    pa.array(np.tile(np.arange(PV_BANDS, dtype=np.int32), len(bits))),
-                    pa.array(vals, pa.string()),
+                    pa.array(np.tile(np.arange(PV_BANDS, dtype=np.int32), len(keys))),
+                    pa.array(keys.ravel()),
                 ],
                 names=["vec_id", "band_id", "band_val"],
             )
@@ -213,17 +299,12 @@ def _pivot_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, band_id, band_val) pivot-sign LSH bands (Spark twin of
     PIVOT_BANDS_ORACLE_CTES's ``bands``), materialized once.
 
-    The N_PIVOTS pivots are collected once, in (vec_id, vector) order as
-    the oracle's ``list(v ORDER BY vec_id)``; one Arrow pass over the
-    embeddings scan computes every vector's bits against them."""
+    The N_PIVOTS pivots are collected once (``_pivots``); one Arrow pass
+    over the embeddings scan computes every vector's bits against them."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pivots = [
-        None if r.embedding is None or None in r.embedding
-        else np.array(r.embedding, dtype=np.float64)
-        for r in e.where(F.col("vec_id") < N_PIVOTS).orderBy("vec_id", "embedding").collect()
-    ]
+    pivots = _pivots(e.where(F.col("vec_id") < N_PIVOTS).collect())
     bands = e.mapInArrow(
-        _pivot_band_batches(pivots), "vec_id long, band_id int, band_val string"
+        _pivot_band_batches(pivots), "vec_id long, band_id int, band_val long"
     )
     return bands.localCheckpoint(eager=False)
 
@@ -277,9 +358,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            (
-                _fold_dot(F.col("na.v"), F.col("nb.v"))
-                / (F.col("na.norm") * F.col("nb.norm"))
+            F.try_divide(
+                _fold_dot(F.col("na.v"), F.col("nb.v")),
+                F.col("na.norm") * F.col("nb.norm"),
             ).alias("cosine"),
         )
     )
@@ -291,6 +372,45 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shape, vs similarity_topk's single query).
 KNN_QUERY_MOD = 50
 KNN_K = 5
+
+
+def _knn_batches(pivots: list, qids: np.ndarray, qemb):
+    """mapInArrow body: (vec_id, embedding) → one (qid, nid, cosine) row
+    per (query, non-query row) pair that shares a pivot-sign band.
+
+    The query band keys are sorted once; each row's PV_BANDS keys are
+    looked up in them by binary search, so a batch costs O(rows × bands)
+    lookups plus its candidate pairs, not O(rows × queries)."""
+    flat = _band_keys(pivot_bits(qemb, pivots)).ravel()
+    order = np.argsort(flat, kind="stable")
+    qkeys, qrow = flat[order], order // PV_BANDS
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            vid = batch.column("vec_id").cast(pa.int64())
+            ids = vid.fill_null(0).to_numpy()
+            valid = vid.is_valid().to_numpy(zero_copy_only=False)
+            corpus = np.flatnonzero(valid & (ids % KNN_QUERY_MOD != 0))
+            emb = batch.column("embedding").take(corpus)
+            keys = _band_keys(pivot_bits(emb, pivots)).ravel()
+            lo = np.searchsorted(qkeys, keys)
+            hits = np.searchsorted(qkeys, keys, side="right") - lo
+            at = np.repeat(lo - np.cumsum(hits) + hits, hits) + np.arange(hits.sum())
+            row = np.repeat(np.arange(keys.size) // PV_BANDS, hits)
+            pair = np.unique(row * len(qids) + qrow[at])
+            row, q = pair // len(qids), pair % len(qids)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids[q]),
+                    pa.array(ids[corpus[row]]),
+                    cosine(qemb.take(q), emb.take(row)),
+                ],
+                names=["qid", "nid", "cosine"],
+            )
+
+    return run
 
 
 @register(
@@ -325,48 +445,37 @@ KNN_K = 5
     doc=f"Batch ANN join: top-{KNN_K} cosine neighbors for EVERY query "
     f"vector (vec_id % {KNN_QUERY_MOD} == 0) at once — the many-query "
     "retrieval shape (RAG index eval, dedup-against-seed-set), vs "
-    "similarity_topk's single probe. Pivot-sign LSH proposes bucket-mate "
-    "candidates (one Arrow pass against the 40 collected pivots, "
-    "materialized once and read by both the broadcast query side and the "
-    "corpus side; the same engine-portable contract as "
-    "dedup_embedding_cosine, so the candidate set itself is oracle-"
-    "checked); exact ordered-fold cosine scores only candidates; per-query "
-    "row_number (cosine desc, id tiebreak) keeps k. Scale shape: no "
-    "corpus×query cross join anywhere — band hash-join, candidate-sized "
-    "scoring, and a per-query WindowGroupLimit.",
+    "similarity_topk's single probe. The query set is small by definition, "
+    "so the 40 pivots and the queries are collected once and shipped to "
+    "every partition (REPOSE-style); one Arrow pass straight on the "
+    "embeddings scan takes each vector's pivot-sign bits, looks its 5 band "
+    "keys up in the sorted query keys (rows × bands lookups, not rows × "
+    "queries) and scores each band-sharing (query, non-query row) pair "
+    "with the exact ordered-fold cosine, bit-identical to the Spark and "
+    "DuckDB folds. The candidate set is the same engine-portable contract "
+    "as dedup_embedding_cosine, so it is oracle-checked; per-query "
+    "row_number (cosine desc, id tiebreak) keeps k. Scale shape: no join "
+    "and no exchange before the pass, one shuffle of candidate-sized rows "
+    "into a per-query WindowGroupLimit. Each row is scored on its own: "
+    "for a duplicated vec_id only the copies sharing a band are scored "
+    "(the oracle's join on vec_id scores every copy).",
     tags=("similarity", "knn", "lsh", "join"),
 )
 def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pyarrow as pa
     from pyspark.sql import Window as W
 
-    bands = _pivot_bands(spark, sf_dir)
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_query = F.col("vec_id") % KNN_QUERY_MOD == 0
-    qb = bands.where(is_query).select(
-        F.col("vec_id").alias("qid"), "band_id", "band_val"
-    )
-    cb = bands.where(~is_query)
-    # the query set is the small side by definition (eval suites / probe
-    # batches vs the full corpus): broadcast it so the corpus bands never
-    # shuffle, at any corpus size
-    cand = (
-        F.broadcast(qb)
-        .join(cb, ["band_id", "band_val"])
-        .select("qid", F.col("vec_id").alias("nid"))
-        .distinct()
-    )
-    normed = _pivot_normed(spark, sf_dir)
-    na, nb = normed.alias("na"), normed.alias("nb")
-    scored = (
-        cand.join(na, F.col("qid") == F.col("na.vec_id"))
-        .join(nb, F.col("nid") == F.col("nb.vec_id"))
-        .select(
-            "qid",
-            "nid",
-            (
-                _fold_dot(F.col("na.v"), F.col("nb.v"))
-                / (F.col("na.norm") * F.col("nb.norm"))
-            ).alias("cosine"),
-        )
+    rows = e.where((F.col("vec_id") < N_PIVOTS) | is_query).collect()
+    queries = [r for r in rows if r.vec_id % KNN_QUERY_MOD == 0]
+    scored = e.mapInArrow(
+        _knn_batches(
+            _pivots(rows),
+            np.array([r.vec_id for r in queries], dtype=np.int64),
+            pa.array([r.embedding for r in queries], pa.list_(pa.float64())),
+        ),
+        "qid long, nid long, cosine double",
     )
     w = W.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
     return (

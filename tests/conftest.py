@@ -25,3 +25,15 @@ def spark():
 
     spark = get_spark("pytest", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+def jobs_started(spark, group, fn):
+    """Spark jobs ``fn()`` starts, counted under a private job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -5,8 +5,11 @@ kNN against brute force, recall floors)."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
+import scripts.compare as cmp
+from gjenbruksstasjoner_kotid_estimering_spark import registry
 from gjenbruksstasjoner_kotid_estimering_spark.operators import clusters, dedup, similarity
 from perfbench import checks, gen
 
@@ -60,3 +63,37 @@ def test_corpus_lane_matches_planted_truth(spark, corpus):
     assert checks.check_knn(got, emb, truth["twins"], gen.KNN_QUERY_MOD, k) == []
     assert set(got) == set(range(0, N_DOCS, gen.KNN_QUERY_MOD))
     assert all(len(nn) == k for nn in got.values())
+
+
+def _oracle_problems(spark, sf_dir: str, name: str) -> list[str]:
+    """Spark rows of a registered operator vs its DuckDB oracle over the
+    corpus's own two tables (``cmp.duck_con`` expects every TPC-H table)."""
+    con = duckdb.connect()
+    try:
+        for t in ("documents", "embeddings"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        spec = registry.all_specs()[name]
+        want = con.execute(spec.oracle).fetchdf()
+    finally:
+        con.close()
+    return cmp.compare(name, spec.builder(spark, sf_dir).toPandas(), want)
+
+
+def test_knn_join_matches_oracle_on_corpus(spark, corpus):
+    sf_dir, _ = corpus
+    assert _oracle_problems(spark, sf_dir, "similarity_knn_join") == []
+
+
+def test_zero_embedding_gives_null_cosine(spark, tmp_path):
+    """An all-zero vector has norm 0.0. With ANSI on, a plain `/` fails
+    the whole query with DIVIDE_BY_ZERO; DuckDB's oracles give a NULL
+    cosine, and so must every cosine operator."""
+    data = gen.corpus(1, 1000)
+    data["embeddings"]["embedding"][50] = 0.0  # a query vector
+    sf_dir = str(tmp_path / "zero")
+    gen.write_corpus(sf_dir, data)
+    for name in ("similarity_knn_join", "similarity_topk", "dedup_embedding_cosine"):
+        assert _oracle_problems(spark, sf_dir, name) == [], name
+    rows = similarity.similarity_knn_join(spark, sf_dir).where("query_id = 50").collect()
+    assert len(rows) == similarity.KNN_K
+    assert all(r.cosine is None for r in rows)

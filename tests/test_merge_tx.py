@@ -9,6 +9,7 @@ import os
 import threading
 
 import pytest
+from conftest import jobs_started
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -1039,18 +1040,6 @@ def test_streaming_merge_crash_before_manifest_commit(spark, monkeypatch, tmp_pa
 # --- table schema recorded in each manifest ----------------------------
 
 
-def _jobs_started(spark, group, fn):
-    """Spark jobs ``fn()`` starts, counted under a private job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "job count probe")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _inferred(spark, t, version):
     """A version's files read by footer inference (mergeSchema)."""
     files = mt._read_manifest(t, version)
@@ -1069,7 +1058,7 @@ def test_snapshot_starts_no_spark_job(spark, tmp_path):
         snap, _ = mt.snapshot(spark, t)
         got["columns"] = snap.columns
 
-    assert _jobs_started(spark, "merge_tx_snapshot_probe", read) == 0
+    assert jobs_started(spark, "merge_tx_snapshot_probe", read) == 0
     assert got["columns"] == ["k", "v"]
 
 
@@ -1165,7 +1154,7 @@ def test_merge_job_count_guard(spark, tmp_path, conditional):
     upd = _updates(
         spark, [(1, 100, 1), (3, 300, 1), (5, 500, 1), (41, 410, 1), (42, 420, 1)]
     )
-    jobs = _jobs_started(
+    jobs = jobs_started(
         spark,
         f"merge_tx_job_guard_{conditional}",
         lambda: mt.merge(spark, t, upd, ["k"], "_ord", conditional=conditional),

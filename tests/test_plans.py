@@ -10,6 +10,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from conftest import jobs_started
 
 from gjenbruksstasjoner_kotid_estimering_spark import registry
 
@@ -187,13 +188,6 @@ def test_decontaminate_broadcasts_benchmark_grams(spark):
     assert n_exchanges <= 4, plan
 
 
-def test_knn_join_broadcasts_query_bands(spark):
-    plan = _plan(spark, "similarity_knn_join")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "WindowGroupLimit" in plan  # rank<=k prunes per-partition
-
-
 PY_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
 
@@ -222,12 +216,44 @@ def test_ngram_jaccard_one_arrow_pass_then_equi_join(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
+def _subtree(plan: str, node: str) -> list[str]:
+    """The tree lines of a formatted plan below the first ``node`` line."""
+    lines = plan.split("\n\n")[0].splitlines()
+    at = next(i for i, line in enumerate(lines) if f"{node} (" in line)
+    depth = lines[at].index(node)
+    below = []
+    for line in lines[at + 1 :]:
+        if len(line) - len(line.lstrip(" :|+-")) <= depth:
+            break
+        below.append(line)
+    return below
+
+
+def test_knn_join_broadcasts_query_bands(spark):
+    plan = _plan(spark, "similarity_knn_join")
+    # the query bands are collected and shipped with the Arrow pass, so the
+    # corpus side meets them without any join
+    for join in ("BroadcastHashJoin", "SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert join not in plan, (join, plan)
+    assert "WindowGroupLimit" in plan  # rank<=k prunes per-partition
+
+
 def test_knn_join_runs_the_pivot_pass_once(spark):
     plan = _plan(spark, "similarity_knn_join")
-    assert not [n for n in PY_NODES if n in plan], plan
-    # the query (broadcast) and corpus sides read one materialized band frame
-    reads = _checkpoint_reads(plan)
-    assert len(reads) == 2 and len(set(reads)) == 1, plan
+    # candidates and scores come from one Python pass straight on the scan:
+    # no materialized band frame and no exchange before it
+    assert plan.count("MapInArrow (") == 1, plan
+    assert not [line for line in _subtree(plan, "MapInArrow") if "Exchange" in line], plan
+    assert not _checkpoint_reads(plan), plan
+
+
+def test_knn_join_job_count_guard(spark):
+    """A kNN join starts at most 4 Spark jobs: the one collect of the
+    pivots and queries, then the scoring pass and the ranking."""
+    from gjenbruksstasjoner_kotid_estimering_spark.operators import similarity
+
+    knn = similarity.similarity_knn_join
+    assert jobs_started(spark, "knn_join_job_guard", lambda: knn(spark, SF).collect()) <= 4
 
 
 def test_chunker_has_no_shuffle(spark):

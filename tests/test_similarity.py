@@ -1,14 +1,22 @@
-"""Pivot-sign LSH: the Arrow pass of similarity._pivot_bands against the
-``_fold_dot`` sign it replaced, on edge rows and on random vectors."""
+"""The Arrow passes of the pivot-sign LSH and the kNN join against the
+Spark expressions they replaced (the ``_fold_dot`` sign, ``cosine_col``,
+``orderBy``), on edge rows and on random vectors."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from gjenbruksstasjoner_kotid_estimering_spark.operators import similarity
 from gjenbruksstasjoner_kotid_estimering_spark.operators.similarity import (
     _fold_dot,
+    _order_key,
+    _pivots,
+    cosine,
+    cosine_col,
     pivot_bits,
 )
 
@@ -95,3 +103,94 @@ def test_pivot_bits_sliced_batch():
     piv = [None if p is None else np.array(p) for p in PIVOTS]
     full = pivot_bits(emb, piv)
     assert (pivot_bits(emb.slice(2, 6), piv) == full[2:8]).all()
+
+
+def test_cosine_matches_cosine_col_on_edge_rows(spark):
+    """The kNN pass's Arrow cosine against Spark's ``cosine_col`` on every
+    ordered pair of the edge vectors plus a zero vector: doubles bit-equal
+    (NaN as NaN), NULLs in the same places. The rank window stays
+    Spark's, so NaN (first under ``cosine desc``) and NULL (last) rank as
+    they did."""
+    vectors = VECTORS + [[0.0, 0.0, 0.0]]
+    pairs = [(i, j) for i in range(len(vectors)) for j in range(len(vectors))]
+    df = spark.createDataFrame(
+        [(i, j, vectors[i], vectors[j]) for i, j in pairs],
+        schema="i int, j int, a array<float>, b array<float>",
+    )
+    want = [
+        r.c
+        for r in df.select("i", "j", cosine_col(F.col("a"), F.col("b")).alias("c"))
+        .orderBy("i", "j")
+        .collect()
+    ]
+    emb = pa.array(vectors, pa.list_(pa.float32()))
+    i, j = np.array(pairs).T
+    got = cosine(emb.take(i), emb.take(j)).to_pylist()
+    assert [None if x is None else x.hex() for x in got] == [
+        None if x is None else x.hex() for x in want
+    ]
+    nulls = {p for p, x in zip(pairs, got) if x is None}
+    assert {(6, 0), (7, 0), (8, 0), (0, 8), (12, 12), (12, 0)} <= nulls
+    assert got[pairs.index((3, 0))] != got[pairs.index((3, 0))]  # NaN
+    assert got[pairs.index((11, 11))] is not None
+
+
+TIE_ROWS = [
+    (3, [1.0, 2.0]),
+    (3, None),
+    (3, [1.0, None]),
+    (3, [1.0]),
+    (3, [1.0, NAN]),
+    (3, [NAN]),
+    (3, [-1.0, 5.0]),
+    (3, [1.0, 2.0, 0.0]),
+    (3, []),
+    (3, [None]),
+    (2, [9.0]),
+    (45, [0.0]),  # not a pivot: vec_id >= N_PIVOTS
+]
+
+
+def test_pivots_order_ties_as_spark_does(spark):
+    """The order ``_pivots`` sorts to in Python against Spark's
+    ``orderBy("vec_id", "embedding")`` on vec_id ties: a NULL vector
+    first, then element by element with a NULL element first and NaN
+    last, a prefix first."""
+    df = spark.createDataFrame(TIE_ROWS, schema="vec_id long, embedding array<float>")
+    ordered = df.orderBy("vec_id", "embedding").collect()
+    rows = df.collect()  # in TIE_ROWS order
+    assert [(r.vec_id, repr(r.embedding)) for r in sorted(rows, key=_order_key)] == [
+        (r.vec_id, repr(r.embedding)) for r in ordered
+    ]
+    assert [None if p is None else repr(p.tolist()) for p in _pivots(rows)] == [
+        None if r.embedding is None or None in r.embedding else repr(r.embedding)
+        for r in ordered
+        if r.vec_id < similarity.N_PIVOTS
+    ]
+
+
+def test_knn_join_scores_each_row_of_a_duplicated_id(spark, tmp_path):
+    """vec_id is unique in the lane's corpus and the testdata; the pass
+    still runs when it is not, and then scores each row on its own. A
+    copy of an id that shares no band with a query is no candidate of it,
+    where a join back on vec_id (the DuckDB oracle's) scores every copy
+    of a candidate id."""
+    rng = np.random.default_rng(7)
+    emb = rng.normal(size=(60, 16)).astype(np.float32)
+    emb[41] = 2 * emb[0]  # every band of query 0
+    emb = np.vstack([emb, -emb[0]])  # a second vec_id 41: no band of query 0
+    ids = np.append(np.arange(60), 41)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(list(emb), pa.list_(pa.float32())),
+                "label": pa.array(np.zeros(len(ids), dtype=np.int32)),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    rows = similarity.similarity_knn_join(spark, str(tmp_path)).collect()
+    dup = [r for r in rows if r.query_id == 0 and r.neighbor_id == 41]
+    assert len(dup) == 1
+    assert dup[0].rank == 1 and dup[0].cosine == pytest.approx(1.0)
