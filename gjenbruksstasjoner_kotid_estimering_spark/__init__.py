@@ -7,6 +7,7 @@ the image/model path and the corpus lane's LSH keys.
 Package layout:
 
 - ``session``   : SparkSession construction + runtime tuning knobs
+- ``pydaemon``  : Python worker daemon of ``session.get_spark`` sessions
 - ``io``        : parquet table loaders for the driver testdata layout
 - ``registry``  : QuerySpec registry binding each operator to (Spark builder,
                   DuckDB oracle SQL) — the oracle-checked query inventory

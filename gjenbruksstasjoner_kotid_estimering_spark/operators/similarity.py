@@ -22,8 +22,9 @@ one candidate family: pivot-sign LSH band keys (``_band_keys``, behind
 both ``_pivot_bands`` and the kNN pass), which DuckDB derives identically,
 so the candidate sets are part of the oracle contract. Every cosine is the same ordered
 fold in double on every path: the Spark expression (``cosine_col``), its
-numpy twin (``cosine``) and DuckDB's ``list_aggregate``; a zero
-denominator gives a NULL cosine on all three.
+numpy twin (``cosine``) and the oracles' DuckDB fold (``_duck_dot``); a
+zero denominator, a NULL element or a length mismatch gives a NULL cosine
+on all three.
 """
 
 from __future__ import annotations
@@ -54,6 +55,19 @@ def _fold_dot(a: Column, b: Column) -> Column:
     )
 
 
+def _duck_dot(a: str, b: str) -> str:
+    """DuckDB SQL for ``_fold_dot`` of two list expressions: the same left
+    fold from 0.0 in double, NULL on a NULL vector, a NULL element or a
+    length mismatch, and 0.0 for two empty vectors. (``list_aggregate(...,
+    'sum')`` skips NULL products and reads an out-of-range ``b[i]`` as
+    NULL, so it gives a real dot for all three.)"""
+    return (
+        f"CASE WHEN len({a}) = len({b}) THEN list_reduce(list_prepend(0.0::DOUBLE, "
+        f"list_transform({a}, (x, i) -> CAST(x AS DOUBLE) * CAST({b}[i] AS DOUBLE))), "
+        "(acc, x) -> acc + x) END"
+    )
+
+
 def cosine_col(a: Column, b: Column) -> Column:
     a, b = _as_double(a), _as_double(b)
     # try_divide: a zero vector gives a NULL cosine, as in DuckDB, where
@@ -68,15 +82,9 @@ def cosine_col(a: Column, b: Column) -> Column:
                    WHERE vec_id = {QUERY_VEC_ID}),
         scored AS (
           SELECT e.vec_id, e.label,
-                 list_aggregate(list_transform(e.embedding,
-                     (x, i) -> CAST(x AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)),
-                     'sum')
-                 / (sqrt(list_aggregate(list_transform(e.embedding,
-                        (x, i) -> CAST(x AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
-                        'sum'))
-                    * sqrt(list_aggregate(list_transform(q.qv,
-                        (x, i) -> CAST(x AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)),
-                        'sum'))) AS cosine
+                 {_duck_dot("e.embedding", "q.qv")}
+                 / (sqrt({_duck_dot("e.embedding", "e.embedding")})
+                    * sqrt({_duck_dot("q.qv", "q.qv")})) AS cosine
           FROM embeddings e CROSS JOIN q
         )
         SELECT vec_id, label, cosine
@@ -140,17 +148,14 @@ PIVOT_BANDS_ORACLE_CTES = f"""base AS (
         bucketed AS (
           SELECT vec_id,
                  array_to_string(list_transform(pivots,
-                   p -> CASE WHEN list_aggregate(
-                                list_transform(v, (x, i) -> x * p[i]),
-                                'sum') >= 0
+                   p -> CASE WHEN {_duck_dot("v", "p")} >= 0
                         THEN '1' ELSE '0' END), '') AS bits
           FROM base CROSS JOIN pv
         ),
         bands AS ({_PV_BAND_SELECTS}),
         normed AS (
           SELECT vec_id, v,
-                 sqrt(list_aggregate(list_transform(v, (x, i) -> x * v[i]),
-                      'sum')) AS norm
+                 sqrt({_duck_dot("v", "v")}) AS norm
           FROM base
         )"""
 
@@ -328,8 +333,7 @@ def _pivot_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         scored AS (
           SELECT c.vec_a, c.vec_b,
-                 list_aggregate(list_transform(a.v, (x, i) -> x * b.v[i]),
-                     'sum') / (a.norm * b.norm) AS cosine
+                 {_duck_dot("a.v", "b.v")} / (a.norm * b.norm) AS cosine
           FROM cand c
           JOIN normed a ON a.vec_id = c.vec_a
           JOIN normed b ON b.vec_id = c.vec_b
@@ -426,8 +430,7 @@ def _knn_batches(pivots: list, qids: np.ndarray, qemb):
         ),
         scored AS (
           SELECT cand.qid, cand.nid,
-                 list_aggregate(list_transform(a.v, (x, i) -> x * b.v[i]),
-                     'sum') / (a.norm * b.norm) AS cosine
+                 {_duck_dot("a.v", "b.v")} / (a.norm * b.norm) AS cosine
           FROM cand
           JOIN normed a ON a.vec_id = cand.qid
           JOIN normed b ON b.vec_id = cand.nid

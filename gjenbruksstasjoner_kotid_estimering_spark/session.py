@@ -11,6 +11,18 @@ timezone pinned UTC (reference parses Europe/Oslo wall-times into epoch —
 estimate_queue.py:49-51 — we normalize at parse time and keep the engine in
 UTC), shuffle partitions sized to the local core count for tests but left to
 AQE coalescing at scale.
+
+Python workers: sessions built by ``get_spark()`` fork their Python
+workers from ``pydaemon`` (``spark.python.daemon.module``) instead of
+``pyspark.daemon``. Workers import pyspark from ``pyspark.zip``, and on
+Python < 3.12 every ``mapInArrow``/``mapInPandas`` task re-read that
+archive's whole directory through ``importlib.invalidate_caches()``:
+about 0.2 s per task, more than half of a trivial Python job. ``pydaemon``
+re-reads an archive only when it has changed. The package's root goes on
+the workers' ``PYTHONPATH``, so the daemon imports from any working
+directory. The daemon module is a static conf, read when the context
+starts, so the driver-provided session in ``__spark_entry__`` (and
+``tune()``) cannot take it; it keeps the stock daemon.
 """
 
 from __future__ import annotations
@@ -85,6 +97,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
+        # workers must import the daemon module whatever their cwd
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -226,15 +226,17 @@ def preprocess_images(
 
     ``n_partitions``: small-file corpora pack into few input splits
     (maxPartitionBytes), starving the CPU-bound UDF; set this to fan the
-    compute out (the tiny binary payloads reshuffle cheaply). Leave None
-    when the source layout already yields enough splits.
+    compute out (the tiny binary payloads reshuffle cheaply). The scan is
+    repartitioned only when it has fewer splits than that: a few frames
+    already get a split each, and the exchange would only add a stage.
+    Counting the splits plans the scan but starts no job.
     """
     if decoder is None:
         decoder = jpeg_decoder()
     with_meta = with_path_metadata(images).select(
         "path", "station_id", "epoch", "content"
     )
-    if n_partitions is not None:
+    if n_partitions is not None and with_meta.rdd.getNumPartitions() < n_partitions:
         with_meta = with_meta.repartition(n_partitions)
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -5,7 +5,12 @@ kNN against brute force, recall floors)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import scripts.compare as cmp
@@ -71,7 +76,8 @@ def _oracle_problems(spark, sf_dir: str, name: str) -> list[str]:
     con = duckdb.connect()
     try:
         for t in ("documents", "embeddings"):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+            if os.path.exists(f"{sf_dir}/{t}.parquet"):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         spec = registry.all_specs()[name]
         want = con.execute(spec.oracle).fetchdf()
     finally:
@@ -97,3 +103,40 @@ def test_zero_embedding_gives_null_cosine(spark, tmp_path):
     rows = similarity.similarity_knn_join(spark, sf_dir).where("query_id = 50").collect()
     assert len(rows) == similarity.KNN_K
     assert all(r.cosine is None for r in rows)
+
+
+def test_malformed_embeddings_match_oracle(spark, tmp_path):
+    """A NULL element, a length mismatch, an empty or a NULL vector makes
+    Spark's ``_fold_dot`` (and the Arrow passes) NULL: a '0' pivot bit and
+    a NULL cosine. The oracles' DuckDB fold must agree, among the pivots,
+    the kNN queries and the rest; two empty vectors fold to 0.0 in both."""
+    rng = np.random.default_rng(11)
+    emb = [[float(x) for x in v] for v in rng.normal(size=(160, 16)).astype(np.float32)]
+    q0, q50 = emb[0], emb[50]
+    emb[3] = q0[:5] + [None] + q0[6:]  # a pivot with a NULL element
+    emb[7] = [2 * x for x in q0[:9]] + [None] + [2 * x for x in q0[10:]]
+    emb[11] = q0[:15]  # shorter than the query
+    emb[13] = q0 + [1.0]  # longer than the query
+    emb[17] = emb[19] = emb[61] = []
+    emb[23] = None
+    emb[60] = q50[:-1] + [None]  # next to query 50
+    emb[100] = q0[:4] + [None] + q0[5:]  # a kNN query with a NULL element
+    emb[150] = []  # an empty kNN query: its candidates are its band-mates
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(emb)), pa.int64()),
+                "embedding": pa.array(emb, pa.list_(pa.float32())),
+                "label": pa.array(np.zeros(len(emb), dtype=np.int32)),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    sf_dir = str(tmp_path)
+    for name in ("similarity_topk", "dedup_embedding_cosine", "similarity_knn_join"):
+        assert _oracle_problems(spark, sf_dir, name) == [], name
+    topk = similarity.similarity_topk(spark, sf_dir).collect()
+    assert not {7, 11, 13} & {r.vec_id for r in topk if r.cosine is not None}
+    knn = similarity.similarity_knn_join(spark, sf_dir).collect()
+    assert all(r.cosine is None for r in knn if r.query_id in (100, 150))
+    assert len([r for r in knn if r.query_id == 150]) == similarity.KNN_K

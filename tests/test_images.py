@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import jobs_started
 
 from gjenbruksstasjoner_kotid_estimering_spark.sources import images as im
 
@@ -93,6 +94,29 @@ def test_decode_error_names_the_frame(spark, tmp_path):
     feats = im.preprocess_images(im.read_images(spark, str(tmp_path)))
     with pytest.raises(PythonException, match=rf"ValueError: \S*/{bad}: truncated"):
         feats.collect()
+
+
+@pytest.mark.parametrize("n_partitions", [4, 8])
+def test_preprocess_repartitions_only_when_splits_are_short(spark, tmp_path, n_partitions):
+    """binaryFile gives 4 small frames a split each on 4 cores, so
+    ``n_partitions=4`` adds no exchange and 8 adds one; counting the
+    splits starts no job, and the rows do not change."""
+    for i in range(4):
+        (tmp_path / f"station_id_41_20200506T09{i}000.jpg").write_bytes(_frame_jpeg(i))
+    images = im.read_images(spark, str(tmp_path))
+    built = []
+    assert jobs_started(
+        spark, "preprocess-splits",
+        lambda: built.append(im.preprocess_images(images, n_partitions=n_partitions)),
+    ) == 0
+    (feats,) = built
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    assert ("Exchange" in plan) == (n_partitions > 4), plan
+
+    def rows(df):
+        return sorted((r.path, r.station_id, r.epoch, list(r.features)) for r in df.collect())
+
+    assert rows(feats) == rows(im.preprocess_images(images))
 
 
 FIXTURE_JPG = "/root/reference/test/data/station_id_41_20200506T094000.jpg"

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import ast
 import os
+import sys
 
 import pytest
 
@@ -67,3 +68,21 @@ def test_import_resolution():
 def test_lane_module_imports_no_demo_code(module):
     demo = sorted(n for n in imported_modules(module) if is_demo(n))
     assert not demo, f"{module} imports demo modules: {demo}"
+
+
+def test_worker_daemon_imports_only_stdlib_and_pyspark_daemon():
+    """Every Python worker forks from ``pydaemon``: it imports only the
+    standard library and ``pyspark.daemon``, nothing of the package (not
+    ``registry``, no lane module), so the daemon starts cheaply."""
+    assert imported_modules("pydaemon") == set()
+    with open(os.path.join(PKG_DIR, "pydaemon.py")) as f:
+        tree = ast.parse(f.read())
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            assert not node.level, "relative import"
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    other = {n for n in names if n.split(".")[0] not in sys.stdlib_module_names}
+    assert other == {"pyspark.daemon"}
