@@ -42,10 +42,9 @@ _PRED_SQL = """
 """
 
 
-def predictions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → synthetic (station_id, ts, queue_end_pos, queue_lanes,
-    queue_full) predictions table."""
-    ev = load_table(spark, sf_dir, "events")
+def predictions(ev: DataFrame) -> DataFrame:
+    """events (a batch or a streaming frame) → synthetic (station_id, ts,
+    queue_end_pos, queue_lanes, queue_full) predictions."""
     k = F.get_json_object("props", "$.k").cast("long")
     return ev.select(
         "event_id",
@@ -56,6 +55,25 @@ def predictions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "error", F.lit(0.95))
         .otherwise((k % 10).cast("double") / F.lit(10.0))
         .alias("queue_full"),
+    )
+
+
+def estimate_events(ev: DataFrame) -> DataFrame:
+    """events (a batch or a streaming frame) → the flagship estimate: the
+    synthetic heads, then the whole estimator chain. The batch
+    ``queue_estimate`` and the streaming ``queue_estimate_stream`` both
+    run it, so they plan one projection."""
+    out = est.with_queue_estimate(predictions(ev), ev.sparkSession)
+    return out.select(
+        "event_id",
+        "station_id",
+        "ts",
+        "x_pos",
+        "lanes",
+        "queue_full",
+        "meters",
+        "cars",
+        "expected_queue_time",
     )
 
 
@@ -79,7 +97,7 @@ def predictions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "asof", "interp"),
 )
 def asof_interp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    preds = predictions_df(spark, sf_dir)
+    preds = predictions(load_table(spark, sf_dir, "events"))
     clamped = preds.select(
         "event_id", F.greatest(F.col("queue_end_pos"), F.lit(0.0)).alias("x_pos")
     )
@@ -100,19 +118,7 @@ def asof_interp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("flagship", "pipeline"),
 )
 def queue_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    preds = predictions_df(spark, sf_dir)
-    out = est.with_queue_estimate(preds, spark)
-    return out.select(
-        "event_id",
-        "station_id",
-        "ts",
-        "x_pos",
-        "lanes",
-        "queue_full",
-        "meters",
-        "cars",
-        "expected_queue_time",
-    )
+    return estimate_events(load_table(spark, sf_dir, "events"))
 
 
 @register(

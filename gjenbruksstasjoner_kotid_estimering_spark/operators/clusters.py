@@ -25,19 +25,20 @@ once, then picks the solver by edge count:
   iterative-algorithm hygiene.
 
 :func:`connected_components_propagation` is the plain min-label
-propagation (rounds ∝ diameter), kept as the independent reference
-implementation the pytest equivalence check runs against.
+propagation (rounds ∝ diameter, run to its fixpoint), kept as the
+independent reference implementation the pytest equivalence check runs
+against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 from ..registry import register
 from ..session import scoped_shuffle_partitions
 
-MAX_ITERATIONS = 20
 MAX_STAR_ROUNDS = 50
 LOCAL_EDGE_CUTOFF = 100_000
 
@@ -54,10 +55,7 @@ def _canonical(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    local_cutoff: int = LOCAL_EDGE_CUTOFF,
+    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
     """(src, dst) undirected edges → (node, component = min reachable id).
 
@@ -72,12 +70,13 @@ def connected_components(
     The fixpoint is a forest of stars rooted at each component's minimum
     id; convergence is detected by edge-set stability (count + order-
     insensitive hash — exact equality of canonical edge sets up to a
-    2⁻⁶⁴ hash collision). Singleton docs (no candidate edge) don't appear,
-    matching the pair-driven dedup semantics.
+    2⁻⁶⁴ hash collision). Nodes without an edge don't appear, matching
+    the pair-driven dedup semantics. Ids may be of any orderable type;
+    the labels keep the edges' id type.
 
-    ``local_cutoff``: edge sets at or under this size skip the iteration
+    Edge sets of at most ``LOCAL_EDGE_CUTOFF`` edges skip the iteration
     and solve on the driver (union-find) — one collect instead of
-    O(log n) × 2 shuffles. Pass 0 to force the distributed path.
+    O(log n) × 2 shuffles.
     """
     # Materialize the canonical edge set ONCE before the size probe: the
     # probe's collect executes the whole upstream pipeline (e.g. MinHash
@@ -86,10 +85,11 @@ def connected_components(
     e = _canonical(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     ).localCheckpoint(eager=True)
-    if local_cutoff:
-        head = e.limit(local_cutoff + 1).collect()
-        if len(head) <= local_cutoff:
-            return _union_find_local(edges.sparkSession, head)
+    head = e.limit(LOCAL_EDGE_CUTOFF + 1).collect()
+    if len(head) <= LOCAL_EDGE_CUTOFF:
+        return _union_find_local(
+            edges.sparkSession, head, e.schema["u"].dataType
+        )
     # The edge frontier is orders smaller than the corpus that produced
     # it, and each of the ~2·log(n) rounds pays 3 shuffles + a signature
     # collect: at the session default that cost is per-task scheduling,
@@ -100,9 +100,12 @@ def connected_components(
     return labels
 
 
-def _union_find_local(spark: SparkSession, edge_rows) -> DataFrame:
+def _union_find_local(
+    spark: SparkSession, edge_rows, id_type: DataType
+) -> DataFrame:
     """Driver-side union-find over a collected small edge list → the same
-    (node, component=min reachable id) frame the distributed path emits.
+    (node, component=min reachable id) frame the distributed path emits,
+    both columns of the edges' ``id_type``.
 
     The labels go back to the JVM as one Arrow table, which plans as a
     ``LocalRelation``; ``createDataFrame`` over a Python list would plan a
@@ -129,14 +132,21 @@ def _union_find_local(spark: SparkSession, edge_rows) -> DataFrame:
             else:
                 parent[ru] = rv
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    arrow_type = to_arrow_type(id_type)
     labels = pa.table(
         {
-            "node": pa.array(list(parent), pa.int64()),
-            "component": pa.array([find(n) for n in parent], pa.int64()),
+            "node": pa.array(list(parent), arrow_type),
+            "component": pa.array([find(n) for n in parent], arrow_type),
         }
     )
-    return spark.createDataFrame(labels, schema="node long, component long")
+    return spark.createDataFrame(
+        labels,
+        schema=StructType(
+            [StructField("node", id_type), StructField("component", id_type)]
+        ),
+    )
 
 
 def _star_rounds(e: DataFrame) -> tuple[DataFrame, int]:
@@ -203,8 +213,9 @@ def _star_rounds(e: DataFrame) -> tuple[DataFrame, int]:
 def connected_components_propagation(
     edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
-    """Plain min-label propagation (rounds ∝ graph diameter) — the simple
-    independent implementation used to cross-check the star variant."""
+    """Plain min-label propagation (rounds ∝ graph diameter, looped until
+    no label changes) — the simple independent implementation used to
+    cross-check the star variant."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -219,7 +230,7 @@ def connected_components_propagation(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for _ in range(MAX_ITERATIONS):
+    while True:
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(F.col("a").alias("node"))

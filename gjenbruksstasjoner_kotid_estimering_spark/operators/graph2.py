@@ -131,11 +131,6 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ER_MAX_EDIT = 2
-# Name relations at or under this size solve their transitive closure on
-# the driver (union-find) instead of running the distributed fixpoint —
-# same hybrid-finish convention (and rationale) as clusters.py's
-# LOCAL_EDGE_CUTOFF. Pass 0 to force the distributed path.
-ER_LOCAL_CUTOFF = 100_000
 
 
 @register(
@@ -172,114 +167,35 @@ ER_LOCAL_CUTOFF = 100_000
     "not row count, drives matching — 64 names here, and the "
     f"levenshtein ≤ {ER_MAX_EDIT} pair join runs on that tiny distinct "
     "relation, never on parts); (2) transitive clustering over the "
-    "match graph — a driver union-find when the name relation fits the "
-    "probe cutoff (the clusters.py hybrid finish), min-label "
-    "propagation to fixpoint as the distributed fallback; "
-    "(3) one broadcast join maps every part "
-    "row to its cluster representative and aggregates (names, rows, "
-    "min key, exact retail cents). Oracle: recursive-CTE transitive "
-    "closure + min() — exact because edit distances and the closure "
-    "are integers/sets, no scores to drift.",
+    "match graph through clusters.connected_components (a driver "
+    "union-find up to 100k edges, large/small-star rounds above); "
+    "(3) one broadcast left join maps every part row to its cluster "
+    "representative, an unmatched name being its own, and aggregates "
+    "(names, rows, min key, exact retail cents). Oracle: recursive-CTE "
+    "transitive closure + min() — exact because edit distances and the "
+    "closure are integers/sets, no scores to drift.",
     tags=("dedup", "graph", "er", "text"),
 )
-def er_resolve_parts(
-    spark: SparkSession,
-    sf_dir: str,
-    local_cutoff: int = ER_LOCAL_CUTOFF,
-    edge_cutoff: int | None = None,
-) -> DataFrame:
+def er_resolve_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .clusters import connected_components
+
     part = load_table(spark, sf_dir, "part")
     names = part.select(F.col("p_name").alias("name")).distinct()
     a, b = names.alias("a"), names.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.name") != F.col("b.name"))
-            & (
-                F.levenshtein(F.col("a.name"), F.col("b.name"))
-                <= ER_MAX_EDIT
-            ),
-        )
-        .select(F.col("a.name").alias("u"), F.col("b.name").alias("v"))
-        .localCheckpoint(eager=True)
+    pairs = a.join(
+        b,
+        (F.col("a.name") != F.col("b.name"))
+        & (F.levenshtein(F.col("a.name"), F.col("b.name")) <= ER_MAX_EDIT),
+    ).select(F.col("a.name").alias("u"), F.col("b.name").alias("v"))
+    # The match graph is DISTINCT-NAME-sized (attribute cardinality, not
+    # row count), so its closure usually solves on the driver; a name
+    # without a match is absent from the labels and is its own rep.
+    labels = connected_components(pairs, "u", "v")
+    clustered = part.where(F.col("p_name").isNotNull()).join(
+        F.broadcast(labels), part.p_name == labels.node, "left"
     )
-    # r17 optimization: the match graph is DISTINCT-NAME-sized (attribute
-    # cardinality, not row count — the module's own 100 TB insight), so
-    # the transitive closure is solved with one driver union-find when
-    # the name relation fits ``local_cutoff`` (the clusters.py hybrid-
-    # finish convention: limit(cutoff+1) probe, distributed loop as the
-    # fallback). Before: 3-6 fixpoint rounds × (join + union + groupBy +
-    # checkpoint + change-count), each a full job at tiny data sizes.
-    labels = None
-    if local_cutoff:
-        # r18 (r17 verdict #6): the node probe alone does not bound the
-        # collect — a pathological name distribution can emit O(names²)
-        # match edges even under the node cutoff, and pairs.collect()
-        # would pull all of them to the driver. Probe the EDGE relation
-        # with the same limit+cutoff convention; past the cutoff the
-        # distributed fixpoint below handles the closure. ``edge_cutoff``
-        # defaults to ``local_cutoff`` (one knob); it exists as a
-        # separate parameter because on real TPC-H names edges < names,
-        # so the fallback is only test-reachable with a lower edge bound
-        # (tests/test_advanced13.py).
-        ecut = local_cutoff if edge_cutoff is None else edge_cutoff
-        head = names.limit(local_cutoff + 1).collect()
-        edge_head = (
-            pairs.limit(ecut + 1).collect()
-            if len(head) <= local_cutoff
-            else None
-        )
-        if edge_head is not None and len(edge_head) <= ecut:
-            edge_rows = edge_head  # the probe already holds every edge
-            parent: dict = {r["name"]: r["name"] for r in head}
-
-            def find(x: str) -> str:
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in edge_rows:
-                ru, rv = find(r["u"]), find(r["v"])
-                if ru != rv:  # union by min so the root IS the min label
-                    if ru < rv:
-                        parent[rv] = ru
-                    else:
-                        parent[ru] = rv
-            labels = spark.createDataFrame(
-                [(n, find(n)) for n in parent],
-                schema="name string, rep string",
-            )
-    if labels is None:
-        # min-label propagation: rep(x) ← min(rep(x), min rep over nbrs)
-        labels = names.select("name", F.col("name").alias("rep"))
-        while True:
-            prop = (
-                pairs.join(labels, pairs.u == labels.name)
-                .select(F.col("v").alias("name"), "rep")
-                .unionByName(labels)
-                .groupBy("name")
-                .agg(F.min("rep").alias("rep"))
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                prop.alias("n")
-                .join(
-                    labels.alias("o"),
-                    (F.col("n.name") == F.col("o.name"))
-                    & (F.col("n.rep") != F.col("o.rep")),
-                )
-                .count()
-            )
-            labels = prop
-            if changed == 0:
-                break
-    clustered = part.join(
-        F.broadcast(labels), part.p_name == labels.name
-    )
-    return clustered.groupBy(F.col("rep").alias("cluster_rep")).agg(
+    rep = F.coalesce(F.col("component"), F.col("p_name"))
+    return clustered.groupBy(rep.alias("cluster_rep")).agg(
         F.countDistinct("p_name").alias("n_names"),
         F.count(F.lit(1)).alias("n_parts"),
         F.min("p_partkey").alias("min_partkey"),

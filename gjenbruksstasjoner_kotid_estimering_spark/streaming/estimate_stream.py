@@ -3,12 +3,13 @@
 The reference's operational model is "image file arrives → one Luigi task
 run" (reference start.sh:3-4, tasks.py:16-17); its streaming-native form
 is a file-arrival micro-batch source feeding the SAME declarative
-estimator chain the batch flagship uses (operators/asof_interp.py). The
-whole chain is stateless — projections plus the broadcast range-join
-against the 7-row calibration segments — so it streams without
-watermarks or state stores, and the stream-static inner join keeps the
-zero-shuffle posture: every micro-batch is mask→clamp→interp→derive,
-exactly once (checkpointed), at whatever rate files land.
+estimator chain the batch flagship uses
+(operators/asof_interp.estimate_events). The whole chain is stateless —
+projections plus the broadcast range-join against the 7-row calibration
+segments — so it streams without watermarks or state stores, and the
+stream-static inner join keeps the zero-shuffle posture: every
+micro-batch is mask→clamp→interp→derive, exactly once (checkpointed), at
+whatever rate files land.
 
 Parity is the point: ``tests/test_streaming.py`` drains this stream with
 ``Trigger.AvailableNow`` and asserts the output rows EQUAL the batch
@@ -19,44 +20,14 @@ equivalence Structured Streaming promises for stateless plans.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions import estimator as est
+from ..operators.asof_interp import estimate_events
 from .file_stream import read_events_stream
-
-
-def predictions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of operators/asof_interp.predictions_df — identical
-    synthetic model-head projection over the event stream."""
-    ev = read_events_stream(spark, sf_dir)
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.select(
-        "event_id",
-        F.col("user_id").alias("station_id"),
-        "ts",
-        (F.col("value") * F.lit(4.0)).alias("queue_end_pos"),
-        (k % 2).cast("double").alias("queue_lanes"),
-        F.when(F.col("event_type") == "error", F.lit(0.95))
-        .otherwise((k % 10).cast("double") / F.lit(10.0))
-        .alias("queue_full"),
-    )
 
 
 def queue_estimate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming flagship: the full estimator chain on the event stream."""
-    preds = predictions_stream(spark, sf_dir)
-    out = est.with_queue_estimate(preds, spark)
-    return out.select(
-        "event_id",
-        "station_id",
-        "ts",
-        "x_pos",
-        "lanes",
-        "queue_full",
-        "meters",
-        "cars",
-        "expected_queue_time",
-    )
+    return estimate_events(read_events_stream(spark, sf_dir))
 
 
 def drain_to_parquet(

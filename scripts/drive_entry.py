@@ -35,14 +35,9 @@ def main() -> int:
     print(f"entry(): {n} rows")
     assert n > 0
 
-    import duckdb
+    from scripts.compare import compare, duck_con
 
-    from gjenbruksstasjoner_kotid_estimering_spark.io import TABLES
-    from scripts.compare import compare
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_con(sf_dir)
 
     qs, oracles = E.queries(), E.oracle_sql()
     names = args or sorted(qs)

@@ -271,24 +271,3 @@ def test_er_clusters_match_python_union_find(spark):
         )
         for rep, ps in want.items()
     }
-
-
-def test_er_edge_cutoff_forces_distributed_fallback(spark):
-    """r18 (r17 verdict #6): the driver union-find must bail out when the
-    EDGE relation exceeds the cutoff (the node probe alone cannot bound
-    ``pairs.collect()`` — a pathological name distribution emits
-    O(names²) edges under the node cutoff). An edge cutoff below the
-    sf0.001 edge count (48 directed match edges over 62 names) forces
-    the distributed min-label fixpoint, which must produce the identical
-    clustering."""
-    via_fallback = {
-        (r.cluster_rep, r.n_names, r.n_parts, r.min_partkey, r.price_cents)
-        for r in graph2.er_resolve_parts(
-            spark, SF0001, edge_cutoff=10
-        ).collect()
-    }
-    via_union_find = {
-        (r.cluster_rep, r.n_names, r.n_parts, r.min_partkey, r.price_cents)
-        for r in graph2.er_resolve_parts(spark, SF0001).collect()
-    }
-    assert via_fallback == via_union_find
