@@ -40,6 +40,7 @@ from .merge_tx import (
     _VERSIONED_STATES_SQL,
     _seed_and_merges,
     snapshot_at,
+    snapshot_diff,
 )
 
 N_GROUPS = 10  # c_custkey % 10 — the maintained aggregate's grain
@@ -59,22 +60,9 @@ def delta_changes(
     the post-image (the serving-sink contract); incremental aggregate
     maintenance needs the pre-image too, so the delta a change
     contributes — post minus pre — is computable without touching
-    unchanged rows. Same plan shape as ``changes_between``: one keyed
-    full-outer join of the two snapshots, O(|v_from| + |v_to|)."""
-    a = snapshot_at(spark, table_dir, v_from)
-    b = snapshot_at(spark, table_dir, v_to)
-    if a is None or b is None:
-        raise ValueError("both versions must exist and be non-empty")
-    a_s = a.select(
-        *key_cols,
-        F.struct(*[F.col(c).alias(c) for c in value_cols]).alias("_a"),
-    )
-    b_s = b.select(
-        *key_cols,
-        F.struct(*[F.col(c).alias(c) for c in value_cols]).alias("_b"),
-    )
-    j = a_s.join(b_s, key_cols, "full_outer")
-    return j.where(~F.col("_a").eqNullSafe(F.col("_b"))).select(
+    unchanged rows. Both project the one ``snapshot_diff``."""
+    diff = snapshot_diff(spark, table_dir, key_cols, v_from, v_to, value_cols)
+    return diff.select(
         *key_cols,
         *[F.col("_a")[c].alias(f"pre_{c}") for c in value_cols],
         *[F.col("_b")[c].alias(f"post_{c}") for c in value_cols],
@@ -140,7 +128,7 @@ def apply_agg_delta(agg: DataFrame, delta: DataFrame) -> DataFrame:
     tags=("sink", "merge", "transaction", "cdf", "ivm"),
 )
 def merge_tx_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = _seed_and_merges(spark, sf_dir, "merge_ivm", mods=(7, 5))
+    table_dir = _seed_and_merges(spark, sf_dir, mods=(7, 5))
     v1 = snapshot_at(spark, table_dir, 1)
     agg = v1.groupBy(
         (F.col("c_custkey") % N_GROUPS).alias("group_id")
@@ -250,7 +238,7 @@ def fold_scd2(scd: DataFrame, delta: DataFrame, version: int) -> DataFrame:
     tags=("sink", "merge", "transaction", "cdf", "scd2"),
 )
 def merge_tx_cdf_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = _seed_and_merges(spark, sf_dir, "merge_scd2", mods=(7, 5))
+    table_dir = _seed_and_merges(spark, sf_dir, mods=(7, 5))
     v1 = snapshot_at(spark, table_dir, 1)
     scd = v1.select(
         "c_custkey",

@@ -59,9 +59,9 @@ A manifest (``_commits/v{N:020d}.json``) holds:
 
 Readers plan from the recorded schema (``_read_files``): no parquet footer
 is opened to build a read, so a snapshot read starts no Spark job. Files
-that predate an ADD-COLUMN evolution read the new columns as NULL. A
-manifest without ``schema`` was written before schemas were recorded and
-is read by inferring it (``mergeSchema``).
+that predate an ADD-COLUMN evolution read the new columns as NULL.
+``schema`` is required: every writer records it, and a manifest without
+it does not read.
 """
 
 from __future__ import annotations
@@ -72,6 +72,7 @@ import shutil
 import threading
 import uuid
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -125,15 +126,10 @@ def _read_manifest(table_dir: str, version: int) -> list[str]:
     return _read_commit(table_dir, version)["files"]
 
 
-def _read_files(
-    spark: SparkSession, files: list[str], schema: dict | None
-) -> DataFrame:
+def _read_files(spark: SparkSession, files: list[str], schema: dict) -> DataFrame:
     """The one reader of a manifest's data files. ``schema`` is the table
-    schema the manifest records; with it the read is planned without
-    opening a footer. ``None`` — a manifest written before schemas were
-    recorded — falls back to inferring it, one Spark job per read."""
-    if schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+    schema the manifest records, so the read is planned without opening a
+    footer."""
     return spark.read.schema(StructType.fromJson(schema)).parquet(*files)
 
 
@@ -141,7 +137,7 @@ def _commit_frame(spark: SparkSession, commit: dict) -> DataFrame | None:
     """The snapshot a manifest describes, or None when it lists no file."""
     if not commit["files"]:
         return None
-    return _read_files(spark, commit["files"], commit.get("schema"))
+    return _read_files(spark, commit["files"], commit["schema"])
 
 
 def snapshot(spark: SparkSession, table_dir: str) -> tuple[DataFrame | None, int]:
@@ -212,15 +208,13 @@ def _try_commit(
     table_dir: str,
     version: int,
     files: list[str],
-    schema: StructType | None = None,
+    schema: StructType,
     stats_col: str | None = None,
     stats: dict | None = None,
 ) -> None:
     """Publish the manifest of ``version``; ``schema`` is the table's
     schema at this version (module docstring: manifest fields)."""
-    body = {"version": version, "files": files}
-    if schema is not None:
-        body["schema"] = schema.jsonValue()
+    body = {"version": version, "files": files, "schema": schema.jsonValue()}
     if stats_col is not None:
         body["stats_col"] = stats_col
         body["stats"] = stats or {}
@@ -257,7 +251,6 @@ def _commit_loop(
     spark: SparkSession,
     table_dir: str,
     plan: _Plan,
-    max_retries: int = _MAX_RETRIES,
     stats_col: str | None = None,
 ) -> int:
     """The one optimistic-commit loop every table writer shares; returns
@@ -274,7 +267,7 @@ def _commit_loop(
     base+1. On VersionConflict it discards the attempt's files and
     re-plans on the newer snapshot, so a retry never commits a plan built
     on a stale one (a lost update)."""
-    for _ in range(max_retries):
+    for _ in range(_MAX_RETRIES):
         target, base_version = snapshot(spark, table_dir)
         base_commit = _read_commit(table_dir, base_version)
         planned = plan(target, base_commit)
@@ -299,7 +292,7 @@ def _commit_loop(
             return base_version + 1
         except VersionConflict:
             _discard_files(new_files)
-    raise VersionConflict(f"gave up after {max_retries} retries")
+    raise VersionConflict(f"gave up after {_MAX_RETRIES} retries")
 
 
 def merge(
@@ -308,7 +301,6 @@ def merge(
     updates: DataFrame,
     key_cols: list[str],
     order_col: str | list[str],
-    max_retries: int = 10,
     evolve_schema: bool = False,
     conditional: bool = False,
     delete_condition=None,
@@ -472,11 +464,10 @@ def merge(
         )
         if affected:
             # read through the table schema: after an evolve_schema commit
-            # an affected set can mix pre- and post-evolution files (and a
-            # manifest without a recorded schema has target's inferred
-            # union), while a footer-inferred read of the affected files
-            # alone would take a narrower schema — rewriting evolved-column
-            # values as NULL (tests/test_merge_tx.py::
+            # an affected set can mix pre- and post-evolution files, while a
+            # footer-inferred read of the affected files alone would take a
+            # narrower schema — rewriting evolved-column values as NULL
+            # (tests/test_merge_tx.py::
             # test_merge_after_evolution_preserves_wide_survivors)
             existing = _read_files(
                 spark, sorted(affected), target.schema.jsonValue()
@@ -489,7 +480,7 @@ def merge(
         )
         return [f for f in base_commit["files"] if f not in affected], winners
 
-    return _commit_loop(spark, table_dir, plan, max_retries)
+    return _commit_loop(spark, table_dir, plan)
 
 
 @register(
@@ -521,7 +512,7 @@ def merge(
     tags=("sink", "merge", "transaction", "upsert"),
 )
 def upsert_merge_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = _seed_and_merges(spark, sf_dir, "merge_tx", mods=(7,))
+    table_dir = _seed_and_merges(spark, sf_dir, mods=(7,))
     snap, _ = snapshot(spark, table_dir)
     # per-process cached fixture — returned lazily (no detach): the table
     # outlives the frame and no other process can touch it
@@ -702,40 +693,41 @@ def history(table_dir: str) -> list[dict]:
     return out
 
 
-def changes_between(
+def snapshot_diff(
     spark: SparkSession,
     table_dir: str,
     key_cols: list[str],
     v_from: int,
     v_to: int,
+    payload: list[str] | None = None,
 ) -> DataFrame:
-    """Change data feed between two committed versions: one row per key
-    whose row changed, with ``change_type`` ∈ insert / update / delete
-    and the post-image columns (pre-image for deletes).
+    """The keyed diff of two committed versions that every change feed
+    projects: one row per key whose ``payload`` changed, with the key
+    columns and two structs over ``payload`` — ``_a``, the v_from row
+    (NULL on insert), and ``_b``, the v_to row (NULL on delete).
 
-    Computed as a key-keyed full outer join of the two snapshots with a
-    whole-row struct comparison — O(|v_from| + |v_to|) with one shuffle
-    per side, no dependence on how many merges lie between the
-    versions. (Delta derives CDF from per-commit actions; diffing
-    snapshots is the format-agnostic equivalent and exact for
-    last-write-wins tables.)"""
+    A key-keyed full outer join of the two snapshots with a whole-row
+    struct comparison — O(|v_from| + |v_to|) with one shuffle per side,
+    no dependence on how many merges lie between the versions. (Delta
+    derives CDF from per-commit actions; diffing snapshots is the
+    format-agnostic equivalent and exact for last-write-wins tables.)
+
+    ``payload`` defaults to the UNION of both versions' non-key columns
+    (v_from order, then columns ADD-COLUMN evolution introduced by v_to),
+    each side padded with NULL where it lacks the column. Deriving it from
+    v_from alone would suppress changes whose only difference is in an
+    evolved column."""
     a = snapshot_at(spark, table_dir, v_from)
     b = snapshot_at(spark, table_dir, v_to)
     if a is None or b is None:
         raise ValueError("both versions must exist and be non-empty")
-    # payload = UNION of both versions' columns (v_from order, then columns
-    # ADD-COLUMN evolution introduced by v_to), each side padded with NULL
-    # where it lacks the column. Deriving from v_from alone would suppress
-    # changes whose only difference is in an evolved column and emit
-    # insert post-images without it.
-    payload = [c for c in a.columns if c not in key_cols]
-    payload += [
-        c for c in b.columns if c not in key_cols and c not in payload
-    ]
+    if payload is None:
+        payload = [c for c in a.columns if c not in key_cols]
+        payload += [c for c in b.columns if c not in key_cols and c not in payload]
     # Unified type per column: v_to (the newer schema) wins for columns
     # present in both sides, so TYPE-CHANGING evolution (e.g. int→long)
-    # compares and emits post-images in the evolved type instead of
-    # producing mismatched struct types in the full_outer join.
+    # compares and emits images in the evolved type instead of producing
+    # mismatched struct types in the full_outer join.
     types = {f.name: f.dataType for f in a.schema.fields}
     types.update({f.name: f.dataType for f in b.schema.fields})
 
@@ -751,26 +743,101 @@ def changes_between(
         ]
         return df.select(*key_cols, F.struct(*cols).alias(alias))
 
-    a_s = side(a, "_a")
-    b_s = side(b, "_b")
-    j = a_s.join(b_s, key_cols, "full_outer")
+    # null-safe (<=>): evolved columns are NULL pre-evolution, and a plain
+    # != would evaluate NULL (→ dropped) exactly on the rows whose only
+    # change involves such a column
+    return (
+        side(a, "_a")
+        .join(side(b, "_b"), key_cols, "full_outer")
+        .where(~F.col("_a").eqNullSafe(F.col("_b")))
+    )
+
+
+def changes_between(
+    spark: SparkSession,
+    table_dir: str,
+    key_cols: list[str],
+    v_from: int,
+    v_to: int,
+) -> DataFrame:
+    """Change data feed between two committed versions: one row per key
+    whose row changed, with ``change_type`` ∈ insert / update / delete
+    and the post-image columns (pre-image for deletes) — the
+    ``snapshot_diff`` over every column of either version."""
+    diff = snapshot_diff(spark, table_dir, key_cols, v_from, v_to)
+    payload = diff.schema["_a"].dataType.names
     change = (
         F.when(F.col("_a").isNull(), F.lit("insert"))
         .when(F.col("_b").isNull(), F.lit("delete"))
-        # null-safe (<=>): evolved columns are NULL pre-evolution, and a
-        # plain != would evaluate NULL (→ 'none') exactly on the rows
-        # whose only change involves such a column
-        .when(~F.col("_a").eqNullSafe(F.col("_b")), F.lit("update"))
-        .otherwise(F.lit("none"))
+        .otherwise(F.lit("update"))
     )
     img = F.coalesce(F.col("_b"), F.col("_a"))
+    return diff.select(
+        *key_cols,
+        change.alias("change_type"),
+        *[img[c].alias(c) for c in payload],
+    )
+
+
+def _balances(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The seed of every MERGE-table row: customer balances in integer
+    cents, ``merged=False`` — the ``base`` CTE of ``_VERSIONED_STATES_SQL``."""
+    return load_table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.round(F.col("c_acctbal") * 100).cast("long").alias("acctbal_cents"),
+        F.lit(False).alias("merged"),
+    )
+
+
+def _order_balances(
+    spark: SparkSession, sf_dir: str, mod: int, n_orders: bool = False
+) -> DataFrame:
+    """The update batch of every MERGE-table row: orders-derived balances
+    in integer cents for custkeys divisible by ``mod``, ``merged=True``,
+    ordering helper ``_ord=1`` — the ``upd<mod>`` CTEs of
+    ``_VERSIONED_STATES_SQL``. ``n_orders`` adds each key's order count,
+    a column the seed does not have."""
+    counts = [F.count(F.lit(1)).alias("n_orders")] if n_orders else []
     return (
-        j.select(
-            *key_cols,
-            change.alias("change_type"),
-            *[img[c].alias(c) for c in payload],
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_custkey") % mod == 0)
+        .groupBy(F.col("o_custkey").alias("c_custkey"))
+        .agg(
+            F.round(F.sum("o_totalprice") * 100).cast("long").alias("acctbal_cents"),
+            *counts,
         )
-        .where(F.col("change_type") != "none")
+        .withColumn("merged", F.lit(True))
+        .withColumn("_ord", F.lit(1))
+    )
+
+
+def _scratch_table(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    seed: DataFrame | None = None,
+    stats_col: str | None = None,
+) -> str:
+    """A per-invocation MERGE table in a fresh scratch dir, seeded at v1
+    with ``seed`` (``_balances`` by default; per-file stats on
+    ``stats_col`` when given). The caller detaches its result from the
+    returned dir."""
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    table_dir = new_scratch_dir(f"merge_{tag}_{sf_tag}")
+    if seed is None:
+        seed = _balances(spark, sf_dir)
+    _write_seed(spark, table_dir, seed, stats_col=stats_col)
+    return table_dir
+
+
+def _version_summary(spark: SparkSession, table_dir: str, v: int) -> DataFrame:
+    """Version ``v`` as one row: its version, row count, merged count and
+    exact integer-cents balance sum."""
+    return snapshot_at(spark, table_dir, v).agg(
+        F.lit(v).cast("long").alias("version"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_if(F.col("merged")).alias("n_merged"),
+        F.sum("acctbal_cents").alias("acctbal_sum_cents"),
     )
 
 
@@ -779,14 +846,12 @@ _SEED_LOCK = threading.Lock()
 
 
 def _seed_and_merges(
-    spark: SparkSession, sf_dir: str, tag: str, mods: tuple[int, ...]
+    spark: SparkSession, sf_dir: str, mods: tuple[int, ...]
 ) -> str:
-    """Shared fixture for every merge_tx registry query: seed customer
-    balances (v1), then one MERGE commit per modulus in ``mods``
-    (orders-derived balances for custkey % mod). upsert_merge_tx uses
-    mods=(7,); the time-travel/CDF queries use (7, 5) → versions 1..3.
-    One definition keeps the seed schema / cents rounding in lockstep
-    with the _VERSIONED_STATES_SQL oracle CTEs.
+    """The versioned table the MERGE-table registry rows share:
+    ``_balances`` (v1), then one MERGE commit of ``_order_balances`` per
+    modulus in ``mods``. upsert_merge_tx uses mods=(7,); the
+    time-travel/CDF queries use (7, 5) → versions 1..3.
 
     Built once per (sf_dir, mods) PER PROCESS (scratch.process_cache_dir
     — pid-scoped, so the round-4 cross-process wipe race cannot recur;
@@ -823,28 +888,15 @@ def _build_seed_and_merges(
     # table; the lock in the caller makes this remove-and-rebuild safe
     shutil.rmtree(table_dir, ignore_errors=True)
     os.makedirs(table_dir)
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(False).alias("merged"),
-    )
-    _write_seed(spark, table_dir, base)
+    _write_seed(spark, table_dir, _balances(spark, sf_dir))
     for mod in mods:
-        upd = (
-            load_table(spark, sf_dir, "orders")
-            .where(F.col("o_custkey") % mod == 0)
-            .groupBy(F.col("o_custkey").alias("c_custkey"))
-            .agg(
-                F.round(F.sum("o_totalprice") * 100)
-                .cast("long")
-                .alias("acctbal_cents")
-            )
-            .withColumn("merged", F.lit(True))
-            .withColumn("_ord", F.lit(1))
+        merge(
+            spark,
+            table_dir,
+            _order_balances(spark, sf_dir, mod),
+            key_cols=["c_custkey"],
+            order_col="_ord",
         )
-        merge(spark, table_dir, upd, key_cols=["c_custkey"], order_col="_ord")
     return table_dir
 
 
@@ -912,18 +964,12 @@ _VERSIONED_STATES_SQL = """
     tags=("sink", "merge", "transaction", "timetravel"),
 )
 def merge_tx_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = _seed_and_merges(spark, sf_dir, "merge_tt", mods=(7, 5))
-    out = None
-    for v in (1, 2, 3):
-        snap = snapshot_at(spark, table_dir, v)
-        summary = snap.agg(
-            F.lit(v).cast("long").alias("version"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_if(F.col("merged")).alias("n_merged"),
-            F.sum("acctbal_cents").alias("acctbal_sum_cents"),
-        )
-        out = summary if out is None else out.unionAll(summary)
-    return out  # cached fixture: version-addressed reads stay valid
+    table_dir = _seed_and_merges(spark, sf_dir, mods=(7, 5))
+    # cached fixture: version-addressed reads stay valid
+    return reduce(
+        DataFrame.unionAll,
+        [_version_summary(spark, table_dir, v) for v in (1, 2, 3)],
+    )
 
 
 @register(
@@ -949,7 +995,7 @@ def merge_tx_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "transaction", "cdf"),
 )
 def merge_tx_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = _seed_and_merges(spark, sf_dir, "merge_cdf", mods=(7, 5))
+    table_dir = _seed_and_merges(spark, sf_dir, mods=(7, 5))
     # cached fixture — lazy return; versions 2 and 3 are immutable
     return changes_between(
         spark, table_dir, key_cols=["c_custkey"], v_from=2, v_to=3
@@ -1040,7 +1086,7 @@ def snapshot_pruned(
         return st[0] <= hi and st[1] >= lo
 
     chosen = [f for f in files if may_match(f)]
-    schema = commit.get("schema")
+    schema = commit["schema"]
     if not chosen:
         # fully pruned: an EMPTY frame with the table schema, not None —
         # callers compose .select()/.count() on the result either way
@@ -1072,33 +1118,20 @@ def snapshot_pruned(
     tags=("sink", "merge", "pruning", "scan"),
 )
 def merge_tx_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_prune_{sf_tag}")
-    base = (
-        load_table(spark, sf_dir, "customer")
-        .select(
-            "c_custkey",
-            (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-                "acctbal_cents"
-            ),
-            F.lit(False).alias("merged"),
-        )
-        .repartitionByRange(8, "c_custkey")
+    table_dir = _scratch_table(
+        spark,
+        sf_dir,
+        "prune",
+        seed=_balances(spark, sf_dir).repartitionByRange(8, "c_custkey"),
+        stats_col="c_custkey",
     )
-    _write_seed(spark, table_dir, base, stats_col="c_custkey")
-    upd = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_custkey") % 7 == 0)
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("acctbal_cents")
-        )
-        .withColumn("merged", F.lit(True))
-        .withColumn("_ord", F.lit(1))
+    merge(
+        spark,
+        table_dir,
+        _order_balances(spark, sf_dir, 7),
+        key_cols=["c_custkey"],
+        order_col="_ord",
     )
-    merge(spark, table_dir, upd, key_cols=["c_custkey"], order_col="_ord")
     df, _, _ = snapshot_pruned(spark, table_dir, PRUNE_LO, PRUNE_HI)
     return detach_result(
         df.select("c_custkey", "acctbal_cents", "merged"), table_dir
@@ -1232,7 +1265,7 @@ def zorder_value(col_a: str, col_b: str):
     tags=("sink", "merge", "compaction", "maintenance"),
 )
 def merge_tx_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = _seed_and_merges(spark, sf_dir, "merge_compact", mods=(7,))
+    table_dir = _seed_and_merges(spark, sf_dir, mods=(7,))
     # Appends an OPTIMIZE commit to the per-process cached table: commits
     # are copy-on-write, so concurrent/later readers of any version are
     # unaffected (re-invocation just re-compacts the compacted tip —
@@ -1272,32 +1305,11 @@ def merge_tx_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "schema", "evolution"),
 )
 def merge_tx_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_evo_{sf_tag}")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(False).alias("merged"),
-    )
-    _write_seed(spark, table_dir, base)
-    upd = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_custkey") % 7 == 0)
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("acctbal_cents"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .withColumn("merged", F.lit(True))
-    )
+    table_dir = _scratch_table(spark, sf_dir, "evo")
     merge(
         spark,
         table_dir,
-        upd.withColumn("_ord", F.lit(1)),
+        _order_balances(spark, sf_dir, 7, n_orders=True),
         key_cols=["c_custkey"],
         order_col="_ord",
         evolve_schema=True,
@@ -1339,32 +1351,11 @@ def merge_tx_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "transaction", "delete", "sync"),
 )
 def merge_tx_sync_delete_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_sync_{sf_tag}")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(False).alias("merged"),
-    )
-    _write_seed(spark, table_dir, base)
-    upd = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_custkey") % 7 == 0)
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("acctbal_cents")
-        )
-        .withColumn("merged", F.lit(True))
-        .withColumn("_ord", F.lit(1))
-    )
+    table_dir = _scratch_table(spark, sf_dir, "sync")
     merge(
         spark,
         table_dir,
-        upd,
+        _order_balances(spark, sf_dir, 7),
         key_cols=["c_custkey"],
         order_col="_ord",
         sync_delete_scope=F.col("c_custkey") % 2 == 0,
@@ -1407,32 +1398,11 @@ def merge_tx_sync_delete_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "cdf", "delete", "timetravel"),
 )
 def merge_tx_delete_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_delcdf_{sf_tag}")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(False).alias("merged"),
-    )
-    _write_seed(spark, table_dir, base)
-    upd = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_custkey") % 7 == 0)
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("acctbal_cents")
-        )
-        .withColumn("merged", F.lit(True))
-        .withColumn("_ord", F.lit(1))
-    )
+    table_dir = _scratch_table(spark, sf_dir, "delcdf")
     merge(
         spark,
         table_dir,
-        upd,
+        _order_balances(spark, sf_dir, 7),
         key_cols=["c_custkey"],
         order_col="_ord",
         delete_condition=F.col("acctbal_cents") > 250_000_000,
@@ -1476,32 +1446,11 @@ def merge_tx_delete_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "transaction", "delete", "sync"),
 )
 def merge_tx_full_clause_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_matrix_{sf_tag}")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(False).alias("merged"),
-    )
-    _write_seed(spark, table_dir, base)
-    upd = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_custkey") % 7 == 0)
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("acctbal_cents")
-        )
-        .withColumn("merged", F.lit(True))
-        .withColumn("_ord", F.lit(1))
-    )
+    table_dir = _scratch_table(spark, sf_dir, "matrix")
     merge(
         spark,
         table_dir,
-        upd,
+        _order_balances(spark, sf_dir, 7),
         key_cols=["c_custkey"],
         order_col="_ord",
         delete_condition=F.col("acctbal_cents") > 250_000_000,
@@ -1543,32 +1492,11 @@ def merge_tx_full_clause_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "transaction", "delete"),
 )
 def merge_tx_when_matched_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_del_{sf_tag}")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(False).alias("merged"),
-    )
-    _write_seed(spark, table_dir, base)
-    upd = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_custkey") % 7 == 0)
-        .groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.round(F.sum("o_totalprice") * 100)
-            .cast("long")
-            .alias("acctbal_cents")
-        )
-        .withColumn("merged", F.lit(True))
-        .withColumn("_ord", F.lit(1))
-    )
+    table_dir = _scratch_table(spark, sf_dir, "del")
     merge(
         spark,
         table_dir,
-        upd,
+        _order_balances(spark, sf_dir, 7),
         key_cols=["c_custkey"],
         order_col="_ord",
         delete_condition=F.col("acctbal_cents") > 250_000_000,
@@ -1630,30 +1558,16 @@ def merge_tx_when_matched_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "merge", "transaction", "schema", "evolution"),
 )
 def merge_tx_evolve_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_evocond_{sf_tag}")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-            "acctbal_cents"
-        ),
-        F.lit(0).cast("long").alias("ts"),
+    def at(df: DataFrame, ts: int) -> DataFrame:
+        # the ts ordering column replaces the merged flag and _ord helper
+        return df.drop("merged", "_ord").withColumn("ts", F.lit(ts).cast("long"))
+
+    table_dir = _scratch_table(
+        spark, sf_dir, "evocond", seed=at(_balances(spark, sf_dir), 0)
     )
-    _write_seed(spark, table_dir, base)
 
     def upd(mod: int, ts: int) -> DataFrame:
-        return (
-            load_table(spark, sf_dir, "orders")
-            .where(F.col("o_custkey") % mod == 0)
-            .groupBy(F.col("o_custkey").alias("c_custkey"))
-            .agg(
-                F.round(F.sum("o_totalprice") * 100)
-                .cast("long")
-                .alias("acctbal_cents"),
-                F.count(F.lit(1)).alias("n_orders"),
-            )
-            .withColumn("ts", F.lit(ts).cast("long"))
-        )
+        return at(_order_balances(spark, sf_dir, mod, n_orders=True), ts)
 
     # newer batch first: custkey%5 at ts=2 (no evolution — n_orders dropped
     # by the fixed-schema projection since evolve_schema=False)
@@ -1709,7 +1623,6 @@ def _rewrite_where(
     table_dir: str,
     predicate,
     set_exprs: dict | None,
-    max_retries: int = _MAX_RETRIES,
 ) -> int:
     def plan(target: DataFrame | None, base_commit: dict):
         if target is None:
@@ -1747,7 +1660,7 @@ def _rewrite_where(
             }
         )
 
-    return _commit_loop(spark, table_dir, plan, max_retries)
+    return _commit_loop(spark, table_dir, plan)
 
 
 @register(
@@ -1774,20 +1687,13 @@ def _rewrite_where(
     tags=("sink", "merge", "delete", "update"),
 )
 def merge_tx_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    table_dir = new_scratch_dir(f"merge_dml_{sf_tag}")
-    base = (
-        load_table(spark, sf_dir, "customer")
-        .select(
-            "c_custkey",
-            (F.round(F.col("c_acctbal") * 100)).cast("long").alias(
-                "acctbal_cents"
-            ),
-            F.lit(False).alias("merged"),
-        )
-        .repartitionByRange(8, "c_custkey")
+    table_dir = _scratch_table(
+        spark,
+        sf_dir,
+        "dml",
+        seed=_balances(spark, sf_dir).repartitionByRange(8, "c_custkey"),
+        stats_col="c_custkey",
     )
-    _write_seed(spark, table_dir, base, stats_col="c_custkey")
     delete_where(spark, table_dir, F.col("c_custkey") % 13 == 0)
     update_where(
         spark,
@@ -1812,7 +1718,7 @@ def _private_table_copy(
     manifest path rewrite is milliseconds. Manifests store absolute
     data-file paths, so each commit JSON is rewritten (files list and
     per-file stats keys) to point inside the copy."""
-    src = _seed_and_merges(spark, sf_dir, "priv", mods)
+    src = _seed_and_merges(spark, sf_dir, mods)
     shutil.copytree(os.path.join(src, _DATA), os.path.join(dest_dir, _DATA))
     os.makedirs(os.path.join(dest_dir, _COMMITS), exist_ok=True)
     for v in range(1, current_version(src) + 1):
@@ -1891,21 +1797,14 @@ def merge_tx_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("long").alias("n_merged"),
         F.lit(-1).cast("long").alias("acctbal_sum_cents"),
     )
-    out = sentinel
-    for v in (2, 3):
-        snap = snapshot_at(spark, table_dir, v)
-        out = out.unionAll(
-            snap.agg(
-                F.lit(v).cast("long").alias("version"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count_if(F.col("merged")).alias("n_merged"),
-                F.sum("acctbal_cents").alias("acctbal_sum_cents"),
-            )
-        )
+    out = reduce(
+        DataFrame.unionAll,
+        [sentinel] + [_version_summary(spark, table_dir, v) for v in (2, 3)],
+    )
     return detach_result(out, table_dir)
 
 
-def restore_version(spark: SparkSession, table_dir: str, version: int) -> int:
+def restore_version(table_dir: str, version: int) -> int:
     """RESTORE: roll the table back to ``version`` by committing that
     version's manifest (files + stats) again as a NEW version — history
     is preserved, nothing is rewritten or deleted (Delta Lake's RESTORE
@@ -1916,10 +1815,7 @@ def restore_version(spark: SparkSession, table_dir: str, version: int) -> int:
     ``_commit_loop``'s bound and error: it carries ``version``'s own files,
     stats and schema rather than planning on the current snapshot."""
     body = _read_commit(table_dir, version)
-    # a manifest written before schemas were recorded: infer it once, so
-    # the restored version records one
-    frame = _commit_frame(spark, body)
-    schema = None if frame is None else frame.schema
+    schema = StructType.fromJson(body["schema"])
     for _ in range(_MAX_RETRIES):
         new_v = current_version(table_dir) + 1
         try:
@@ -1969,17 +1865,11 @@ def merge_tx_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = new_scratch_dir(f"merge_restore_{sf_tag}")
     shutil.rmtree(table_dir)  # copytree needs a non-existent destination
     _private_table_copy(spark, sf_dir, (7, 5), table_dir)
-    new_v = restore_version(spark, table_dir, 2)
+    new_v = restore_version(table_dir, 2)
     if new_v != 4:
         raise AssertionError(f"expected restore to commit v4, got v{new_v}")
-    out = None
-    for v in (3, new_v):  # v3 read AFTER the restore: history intact
-        snap = snapshot_at(spark, table_dir, v)
-        summary = snap.agg(
-            F.lit(v).cast("long").alias("version"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_if(F.col("merged")).alias("n_merged"),
-            F.sum("acctbal_cents").alias("acctbal_sum_cents"),
-        )
-        out = summary if out is None else out.unionAll(summary)
+    # v3 read AFTER the restore: history intact
+    out = _version_summary(spark, table_dir, 3).unionAll(
+        _version_summary(spark, table_dir, new_v)
+    )
     return detach_result(out, table_dir)

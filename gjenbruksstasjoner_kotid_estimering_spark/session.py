@@ -120,17 +120,18 @@ def get_spark(
 
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set ``spark.sql.shuffle.partitions`` for an ITERATIVE
-    section whose per-round state is orders of magnitude smaller than the
-    input scan (PageRank ranks, connected-components edge frontier,
-    in-cluster candidate pairs). Each round's shuffle at the session
-    default is mostly per-task scheduling overhead on KB–MB frames — the
-    same tax the streaming drain harness eliminates
-    (streaming/windows._drain_to_memory) — and iterative loops pay it
-    rounds × shuffles times. Every round must MATERIALIZE inside the
-    scope (the iterative ops here localCheckpoint each round, so they
-    do); the previous value is restored on exit either way. At real
-    cluster scale, size to state volume instead of scoping down."""
+    """Temporarily set ``spark.sql.shuffle.partitions`` for a section
+    whose per-round or per-micro-batch state is orders of magnitude
+    smaller than the input scan (PageRank ranks, connected-components
+    edge frontier, in-cluster candidate pairs, the state of a one-shot
+    stream drain). Each shuffle at the session default is mostly per-task
+    scheduling overhead on KB–MB frames, and iterative loops and
+    micro-batches pay it rounds × shuffles times. Every round must
+    MATERIALIZE inside the scope (the iterative ops here localCheckpoint
+    each round, and a streaming query records the count in its fresh
+    checkpoint at start); the previous value is restored on exit either
+    way. At real cluster scale, size to state volume instead of scoping
+    down."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, str(n))

@@ -209,6 +209,24 @@ def with_path_metadata(images: DataFrame, ext: str = "jpg") -> DataFrame:
     ).withColumn("epoch", fnm.epoch_col(base, ext=ext))
 
 
+def _frame_chain(
+    path: str,
+    content: bytes,
+    decoder: Callable[[bytes], np.ndarray],
+    featurizer: Callable[[np.ndarray], np.ndarray],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One frame through the reference chain (decode → mask → crop →
+    normalize → featurize, preprocess_image.py:198-205): returns the
+    decoded frame, its masked crop and its features. A frame the decoder
+    rejects raises its ValueError prefixed with the frame's path."""
+    try:
+        img = decoder(bytes(content))
+    except ValueError as e:
+        raise ValueError(f"{path}: {e}") from e
+    crop = crop_to_roi_bbox(mask_outside_roi(img))
+    return img, crop, featurizer(normalize(crop))
+
+
 def preprocess_images(
     images: DataFrame,
     decoder: Callable[[bytes], np.ndarray] | None = None,
@@ -217,8 +235,7 @@ def preprocess_images(
 ) -> DataFrame:
     """binaryFile rows → feature rows in one Arrow-batched pass.
 
-    The whole reference preprocess chain (decode → mask → crop →
-    normalize → featurize, preprocess_image.py:198-205) runs per
+    The whole reference preprocess chain (``_frame_chain``) runs per
     partition inside ``mapInPandas`` — batch-at-a-time, decoder/featurizer
     constructed once per worker. ``decoder`` defaults to
     :func:`jpeg_decoder`; a frame it rejects fails the batch with a
@@ -241,16 +258,10 @@ def preprocess_images(
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    img = decoder(bytes(content))
-                except ValueError as e:
-                    raise ValueError(f"{path}: {e}") from e
-                img = mask_outside_roi(img)
-                img = crop_to_roi_bbox(img)
-                img = normalize(img)
-                feats.append(featurizer(img))
+            feats = [
+                _frame_chain(path, content, decoder, featurizer)[2]
+                for path, content in zip(pdf["path"], pdf["content"])
+            ]
             yield pd.DataFrame(
                 {
                     "path": pdf["path"],
@@ -305,9 +316,9 @@ def pipeline_stats(
     decoder: Callable[[bytes], np.ndarray] | None = None,
     featurizer: Callable[[np.ndarray], np.ndarray] = default_featurizer,
 ) -> DataFrame:
-    """REAL image lane end-to-end, emitting per-image scalar stats: JPEG
-    decode → ROI mask → crop → normalize → featurize (the full reference
-    chain, preprocess_image.py:198-205) in ONE ``mapInPandas`` pass, with
+    """REAL image lane end-to-end, emitting per-image scalar stats: the
+    full reference chain (``_frame_chain``, as ``preprocess_images`` runs
+    it, decode errors included) in ONE ``mapInPandas`` pass, with
     decoded/cropped shapes, an exact pixel checksum of the masked crop,
     and the feature norm as the scoring stand-in. Scalar columns only —
     the shape the driver can hash and a monitoring sink would ingest."""
@@ -320,12 +331,8 @@ def pipeline_stats(
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for content in pdf["content"]:
-                img = decoder(bytes(content))
-                masked = mask_outside_roi(img)
-                crop = crop_to_roi_bbox(masked)
-                norm = normalize(crop)
-                feats = featurizer(norm)
+            for path, content in zip(pdf["path"], pdf["content"]):
+                img, crop, feats = _frame_chain(path, content, decoder, featurizer)
                 rows.append(
                     (
                         img.shape[0],

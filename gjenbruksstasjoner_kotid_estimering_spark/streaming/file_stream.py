@@ -139,11 +139,16 @@ def run_available_now(
     parquet, exit — the reference's container one-shot (start.sh:3-4) with
     checkpointed exactly-once instead of target-existence checks.
 
-    The single drain contract for every one-shot stream in this repo
-    (events windows, corpus ingest): ``reader`` picks the source,
-    ``transform`` the streaming plan, and ``foreach_batch`` (optional)
-    switches the sink to per-micro-batch imperative output where the
-    semantics need batch-local logic.
+    The drain of the corpus ingest (``run_corpus_ingest``) and the
+    streaming MERGE sink (``operators/merge_tx.run_streaming_merge``):
+    ``reader`` picks the source, ``transform`` the streaming plan, and
+    ``foreach_batch`` (optional) switches the sink to per-micro-batch
+    imperative output where the semantics need batch-local logic. Other
+    one-shot streams drain their own way: into memory
+    (``windows._drain_to_memory``, ``pystream``), a noop sink
+    (``multisrc``), a transactional table group (``txn_stream``), their
+    own parquet sink (``estimate_stream``, ``filesink``) or a
+    ``foreachBatch`` history fold (``scd2_stream``).
     """
     stream = transform(reader(spark, sf_dir))
     writer = stream.writeStream.trigger(availableNow=True).option(

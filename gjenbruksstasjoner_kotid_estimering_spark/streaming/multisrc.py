@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..scratch import new_scratch_dir
+from ..session import scoped_shuffle_partitions
 from .file_stream import read_events_stream
 from .windows import WM_DELAY, _drain_to_memory
 
@@ -171,31 +172,25 @@ def stream_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "10 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        agg.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .format("noop")
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        state = spark.read.format("statestore").load(ckpt)
-        out = state.select(
-            F.col("key.window.start").alias("window_start"),
-            F.col("key.user_id").alias("user_id"),
-            F.col("value.count").cast("long").alias("n_events"),
-        ).localCheckpoint(eager=True)
-        return out
-    finally:
+    with scoped_shuffle_partitions(spark, 8):
+        q = (
+            agg.writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .format("noop")
+            .start()
+        )
         try:
-            q.stop()
-        except Exception:
-            pass
-        if prev_parts is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            q.awaitTermination()
+            state = spark.read.format("statestore").load(ckpt)
+            return state.select(
+                F.col("key.window.start").alias("window_start"),
+                F.col("key.user_id").alias("user_id"),
+                F.col("value.count").cast("long").alias("n_events"),
+            ).localCheckpoint(eager=True)
+        finally:
+            try:
+                q.stop()
+            except Exception:
+                pass
+            shutil.rmtree(ckpt, ignore_errors=True)

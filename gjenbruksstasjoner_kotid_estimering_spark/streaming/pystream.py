@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_shuffle_partitions
 from ..sources.pyds import (
     BUCKET_MOD,
     CENTS_MOD,
@@ -131,51 +132,47 @@ def stream_python_datasource_true(
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"stream_pyds_{sf_tag}_{uuid.uuid4().hex[:8]}"
     ckpt = new_scratch_dir(f"ckpt_pyds_{sf_tag}")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        agg.writeStream.trigger(processingTime="0 seconds")
-        .option("checkpointLocation", ckpt)
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    watchdog, timed_out = arm_drain_watchdog(q)
-    try:
-        q.processAllAvailable()
-        seen = (
-            spark.table(name)
-            .agg(F.coalesce(F.sum("n"), F.lit(0)))
-            .collect()[0][0]
+    with scoped_shuffle_partitions(spark, 8):
+        q = (
+            agg.writeStream.trigger(processingTime="0 seconds")
+            .option("checkpointLocation", ckpt)
+            .outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .start()
         )
-        if seen != STREAM_ROWS:
-            # The flag alone isn't proof of a stall: a drain finishing at
-            # ~the deadline can see the timer fire between
-            # processAllAvailable() returning and this check. Only an
-            # INCOMPLETE drain is an error — timed-out incomplete is the
-            # watchdog's stall, complete is a healthy (if slow) drain.
-            if timed_out.is_set():
-                raise TimeoutError(
-                    f"stream drain exceeded {DRAIN_DEADLINE}s with "
-                    f"{seen}/{STREAM_ROWS} rows — the source stalled "
-                    "without erroring (offsets not advancing?)"
-                )
-            raise RuntimeError(
-                f"stream drained {seen}/{STREAM_ROWS} rows — the source "
-                "reported caught-up before the known end offset"
-            )
-        out = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        watchdog.cancel()
+        watchdog, timed_out = arm_drain_watchdog(q)
         try:
-            q.stop()
-        except Exception:
-            pass
-        if prev_parts is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            q.processAllAvailable()
+            seen = (
+                spark.table(name)
+                .agg(F.coalesce(F.sum("n"), F.lit(0)))
+                .collect()[0][0]
+            )
+            if seen != STREAM_ROWS:
+                # The flag alone isn't proof of a stall: a drain finishing
+                # at ~the deadline can see the timer fire between
+                # processAllAvailable() returning and this check. Only an
+                # INCOMPLETE drain is an error — timed-out incomplete is
+                # the watchdog's stall, complete is a healthy (if slow)
+                # drain.
+                if timed_out.is_set():
+                    raise TimeoutError(
+                        f"stream drain exceeded {DRAIN_DEADLINE}s with "
+                        f"{seen}/{STREAM_ROWS} rows — the source stalled "
+                        "without erroring (offsets not advancing?)"
+                    )
+                raise RuntimeError(
+                    f"stream drained {seen}/{STREAM_ROWS} rows — the source "
+                    "reported caught-up before the known end offset"
+                )
+            out = spark.table(name).localCheckpoint(eager=True)
+        finally:
+            watchdog.cancel()
+            try:
+                q.stop()
+            except Exception:
+                pass
+            spark.catalog.dropTempView(name)
+            shutil.rmtree(ckpt, ignore_errors=True)
     return out

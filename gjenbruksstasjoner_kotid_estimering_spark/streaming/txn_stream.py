@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..registry import register
 from ..scratch import new_scratch_dir
+from ..session import scoped_shuffle_partitions
 from ..operators.txn import (
     txn_commit,
     txn_current_version,
@@ -95,25 +96,20 @@ def run_stream_into_txn(
     # KB-scale per-batch state: 32 shuffle partitions is scheduling tax
     # across 4 micro-batches x (delta agg + balance merge) — scope down
     # for the drain, restore after (the _drain_to_memory convention)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        stream.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(txn_batch_writer(root))
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
+    with scoped_shuffle_partitions(spark, 8):
+        q = (
+            stream.writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(txn_batch_writer(root))
+            .start()
+        )
         try:
-            q.stop()
-        except Exception:
-            pass
-        if prev_parts is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            q.awaitTermination()
+        finally:
+            try:
+                q.stop()
+            except Exception:
+                pass
 
 
 @register(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry import register
+from ..session import scoped_shuffle_partitions
 
 
 @register(
@@ -147,36 +148,31 @@ def _drain_to_memory(
     # partitions is pure scheduling tax. The partition count is captured
     # into the CHECKPOINT at first start (fresh per invocation here), so
     # scoping the override to the drain is safe — batch queries and the
-    # driver's own session settings are restored in the finally. At real
-    # scale you size this to state volume, not down.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        stream.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        out = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        # stop FIRST: if awaitTermination or the table read raised, the
-        # query may still be active — dropping its sink view and deleting
-        # the checkpoint underneath a live query would leak it in a
-        # corrupted state (round-6 ADVICE).
+    # driver's own session settings are restored on exit. At real scale
+    # you size this to state volume, not down.
+    with scoped_shuffle_partitions(spark, 8):
+        q = (
+            stream.writeStream.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
         try:
-            q.stop()
-        except Exception:
-            pass
-        if prev_parts is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            q.awaitTermination()
+            out = spark.table(name).localCheckpoint(eager=True)
+        finally:
+            # stop FIRST: if awaitTermination or the table read raised, the
+            # query may still be active — dropping its sink view and
+            # deleting the checkpoint underneath a live query would leak
+            # it in a corrupted state (round-6 ADVICE).
+            try:
+                q.stop()
+            except Exception:
+                pass
+            spark.catalog.dropTempView(name)
+            shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 

@@ -33,7 +33,7 @@ def test_ivm_equals_from_scratch_aggregate(spark):
         r.group_id: (r.n_rows, r.sum_cents)
         for r in merge_ivm.merge_tx_ivm_aggregate(spark, SF0001).collect()
     }
-    table_dir = _seed_and_merges(spark, SF0001, "merge_ivm", mods=(7, 5))
+    table_dir = _seed_and_merges(spark, SF0001, mods=(7, 5))
     want = {
         r.group_id: (r.n_rows, r.sum_cents)
         for r in snapshot_at(spark, table_dir, 3)
@@ -48,7 +48,7 @@ def test_ivm_equals_from_scratch_aggregate(spark):
 
 
 def test_delta_changes_carries_both_images(spark):
-    table_dir = _seed_and_merges(spark, SF0001, "merge_ivm", mods=(7, 5))
+    table_dir = _seed_and_merges(spark, SF0001, mods=(7, 5))
     delta = merge_ivm.delta_changes(
         spark,
         table_dir,
@@ -80,7 +80,7 @@ def test_scd2_intervals_partition_and_current_matches_v3(spark):
     by_key: dict[int, list] = {}
     for r in rows:
         by_key.setdefault(r.c_custkey, []).append(r)
-    table_dir = _seed_and_merges(spark, SF0001, "merge_scd2", mods=(7, 5))
+    table_dir = _seed_and_merges(spark, SF0001, mods=(7, 5))
     v3 = {
         r.c_custkey: (r.acctbal_cents, r.merged)
         for r in snapshot_at(spark, table_dir, 3).collect()

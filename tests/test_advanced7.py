@@ -125,7 +125,7 @@ def test_restore_is_metadata_only_and_revacuumable(spark):
         map(tuple, merge_tx.snapshot_at(spark, table_dir, 1).collect())
     )
     v1_files = set(merge_tx._read_manifest(table_dir, 1))
-    new_v = merge_tx.restore_version(spark, table_dir, 1)
+    new_v = merge_tx.restore_version(table_dir, 1)
     assert new_v == 3
     assert set(merge_tx._read_manifest(table_dir, 3)) == v1_files
     snap, v = merge_tx.snapshot(spark, table_dir)

@@ -96,6 +96,20 @@ def test_decode_error_names_the_frame(spark, tmp_path):
         feats.collect()
 
 
+def test_pipeline_stats_decode_error_names_the_frame(spark, tmp_path):
+    """pipeline_stats runs the same per-frame chain: a truncated frame
+    fails with the decoder's ValueError prefixed with its path."""
+    from pyspark.errors import PythonException
+
+    (tmp_path / "station_id_41_20200506T090000.jpg").write_bytes(_frame_jpeg(0))
+    bad = "station_id_41_20200506T091000.jpg"
+    data = _frame_jpeg(1)
+    (tmp_path / bad).write_bytes(data[: len(data) // 2])
+    stats = im.pipeline_stats(im.read_images(spark, str(tmp_path)))
+    with pytest.raises(PythonException, match=rf"ValueError: \S*/{bad}: truncated"):
+        stats.collect()
+
+
 @pytest.mark.parametrize("n_partitions", [4, 8])
 def test_preprocess_repartitions_only_when_splits_are_short(spark, tmp_path, n_partitions):
     """binaryFile gives 4 small frames a split each on 4 cores, so

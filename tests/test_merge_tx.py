@@ -127,7 +127,7 @@ def test_version_conflict_retries(spark, tmp_path, monkeypatch):
         if not fired["done"]:
             fired["done"] = True
             # rival writer: commits v+1 re-pointing at the same files
-            mt._try_commit(td, v + 1, mt._read_manifest(td, v))
+            mt._try_commit(td, v + 1, mt._read_manifest(td, v), df.schema)
         return df, v
 
     monkeypatch.setattr(mt, "snapshot", snapshot_with_rival)
@@ -596,8 +596,9 @@ def test_history_hundred_versions_bounded(spark, tmp_path):
     t = str(tmp_path / "deep")
     _seed(spark, t, n=10, n_files=1)
     files = mt._read_manifest(t, 1)
+    schema = mt.snapshot(spark, t)[0].schema
     for v in range(2, 101):  # manifest-only commits: same file list
-        mt._try_commit(t, v, files)
+        mt._try_commit(t, v, files, schema)
     t0 = time.perf_counter()
     h = mt.history(t)
     dt_history = time.perf_counter() - t0
@@ -829,7 +830,7 @@ def test_changes_between_type_changing_versions(spark, tmp_path):
         [(1, 10), (2, 21), (3, 30)], schema="k long, v long"
     )
     files, stats = mt._write_data_file(v2, t, None)
-    mt._try_commit(t, 2, files, stats_col=None, stats=stats)
+    mt._try_commit(t, 2, files, v2.schema, stats_col=None, stats=stats)
     cdf = mt.changes_between(spark, t, ["k"], 1, 2)
     rows = {r.k: (r.change_type, r.v) for r in cdf.collect()}
     assert rows[2] == ("update", 21)
@@ -1094,49 +1095,16 @@ def test_recorded_schema_matches_inferred_after_evolution(spark, tmp_path):
     assert snap.columns == ["k", "v", "o", "extra", "tag"]
 
 
-def test_manifest_without_schema_still_reads(spark, tmp_path):
-    """A manifest written before schemas were recorded (no ``schema`` key)
-    reads by inference, and the next commit on top of it records one —
-    also a conditional merge whose affected file predates a column."""
-
-    def legacy(t):
-        narrow = spark.createDataFrame(
-            [(1, 10), (2, 20)], schema="k long, v long"
-        )
-        wide = spark.createDataFrame(
-            [(3, 30, 3)], schema="k long, v long, extra long"
-        )
-        files = mt._write_data_file(narrow, t, None)[0]
-        files += mt._write_data_file(wide, t, None)[0]
-        os.makedirs(os.path.join(t, "_commits"))
-        with open(mt._commit_path(t, 1), "w") as f:
-            json.dump({"version": 1, "files": files}, f, indent=0)
-
-    t = str(tmp_path / "legacy")
-    legacy(t)
-    snap, v = mt.snapshot(spark, t)
-    assert v == 1
-    assert snap.columns == ["k", "v", "extra"]
-    assert sorted(snap.collect()) == [(1, 10, None), (2, 20, None), (3, 30, 3)]
-    upd = _updates(spark, [(1, 11, 1)]).withColumn(
-        "extra", F.lit(None).cast("long")
-    )
-    expected = {1: (11, None), 2: (20, None), 3: (30, 3)}
-    mt.merge(spark, t, upd, ["k"], "_ord")
-    with open(mt._commit_path(t, 2)) as f:
-        assert "schema" in json.load(f)
-    snap, _ = mt.snapshot(spark, t)
-    assert {r.k: (r.v, r.extra) for r in snap.collect()} == expected
-
-    # conditional: k=1 lives in the narrow file; v doubles as the ordering
-    # column (the table has no other), and 11 > 10 wins
-    t = str(tmp_path / "legacy_conditional")
-    legacy(t)
-    mt.merge(spark, t, upd, ["k"], "v", conditional=True)
-    with open(mt._commit_path(t, 2)) as f:
-        assert "schema" in json.load(f)
-    snap, _ = mt.snapshot(spark, t)
-    assert {r.k: (r.v, r.extra) for r in snap.collect()} == expected
+def test_manifest_without_schema_does_not_read(spark, tmp_path):
+    """``schema`` is a required manifest field: a manifest without it is
+    not read by inferring the files' footers."""
+    t = str(tmp_path / "schemaless")
+    files = mt._write_data_file(_updates(spark, [(1, 10, 1)]), t, None)[0]
+    os.makedirs(os.path.join(t, "_commits"))
+    with open(mt._commit_path(t, 1), "w") as f:
+        json.dump({"version": 1, "files": files}, f, indent=0)
+    with pytest.raises(KeyError, match="schema"):
+        mt.snapshot(spark, t)
 
 
 @pytest.mark.parametrize("conditional", [True, False])
@@ -1203,7 +1171,7 @@ def _committer_cases(spark, t):
             ),
             seed,
         ),
-        "restore_version": (lambda: mt.restore_version(spark, t, 1), seed),
+        "restore_version": (lambda: mt.restore_version(t, 1), seed),
     }
 
 
@@ -1291,7 +1259,7 @@ def test_every_committer_records_schema(spark, tmp_path):
     with pytest.raises(ValueError, match="nope"):
         mt.update_where(spark, t, F.col("k") == 5, {"nope": F.lit(1)})
     assert mt.current_version(t) == before
-    mt.restore_version(spark, t, 1)
+    mt.restore_version(t, 1)
     assert recorded(t) == ["k", "v"]
 
 

@@ -176,9 +176,9 @@ def test_seed_and_merges_cached_per_process(spark):
     table; different mods get distinct tables."""
     from gjenbruksstasjoner_kotid_estimering_spark.operators import merge_tx as mt
 
-    a = mt._seed_and_merges(spark, SF, "t1", mods=(7,))
-    b = mt._seed_and_merges(spark, SF, "t2", mods=(7,))
-    c = mt._seed_and_merges(spark, SF, "t3", mods=(7, 5))
+    a = mt._seed_and_merges(spark, SF, mods=(7,))
+    b = mt._seed_and_merges(spark, SF, mods=(7,))
+    c = mt._seed_and_merges(spark, SF, mods=(7, 5))
     assert a == b
     assert c != a
     # cached table is complete: version count matches 1 seed + len(mods)
