@@ -15,13 +15,16 @@ Mechanics reuse merge_tx's two proven primitives:
   INVISIBLE until referenced by a committed manifest (a crashed writer
   leaves only ignorable orphans — the age-gated GC reaps them);
 - the commit is one JSON (``_txn/t<version>.json``) holding every
-  member table's complete file list, published with the
+  member table's complete file list and schema (``{"files": [...],
+  "schema": <StructType JSON>}``, a member entry), published with the
   write-temp-then-os.link pattern: creation of the final name is the
   atomic, exclusive publication point, so two writers racing the same
   version get exactly one winner and a ``VersionConflict`` loser.
 
 Readers resolve a table by loading the LATEST committed transaction
-and reading that table's file list — a point-in-time snapshot of the
+and reading that table's files through its recorded schema, as
+merge_tx reads a manifest (no footer is opened, no job starts until
+the frame is used) — a point-in-time snapshot of the
 whole table GROUP, so cross-table reads are mutually consistent (the
 classic read-skew anomaly between separately-versioned tables cannot
 happen). Grounding: the reference writes its estimate AND its
@@ -41,7 +44,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..registry import register
 from ..scratch import detach_result, new_scratch_dir
-from .merge_tx import _latest_version, _publish, _write_data_file
+from .merge_tx import _latest_version, _publish, _read_files, _write_data_file
 
 _TXN = "_txn"
 
@@ -54,7 +57,8 @@ def txn_current_version(root: str) -> int:
     return _latest_version(os.path.join(root, _TXN), "t")
 
 
-def txn_read_commit(root: str, version: int) -> dict[str, list[str]]:
+def txn_read_commit(root: str, version: int) -> dict[str, dict]:
+    """Every member entry of commit ``version``, by table name."""
     if version == 0:
         return {}
     with open(_txn_path(root, version)) as f:
@@ -70,25 +74,28 @@ def txn_read_meta(root: str, version: int) -> dict:
         return json.load(f).get("meta", {})
 
 
-def txn_stage(df: DataFrame, root: str, table: str) -> list[str]:
+def txn_stage(df: DataFrame, root: str, table: str) -> dict:
     """Write ``df`` as immutable parquet files under the table's data
-    area WITHOUT publishing them. Returns the staged file paths for a
-    later :func:`txn_commit`. Until that commit, no reader can see
-    these files — which is the whole crash-atomicity story: a writer
-    dying after staging leaves the table group bit-identical."""
-    return _write_data_file(df, os.path.join(root, table))[0]
+    area WITHOUT publishing them. Returns the member entry (the staged
+    files and ``df``'s schema) for a later :func:`txn_commit`. Until that
+    commit, no reader can see these files — which is the whole
+    crash-atomicity story: a writer dying after staging leaves the table
+    group bit-identical."""
+    files = _write_data_file(df, os.path.join(root, table))[0]
+    return {"files": files, "schema": df.schema.jsonValue()}
 
 
 def txn_commit(
     root: str,
     version: int,
-    tables: dict[str, list[str]],
+    tables: dict[str, dict],
     meta: dict | None = None,
 ) -> None:
-    """Atomically publish ``tables`` (EVERY member table's complete
-    file list) as transaction ``version``. Raises VersionConflict if a
-    concurrent writer already committed that version — optimistic
-    concurrency, published as merge_tx publishes a manifest."""
+    """Atomically publish ``tables`` (EVERY member table's entry: its
+    complete file list and schema) as transaction ``version``. Raises
+    VersionConflict if a concurrent writer already committed that
+    version — optimistic concurrency, published as merge_tx publishes a
+    manifest."""
     body = {"version": version, "tables": tables}
     if meta is not None:
         body["meta"] = meta
@@ -102,10 +109,10 @@ def txn_snapshot(
     All member tables resolved through the SAME version are mutually
     consistent — the point of the shared log."""
     v = txn_current_version(root) if version is None else version
-    files = txn_read_commit(root, v).get(table, [])
-    if not files:
+    entry = txn_read_commit(root, v).get(table)
+    if entry is None or not entry["files"]:
         return None
-    return spark.read.option("mergeSchema", "true").parquet(*files)
+    return _read_files(spark, entry["files"], entry["schema"])
 
 
 TRANSFER_CENTS = 100

@@ -34,8 +34,10 @@ import shutil
 import tempfile
 import time
 import uuid
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 _ROOT_NAME = "spark_graft_scratch"
 
@@ -43,6 +45,17 @@ _ROOT_NAME = "spark_graft_scratch"
 # of grace keeps the GC from ever racing a live run while still reclaiming
 # crash leftovers within the same driver round.
 MAX_AGE_SECONDS = 1800.0
+
+
+def user_cache_dir() -> str:
+    """The per-user cache of built artifacts (the jpeg shim's ``.so``, the
+    driver JVM's class-data archive): ``$XDG_CACHE_HOME`` or ``~/.cache``,
+    then the package's name. Unlike :func:`scratch_root` it is not under
+    the temp dir, which a run may point at a directory it deletes."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "gjenbruksstasjoner_kotid_estimering_spark")
 
 
 def scratch_root() -> str:

@@ -45,6 +45,8 @@ import tempfile
 
 import numpy as np
 
+from ..scratch import user_cache_dir
+
 # ---------------------------------------------------------------- tables
 
 ZIGZAG = np.array(
@@ -146,13 +148,6 @@ _SHIM_CLASSES = {1: "truncated", 2: "not a JPEG", 3: "corrupt"}
 _MSG_LEN = 200  # libjpeg's JMSG_LENGTH_MAX
 
 
-def _cache_dir() -> str:
-    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-        os.path.expanduser("~"), ".cache"
-    )
-    return os.path.join(base, "gjenbruksstasjoner_kotid_estimering_spark")
-
-
 def _build_shim(cache_dir: str) -> str:
     """Path of the compiled shim in ``cache_dir``, compiling it first when
     absent. The file is named by the sha256 of the C source and written
@@ -194,7 +189,7 @@ def _build_shim(cache_dir: str) -> str:
 def _shim() -> ctypes.CDLL:
     """The libjpeg shim, built on first use and loaded once per process.
     ctypes releases the GIL for the length of each call."""
-    lib = ctypes.CDLL(_build_shim(_cache_dir()))
+    lib = ctypes.CDLL(_build_shim(user_cache_dir()))
     lib.jshim_decode.argtypes = [
         ctypes.c_char_p, ctypes.c_ulong, ctypes.c_void_p, ctypes.c_ulong,
         ctypes.POINTER(ctypes.c_int), ctypes.c_char_p,

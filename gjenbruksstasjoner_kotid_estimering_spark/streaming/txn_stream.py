@@ -62,8 +62,7 @@ def txn_batch_writer(root: str):
             .groupBy("user_id")
             .agg(F.sum("cents").alias("cents"))
         )
-        audit_files = txn_read_commit(root, v).get("audit", [])
-        audit_files = audit_files + txn_stage(
+        audit = txn_stage(
             delta.select(
                 "user_id",
                 "cents",
@@ -72,12 +71,15 @@ def txn_batch_writer(root: str):
             root,
             "audit",
         )
+        prev = txn_read_commit(root, v).get("audit")
+        if prev is not None:
+            audit["files"] = prev["files"] + audit["files"]
         txn_commit(
             root,
             v + 1,
             {
                 "balances": txn_stage(new_bal, root, "balances"),
-                "audit": audit_files,
+                "audit": audit,
             },
             meta={"batch_ids": sorted(applied | {batch_id})},
         )

@@ -20,6 +20,7 @@ import sys
 import numpy as np
 import pytest
 
+from gjenbruksstasjoner_kotid_estimering_spark.scratch import user_cache_dir
 from gjenbruksstasjoner_kotid_estimering_spark.sources import jpeg
 
 FIXTURE = "/root/reference/test/data/station_id_41_20200506T094000.jpg"
@@ -422,7 +423,7 @@ def test_shim_built_once_by_concurrent_processes(tmp_path, monkeypatch):
     assert outs == [want] * 4
     with open(jpeg._SHIM_C, "rb") as f:
         name = hashlib.sha256(f.read()).hexdigest() + ".so"
-    assert os.listdir(jpeg._cache_dir()) == [name]
+    assert os.listdir(user_cache_dir()) == [name]
 
 
 def test_shim_build_names_what_is_missing(tmp_path, monkeypatch):

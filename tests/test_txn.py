@@ -69,6 +69,20 @@ def test_commit_flips_all_tables_together(spark, root):
     assert txn.txn_snapshot(spark, root, "b", version=1) is None
 
 
+def test_snapshot_starts_no_job(spark, root):
+    """A read plans from the schema the commit records: building the
+    frame opens no footer, so it starts no Spark job."""
+    from conftest import jobs_started
+
+    _seed(spark, root)
+    out = []
+    assert jobs_started(
+        spark, "txn-snapshot", lambda: out.append(txn.txn_snapshot(spark, root, "a"))
+    ) == 0
+    assert out[0].columns == ["k", "cents"]
+    assert sorted(r.k for r in out[0].collect()) == list(range(10))
+
+
 def test_same_version_has_exactly_one_winner(spark, root):
     base = _seed(spark, root)
     files = txn.txn_stage(base, root, "a")
